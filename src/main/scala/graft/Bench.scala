@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR at local[N], prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR in the [[graft.engine.GraftSession]] session,
+  * prints ONE JSON line.
   *
   * Each query is forced through the `noop` datasource write — unlike
   * `.count()`, which lets Catalyst prune every column and skip the actual
@@ -13,26 +12,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate("graft-bench")
     // size the shuffle width to the corpus (inert at the test SFs, where
     // the derived width equals the core-count default; the lever a x100
     // corpus needs without an operator knowing to set it)
     graft.engine.Partitioning.autoTune(spark, sfDir)
     // JIT + shuffle-machinery warmup so per-query numbers measure the
-    // queries, not first-use costs. Function registration is hoisted out
-    // of the first dedup_* rep for the same reason.
-    graft.functions.GraftFunctions.register(spark)
+    // queries, not first-use costs (the engine's functions are already
+    // bound: the session's GraftExtensions inject them)
     SparkEntry.queries.get("q1_agg").foreach { fn =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: the registry-wide PLAN-SHAPE inventory — for every
   * declared query, the physical-plan facts a scale review asks first:
   * how many scans, how many exchanges (and of what kind), which join
@@ -21,19 +19,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = if (args.length > 1) args(1) else "PLAN_AUDIT.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off for the audit: with it on, the un-executed plan is an
-      // AdaptiveSparkPlan whose codegen wrapping hasn't been applied
-      // yet, so span counts would read as zero everywhere
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    // AQE off for the audit: with it on, the un-executed plan is an
+    // AdaptiveSparkPlan whose codegen wrapping hasn't been applied
+    // yet, so span counts would read as zero everywhere
+    val spark = graft.engine.GraftSession.getOrCreate("graft-plan-audit",
+      Map("spark.sql.adaptive.enabled" -> "false"))
     def count(p: String, needle: String): Int =
       needle.r.findAllIn(p).size
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

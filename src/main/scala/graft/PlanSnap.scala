@@ -18,7 +18,6 @@ object PlanSnap {
       else SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.engine.GraftSession.getOrCreate("graft-plan-snap")
     graft.engine.Partitioning.autoTune(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-curve measurement harness (SCALING.md): times the most
   * expensive operator families at two corpus scales — the driver's sf0.1
   * and the ×10 corpus [[ScaleCorpus]] builds — and records wall-time
@@ -45,30 +43,10 @@ object ScaleBench {
     val small = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val big = args.lift(1).getOrElse("/tmp/graft_scale10")
     val scale = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle partitions are THE partition-fits-in-memory lever: the
-    // sf0.1 default (= cores) under-partitions a ×100 corpus on a
-    // fixed-heap single JVM. Since r14 the ENGINE derives the width
-    // from input bytes (graft.engine.Partitioning.autoTune, applied per
-    // dir before each run below) — SPARK_GRAFT_SHUFFLE remains as an
-    // explicit operator override that disables the auto-derivation.
-    val shuffleOverride = sys.env.get("SPARK_GRAFT_SHUFFLE")
-    val shuffle = shuffleOverride.getOrElse(cpus)
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(2)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.engine.GraftSession.getOrCreate("graft-scale-bench")
     // SPARK_GRAFT_ONLY may name ANY registry query, not just the
     // default family list — the broad-sweep mode that hunts for scale
     // defects outside the known-expensive set
@@ -85,10 +63,9 @@ object ScaleBench {
     // excluded from ratio computation, not just printed to stderr.
     def run(name: String, dir: String): Option[Double] = {
       // size the shuffle width to THIS corpus (memoized lookup + two
-      // conf sets — negligible against any timed query); an explicit
-      // SPARK_GRAFT_SHUFFLE pins the width instead
-      if (shuffleOverride.isEmpty)
-        graft.engine.Partitioning.autoTune(spark, dir)
+      // conf sets — negligible against any timed query): the engine
+      // derives the width a ×100 corpus needs from its input bytes
+      graft.engine.Partitioning.autoTune(spark, dir)
       val t0 = System.nanoTime()
       val ok =
         try {

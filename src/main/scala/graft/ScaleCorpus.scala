@@ -57,14 +57,7 @@ object ScaleCorpus {
       case a if a.startsWith("zipf") =>
         if (a == "zipf") 1.1 else a.stripPrefix("zipf").toDouble
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate("graft-scale-corpus")
     build(spark, src, dst, gens, zipfS)
     spark.stop()
   }

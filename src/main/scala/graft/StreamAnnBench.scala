@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ann
@@ -42,16 +41,8 @@ object StreamAnnBench {
     require(partitioned || !withCompact,
       "'flat compact' would mislabel the post-rebuild batches: " +
         "AnnStream.compact always writes a cell-partitioned seed")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.getOrCreate("graft-stream-ann-bench")
     graft.engine.Partitioning.autoTune(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
 
     val root = java.nio.file.Files
       .createTempDirectory("sab").resolve("store").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -38,14 +37,8 @@ object StreamDedupBench {
     // nBatches MORE — timing the fold itself and the post-compaction
     // per-batch cost (it should match the fresh-seed steady state)
     val withCompact = args.contains("compact")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      graft.engine.GraftSession.getOrCreate("graft-stream-dedup-bench")
     graft.engine.Partitioning.autoTune(spark, dir)
 
     val root = java.nio.file.Files

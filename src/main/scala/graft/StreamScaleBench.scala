@@ -31,21 +31,15 @@ object StreamScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_scale100")
     val slices = args.lift(1).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production state backend: state lives off-heap in RocksDB
-      // with changelog checkpointing, not in executor heap maps
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the production state backend: state lives off-heap in RocksDB
+    // with changelog checkpointing, not in executor heap maps
+    val spark = graft.engine.GraftSession.getOrCreate(
+      "graft-stream-scale-bench", Map(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider"),
+        ("spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled") -> "true"))
 
     val stage = stageTimeOrdered(spark, dir, slices)
     val total = spark.read.parquet(stage).count()

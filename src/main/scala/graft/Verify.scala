@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,14 +7,11 @@ object Verify {
     val Array(sfDir, outDir) = args
     // fitted-literal oracle generators must reject fits from other dirs
     SparkEntry.oracleDumpDir.set(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's configuration: the engine's session factory, with the
+    // shuffle width tuned to this corpus — so the gate checks the plans
+    // the bench times
+    val spark = graft.engine.GraftSession.getOrCreate("graft-verify")
+    graft.engine.Partitioning.autoTune(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // diagnostics: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (local
     // iteration; the driver always runs the full set)

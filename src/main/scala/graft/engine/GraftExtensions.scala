@@ -2,9 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BpeEncode, BpeOps, Md5Prefix60, RabinFingerprint,
-  RabinWinnow, VecCosine, VecDot, VecL2sq, WordShingles}
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point — the engine's functions become
   * available to ANY session configured with
@@ -12,28 +10,15 @@ import graft.functions.{BpeEncode, BpeOps, Md5Prefix60, RabinFingerprint,
   * `.withExtensions(new GraftExtensions)`), the standard injection
   * mechanism for operator/function extensions (SURVEY.md §2.2: the
   * reference's extensibility point is a Rust trait registry; ours is
-  * this). The function set here MUST stay in lockstep with
-  * `GraftFunctions.register` — both seams expose the same surface.
+  * this). The functions come from `GraftFunctions.Table`, the table
+  * `GraftFunctions.register` also reads, so both seams expose the same
+  * surface.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_],
-               build: Seq[Expression] => Expression): Unit =
-      e.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), build))
-
-    inject("rabin_fingerprint", classOf[RabinFingerprint],
-      es => RabinFingerprint(es.head, 8))
-    inject("rabin_winnow", classOf[RabinWinnow],
-      es => RabinWinnow(es.head, 8, 16))
-    inject("word_shingles", classOf[WordShingles],
-      es => WordShingles(es.head, graft.functions.GraftFunctions.shingleN(es)))
-    inject("bpe_encode", classOf[BpeEncode],
-      es => BpeEncode(es.head, BpeOps.vocabFromArgs(es)))
-    inject("md5_prefix60", classOf[Md5Prefix60], es => Md5Prefix60(es.head))
-    inject("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1)))
-    inject("vec_cosine", classOf[VecCosine], es => VecCosine(es(0), es(1)))
-    inject("vec_l2sq", classOf[VecL2sq], es => VecL2sq(es(0), es(1)))
+    GraftFunctions.Table.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.build))
+    }
     // custom physical operator (LogicalPlan -> Strategy -> SparkPlan):
     // sessions without extensions get it lazily via
     // TopKPlans.ensureStrategy

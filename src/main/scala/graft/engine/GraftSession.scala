@@ -2,7 +2,11 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** Session factory with the engine's scale-oriented defaults — the one
+  * place a session is configured. Every main builds through it (the
+  * smoke replica `graft.SmokeCheck` excepted: it reproduces a
+  * bare, extension-less session on purpose), so the correctness gate,
+  * the bench and the serving path run one configuration.
   *
   * The reference hand-builds its execution substrate (exchanges, heartbeats,
   * compute claiming — exchange_operator.rs, operator_handler_state.rs); on
@@ -18,7 +22,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local worker threads: `SPARK_GRAFT_CPUS` when set (a deployment
+    * setting), else the cores this JVM can actually use.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
@@ -34,8 +42,14 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
+  /** The factory session, with `overrides` applied on top of the
+    * defaults (a main's real deviations, e.g. AQE off for a plan audit).
+    */
+  def getOrCreate(appName: String = "graft",
+                  overrides: Map[String, String] = Map.empty): SparkSession = {
+    val s = overrides.foldLeft(builder(appName)) { case (b, (k, v)) =>
+      b.config(k, v)
+    }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -8,11 +8,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Why it exists: the session default (= local core count) is right for
   * the test SFs but under-partitions a ×100 corpus on a fixed-heap
-  * JVM — the r13 scale sweep needed a manual `SPARK_GRAFT_SHUFFLE=256`
-  * override to keep the containment join's partitions inside executor
-  * memory. The operator should not have to know that number: total
-  * input bytes are one Hadoop FS call away (the Bucketing.bucketCountFor
-  * device), and the right width follows from them.
+  * JVM — the r13 scale sweep needed a hand-set width of 256 to keep
+  * the containment join's partitions inside executor memory. The
+  * operator should not have to know that number: total input bytes are
+  * one Hadoop FS call away (the Bucketing.bucketCountFor device), and
+  * the right width follows from them.
   *
   * The derivation targets [[TargetBytesPerPartition]] of INPUT per
   * shuffle partition — deliberately small (4 MiB) because the heavy

@@ -2,9 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType,
+  LongType, ShortType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling-hash document fingerprinting as native Catalyst expressions.
@@ -295,8 +298,11 @@ object GraftFunctions {
         messageParameters = Map("errorMessage" ->
           (s"$fn requires a literal integer as its second argument, " +
             s"got non-foldable expression ${arg.sql}")))
+    // integral types only, in Int range: a 2.9 must not run as n=2
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType)
+      .contains(arg.dataType)
     arg.eval() match {
-      case n: Number => n.intValue()
+      case n: Number if integral && n.longValue == n.intValue => n.intValue
       case other =>
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
@@ -306,46 +312,65 @@ object GraftFunctions {
     }
   }
 
+  /** The engine's SQL function surface — the ONE table both
+    * registration seams read: [[graft.engine.GraftExtensions]] injects it
+    * when a session is built, [[register]] binds it into a live one. An
+    * extensions-only session and a registered session therefore resolve
+    * the same names.
+    */
+  val Table: Seq[FunctionDef] = Seq(
+    FunctionDef("rabin_fingerprint", classOf[RabinFingerprint],
+      es => RabinFingerprint(es.head, 8)),
+    FunctionDef("rabin_winnow", classOf[RabinWinnow],
+      es => RabinWinnow(es.head, 8, 16)),
+    FunctionDef("md5_winnow_set", classOf[Md5WinnowSet],
+      es => Md5WinnowSet(es.head,
+        TextFunctions.WinnowK, TextFunctions.WinnowW)),
+    FunctionDef("md5_winnow_count", classOf[Md5WinnowCount],
+      es => Md5WinnowCount(es.head,
+        TextFunctions.WinnowK, TextFunctions.WinnowW)),
+    FunctionDef("md5_gram_min", classOf[Md5GramMin],
+      es => Md5GramMin(es.head, TextFunctions.WinnowK)),
+    FunctionDef("word_shingles", classOf[WordShingles],
+      es => WordShingles(es.head, shingleN(es))),
+    FunctionDef("bpe_encode", classOf[BpeEncode],
+      es => BpeEncode(es.head, BpeOps.vocabFromArgs(es))),
+    FunctionDef("md5_prefix60", classOf[Md5Prefix60],
+      es => Md5Prefix60(es.head)),
+    FunctionDef("word_ngrams", classOf[WordNgrams],
+      es => WordNgrams(es.head, literalIntArg("word_ngrams", es))),
+    FunctionDef("gram_rungs", classOf[GramRungs],
+      es => GramRungs(es.head, literalIntArg("gram_rungs", es))),
+    FunctionDef("gram_top_frac", classOf[GramTopFrac],
+      es => GramTopFrac(es.head, literalIntArg("gram_top_frac", es))),
+    FunctionDef("gram_dup_frac", classOf[GramDupFrac],
+      es => GramDupFrac(es.head, literalIntArg("gram_dup_frac", es))),
+    FunctionDef("cdc_chunk_texts", classOf[CdcChunkTexts],
+      es => CdcChunkTexts(es.head, literalIntArg("cdc_chunk_texts", es))),
+    FunctionDef("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))),
+    FunctionDef("vec_cosine", classOf[VecCosine],
+      es => VecCosine(es(0), es(1))),
+    FunctionDef("vec_l2sq", classOf[VecL2sq], es => VecL2sq(es(0), es(1))))
+
+  /** Bind [[Table]] into the session's function registry, skipping every
+    * name the session already binds (a GraftExtensions session, or an
+    * earlier call). Operators call this on each build, and re-binding a
+    * name would log one "replaced a previously registered function"
+    * warning per function per call.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("rabin_fingerprint",
-      es => RabinFingerprint(es.head, 8), "built-in")
-    reg.createOrReplaceTempFunction("rabin_winnow",
-      es => RabinWinnow(es.head, 8, 16), "built-in")
-    reg.createOrReplaceTempFunction("md5_winnow_set",
-      es => Md5WinnowSet(es.head,
-        TextFunctions.WinnowK, TextFunctions.WinnowW), "built-in")
-    reg.createOrReplaceTempFunction("md5_winnow_count",
-      es => Md5WinnowCount(es.head,
-        TextFunctions.WinnowK, TextFunctions.WinnowW), "built-in")
-    reg.createOrReplaceTempFunction("md5_gram_min",
-      es => Md5GramMin(es.head, TextFunctions.WinnowK), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      es => WordShingles(es.head, shingleN(es)), "built-in")
-    reg.createOrReplaceTempFunction("bpe_encode",
-      es => BpeEncode(es.head, BpeOps.vocabFromArgs(es)), "built-in")
-    reg.createOrReplaceTempFunction("md5_prefix60",
-      es => Md5Prefix60(es.head), "built-in")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      es => WordNgrams(es.head, literalIntArg("word_ngrams", es)),
-      "built-in")
-    reg.createOrReplaceTempFunction("gram_rungs",
-      es => GramRungs(es.head, literalIntArg("gram_rungs", es)),
-      "built-in")
-    reg.createOrReplaceTempFunction("gram_top_frac",
-      es => GramTopFrac(es.head, literalIntArg("gram_top_frac", es)),
-      "built-in")
-    reg.createOrReplaceTempFunction("gram_dup_frac",
-      es => GramDupFrac(es.head, literalIntArg("gram_dup_frac", es)),
-      "built-in")
-    reg.createOrReplaceTempFunction("cdc_chunk_texts",
-      es => CdcChunkTexts(es.head, literalIntArg("cdc_chunk_texts", es)),
-      "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      es => VecDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      es => VecCosine(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_l2sq",
-      es => VecL2sq(es(0), es(1)), "built-in")
+    Table.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, f.info, f.build)
+    }
   }
+}
+
+/** One SQL function of the engine: its name, the expression class it
+  * builds (for DESCRIBE FUNCTION) and the builder over its arguments.
+  */
+final case class FunctionDef(name: String, clazz: Class[_ <: Expression],
+                             build: Seq[Expression] => Expression) {
+  def info: ExpressionInfo = new ExpressionInfo(clazz.getName, name)
 }

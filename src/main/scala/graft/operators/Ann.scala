@@ -94,7 +94,7 @@ object Ann {
 
   /** Default IVF operating point — calibrated on the synthetic
     * embeddings to clear [[IvfRecallMin]] at every SF (see the measured
-    * table at [[LshRecallMin]] and RecallProbe).
+    * table at [[LshRecallMin]]).
     */
   val IvfCentroids = 16
   val IvfProbe = 8
@@ -910,7 +910,7 @@ object Ann {
     * candidate pairs, never of the corpus. Recall/scan tradeoff is
     * (nBits, nTables, probeBits); defaults are calibrated on the
     * synthetic embeddings to clear [[LshRecallMin]] at every SF (see
-    * RecallProbe and the measured table at [[LshRecallMin]]).
+    * the measured table at [[LshRecallMin]]).
     */
   def annLsh(s: SparkSession, dir: String, nBits: Int = LshBits,
              nTables: Int = LshTables,
@@ -960,7 +960,8 @@ object Ann {
     * hash-checked query; PipelineSpec asserts the numeric values).
     *
     * Calibrated against MEASURED recall on the synthetic embeddings
-    * (graft.RecallProbe, sf0.001/0.01/0.1):
+    * (each path's pairs against [[annBruteforce]]'s exact top-K, at
+    * sf0.001/0.01/0.1):
     *   lsh nBits=6 nTables=3 probeBits=2: 0.88 / 0.91 / 0.96
     *   ivf nCentroids=16 nProbe=8:        0.85 / 0.89 / 0.88
     * Scan-fraction honesty: these vectors are weakly-clustered/

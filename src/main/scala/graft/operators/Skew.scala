@@ -820,7 +820,10 @@ object Skew {
     val stamped = projected
       .withColumn("pid",
         boundSearchTree(fields, bounds, 0, bounds.length).cast("int"))
-      .withColumn("_ovw", col("_ov") + w)
+      // the frame's far edge, saturated: within w of Long.MaxValue a
+      // wrapped add would search a negative value and ship no ghosts
+      .withColumn("_ovw", when(col("_ov") > lit(Long.MaxValue - w),
+        lit(Long.MaxValue)).otherwise(col("_ov") + w))
       .withColumn("_hi",
         boundSearchTree(Seq(("_k", false), ("_ovw", false)),
           bounds, 0, bounds.length).cast("int"))

@@ -239,6 +239,14 @@ class RankingSpec extends AnyFunSuite {
       }
       assert(fullMsg(e2).contains(fn), fullMsg(e2))
       assert(fullMsg(e2).toLowerCase.contains("literal"), fullMsg(e2))
+      // a non-integral literal is refused, not truncated to n=2
+      for (n <- Seq("2.9D", "2.9")) {
+        val e3 = intercept[Exception] {
+          df.selectExpr(s"$fn(toks, $n)").collect()
+        }
+        assert(fullMsg(e3).contains(fn), fullMsg(e3))
+        assert(fullMsg(e3).contains("literal integer"), fullMsg(e3))
+      }
     }
   }
 

@@ -1,0 +1,77 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** One session configuration and one function table: the engine's SQL
+  * functions resolve the same whichever seam installed them, and every
+  * main builds its session through `graft.engine.GraftSession`.
+  */
+class SessionSpec extends AnyFunSuite {
+  lazy val spark = TestSession.spark
+
+  val EngineFunctions = Seq(
+    "rabin_fingerprint", "rabin_winnow", "md5_winnow_set",
+    "md5_winnow_count", "md5_gram_min", "word_shingles", "bpe_encode",
+    "md5_prefix60", "word_ngrams", "gram_rungs", "gram_top_frac",
+    "gram_dup_frac", "cdc_chunk_texts", "vec_dot", "vec_cosine", "vec_l2sq")
+
+  test("an extensions-only session resolves every engine function") {
+    // a new session gets a fresh registry built from the extensions
+    // alone: nothing has called GraftFunctions.register on it
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val missing = EngineFunctions.filterNot(n =>
+      reg.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not injected: $missing")
+    val r = s.sql("SELECT word_ngrams(array('a','b','c'), 2) AS g, " +
+      "gram_dup_frac(array('a','b','a','b'), 2) AS d").collect()(0)
+    assert(r.getSeq[String](0) === Seq("a b", "b c"))
+    assert(r.getDouble(1) > 0.0)
+  }
+
+  test("GraftFunctions.register binds the table once: a second call " +
+       "leaves the registry unchanged") {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    def snapshot = EngineFunctions.map { n =>
+      val id = FunctionIdentifier(n)
+      (reg.lookupFunction(id), reg.lookupFunctionBuilder(id))
+    }
+    graft.functions.GraftFunctions.register(s)
+    val first = snapshot
+    assert(first.forall { case (info, build) =>
+      info.isDefined && build.isDefined })
+    graft.functions.GraftFunctions.register(s)
+    val second = snapshot
+    first.zip(second).zip(EngineFunctions).foreach {
+      case (((i1, b1), (i2, b2)), n) =>
+        assert(i1.get eq i2.get, s"$n re-bound")
+        assert(b1.get eq b2.get, s"$n re-bound")
+    }
+    assert(graft.functions.GraftFunctions.Table.map(_.name).sorted ===
+      EngineFunctions.sorted)
+  }
+
+  test("only GraftSession and SmokeCheck call SparkSession.builder() " +
+       "in src/main") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val allowed = Set(
+      root.resolve("graft/engine/GraftSession.scala"),
+      root.resolve("graft/SmokeCheck.scala"))
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    val offenders = files.filterNot(allowed).filter { p: Path =>
+      new String(Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder()")
+    }
+    assert(offenders.isEmpty,
+      s"build sessions through graft.engine.GraftSession: $offenders")
+    assert(allowed.forall(files.contains))
+  }
+}

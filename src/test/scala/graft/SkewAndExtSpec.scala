@@ -361,6 +361,31 @@ class SkewAndExtSpec extends AnyFunSuite {
     assert(plainWide.exceptAll(wide).count() === 0L)
   }
 
+  test("range class at ordering values within w of Long.MaxValue: the " +
+       "chunked sweep equals windowRangePlain (the frame's far edge " +
+       "saturates instead of wrapping, so ghosts still ship)") {
+    import graft.operators.WindowSpec
+    import spark.implicits._
+    // 3 keys x 200 rows at the top of the BIGINT range; w = 1000 spans
+    // each key's whole history, so every row's far edge lies past
+    // Long.MaxValue and every chunk boundary inside a key must be
+    // crossed by ghosts
+    val df = (0 until 600).map { i =>
+      (i / 200L, Long.MaxValue - 599L + i, (i % 7).toLong)
+    }.toDF("k", "o", "v").repartition(5)
+    val spec = WindowSpec(key = "k", ord = Seq("o"), value = "v",
+      rangeOrd = "o", out = Seq("k", "o", "v"),
+      rangeOut = Seq("k", "o", "v"))
+    val w = 1000L
+    val chunked = Skew.windowRangeSkewOn(spark, df, w, spec)
+    val plain = Skew.windowRangePlain(df, w, spec)
+    assert(chunked.count() === plain.count())
+    assert(chunked.exceptAll(plain).count() === 0L)
+    assert(plain.exceptAll(chunked).count() === 0L)
+    // non-vacuity: each key's last row sees the key's full history
+    assert(plain.filter(col("rng_n") === 200L).count() === 3L)
+  }
+
   test("window_running_skew equals the plain running-frame window, " +
        "multiset for multiset") {
     import org.apache.spark.sql.expressions.Window
