@@ -207,11 +207,17 @@ final class CursorPager(spark: SparkSession, rs: ResultSet,
 
   /** Result schema, from the first file's footer (all rec_N files of a
     * result share it by construction); a zero-file result set pages as
-    * an empty zero-field schema rather than failing.
+    * an empty zero-field schema rather than failing. The Spark schema
+    * the materializer already read from that footer is used as
+    * `spark.read` would return it (all fields nullable), so paging
+    * starts no Spark job; only a file without it (not written by Spark)
+    * pays `spark.read`'s inference job.
     */
   lazy val schema: org.apache.spark.sql.types.StructType =
     if (rs.files.isEmpty) new org.apache.spark.sql.types.StructType()
-    else spark.read.parquet(rs.files(0).path).schema
+    else rs.files(0).sparkSchema
+      .flatMap(org.apache.spark.sql.graftbridge.FooterSchema.parse)
+      .getOrElse(spark.read.parquet(rs.files(0).path).schema)
 
   // Arrow page encoder (Row→InternalRow serializer + Arrow schema):
   // resolved and compiled ONCE per pager (the schema is fixed), not per

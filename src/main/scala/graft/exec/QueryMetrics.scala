@@ -2,7 +2,8 @@ package graft.exec
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 
 /** Per-query execution COST introspection for the serving posture — the
   * operational answer to "what did that query read/shuffle/emit" that a
@@ -72,21 +73,11 @@ object QueryMetrics {
 
   private def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
     // AQE hides executed stages behind adaptive nodes; walk through to
-    // the real operators (leaf query stages re-expose their subtrees)
+    // the real operators (a query stage is a leaf whose `plan` holds
+    // the stage's subtree)
     case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
-    case other =>
-      val viaStage = other.getClass.getSimpleName match {
-        case "ShuffleQueryStageExec" | "BroadcastQueryStageExec"
-            | "ResultQueryStageExec" | "TableCacheQueryStageExec" =>
-          // QueryStageExec is private[spark]; its `plan` is exposed as
-          // the node's single child at toString level but not in
-          // `children` — reflectively read the plan member instead
-          try Seq(other.getClass.getMethod("plan").invoke(other)
-            .asInstanceOf[SparkPlan])
-          catch { case _: ReflectiveOperationException => Seq.empty }
-        case _ => Seq.empty
-      }
-      Seq(other) ++ (other.children ++ viaStage).flatMap(collectPlans)
+    case s: QueryStageExec => s +: collectPlans(s.plan)
+    case other => other +: other.children.flatMap(collectPlans)
   }
 
   /** Summarize one finished execution from its plan's metric values. */

@@ -28,9 +28,11 @@ object ResultMaterializer {
 
   /** One materialized result file + its per-row-group row counts (from the
     * parquet footer, the same metadata the reference's QueryDataHandler
-    * reads).
+    * reads) and the Spark schema JSON Spark's writer stores in that footer
+    * (None for files written without it).
     */
-  final case class ResultFile(path: String, rowGroupRows: Vector[Long]) {
+  final case class ResultFile(path: String, rowGroupRows: Vector[Long],
+                              sparkSchema: Option[String] = None) {
     def rows: Long = rowGroupRows.sum
   }
 
@@ -310,13 +312,22 @@ object ResultMaterializer {
     ResultSet(dir, files.map(readFooter))
   }
 
+  /** Footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  // one conf for every footer read: a fresh Configuration re-parses the
+  // default resources, which cost more than the footer read itself
+  private lazy val footerConf = new Configuration()
+
   private def readFooter(p: Path): ResultFile = {
-    val in = HadoopInputFile.fromPath(new HPath(p.toString), new Configuration())
+    val in = HadoopInputFile.fromPath(new HPath(p.toString), footerConf)
     val reader = ParquetFileReader.open(in)
     try {
-      val groups = reader.getFooter.getBlocks.asScala
+      val footer = reader.getFooter
+      val groups = footer.getBlocks.asScala
         .map(_.getRowCount.toLong).toVector
-      ResultFile(p.toString, groups)
+      ResultFile(p.toString, groups, Option(
+        footer.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
     } finally reader.close()
   }
 }

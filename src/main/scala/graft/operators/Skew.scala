@@ -919,7 +919,10 @@ object Skew {
             gCnt += 1L
             cur = if (rows.hasNext) rows.next() else null
           }
-          while (!win.isEmpty && win.peekFirst()._1 < v - w) {
+          // the frame's near edge, saturated: within w of
+          // Long.MinValue a wrapped v - w would evict every group
+          val lo = if (v < Long.MinValue + w) Long.MinValue else v - w
+          while (!win.isEmpty && win.peekFirst()._1 < lo) {
             val h = win.pollFirst(); wSum -= h._2; wCnt -= h._3
           }
           win.addLast((v, gSum, gCnt)); wSum += gSum; wCnt += gCnt

@@ -386,6 +386,37 @@ class SkewAndExtSpec extends AnyFunSuite {
     assert(plain.filter(col("rng_n") === 200L).count() === 3L)
   }
 
+  test("range class at ordering values within w of Long.MinValue: the " +
+       "chunked sweep equals a brute-force BigInt reference (the frame's " +
+       "near edge saturates instead of wrapping)") {
+    import graft.operators.WindowSpec
+    import spark.implicits._
+    // 3 keys x 200 rows at the bottom of the BIGINT range; every row's
+    // near edge o - w lies below Long.MinValue, so a wrapped subtract
+    // would evict each key's whole history
+    val rows = (0 until 600).map { i =>
+      (i / 200L, Long.MinValue + i, (i % 7).toLong)
+    }
+    val df = rows.toDF("k", "o", "v").repartition(5)
+    val spec = WindowSpec(key = "k", ord = Seq("o"), value = "v",
+      rangeOrd = "o", out = Seq("k", "o", "v"),
+      rangeOut = Seq("k", "o", "v"))
+    val w = 1000L
+    // RANGE BETWEEN w PRECEDING AND CURRENT ROW, in exact arithmetic
+    val expected = rows.map { case (k, o, v) =>
+      val frame = rows.filter { case (k2, o2, _) =>
+        k2 == k && BigInt(o2) >= BigInt(o) - w && o2 <= o
+      }
+      (k, o, v, frame.map(_._3).sum, frame.length.toLong)
+    }.sorted
+    val got = Skew.windowRangeSkewOn(spark, df, w, spec).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSeq.sorted
+    assert(got === expected)
+    // non-vacuity: each key's last row sees the key's full history
+    assert(expected.count(_._5 == 200L) === 3)
+  }
+
   test("window_running_skew equals the plain running-frame window, " +
        "multiset for multiset") {
     import org.apache.spark.sql.expressions.Window
