@@ -31,15 +31,14 @@ object QueryMetrics {
 
   /** One auto-window dispatch decision — the audit trail for an
     * operator that silently picks physical plans: which branch fired
-    * (`chunked`), the profiled signals it acted on, and the POSTURE
-    * that supplied them (`pinned` session conf, `artifact` sidecar,
-    * `sampled` estimate, `exact` scan). At 100 TB "why did this query
-    * chunk" must be answerable after the fact; `hotRows`/`totalRows`
-    * are -1 when the posture doesn't carry them (a share-only pin).
+    * (`chunked`) and the profiled signals it acted on (the hot key's
+    * `share`, its `hotRows` and the frame's `totalRows`, all read from
+    * the data being dispatched). At 100 TB "why did this query chunk"
+    * must be answerable after the fact.
     */
-  final case class WindowDispatch(key: String, posture: String,
-                                  share: Double, hotRows: Long,
-                                  totalRows: Long, chunked: Boolean)
+  final case class WindowDispatch(key: String, share: Double,
+                                  hotRows: Long, totalRows: Long,
+                                  chunked: Boolean)
 
   private val MaxDispatches = 256
   private val dispatches =
@@ -69,7 +68,11 @@ object QueryMetrics {
     b.result()
   }
 
-  def clearDispatches(): Unit = dispatches.clear()
+  /** Forget every recorded decision. Each removal decrements the ring
+    * counter, so the bound stays exact for the records that follow.
+    */
+  def clearDispatches(): Unit =
+    while (dispatches.pollFirst() != null) dispatchCount.decrementAndGet()
 
   private def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
     // AQE hides executed stages behind adaptive nodes; walk through to

@@ -393,6 +393,20 @@ object Skew {
     else stamped
   }
 
+  /** Broadcast-join the chunked classes' per-(chunk, key) `stats` back
+    * onto their `rows` on `cols`, NULL-SAFELY: a null key is a window
+    * partition of its own, and a USING equi-join would drop its rows
+    * (or, left-joined, strip its stats). The join columns appear once.
+    */
+  private def joinStats(rows: DataFrame, stats: DataFrame,
+      cols: Seq[String], how: String = "inner"): DataFrame = {
+    val side = stats.select(stats.columns.toSeq.map(c =>
+      if (cols.contains(c)) col(c).as(s"_js_$c") else col(c)): _*)
+    rows.join(broadcast(side),
+      cols.map(c => col(c) <=> col(s"_js_$c")).reduce(_ && _), how)
+      .drop(cols.map(c => s"_js_$c"): _*)
+  }
+
   /** Skew-resilient lag/lead/row_number — the chunked two-pass rewrite
     * of the per-key ordered window, for when ONE key owns a material
     * share of the fact table (the measured zipf worst case: the plain
@@ -476,7 +490,7 @@ object Skew {
       .withColumn("next_first", lead(col("first_q"), 1).over(wk))
       .select(col("pid"), col(spec.key), col("cnt"), col("offset"),
         col("prev_last"), col("next_first"))
-    local.join(broadcast(stats), Seq("pid", spec.key))
+    joinStats(local, stats, Seq("pid", spec.key))
       .select(spec.out.map(col) ++ Seq(
         when(col("lrn") === 1L, col("prev_last"))
           .otherwise(col("prev0")).as(spec.prevName),
@@ -550,7 +564,7 @@ object Skew {
       .withColumn("next_ctx", slice(nextFlat, 1, k))
       .select(col("pid"), col(spec.key), col("cnt"), col("offset"),
         col("prev_ctx"), col("next_ctx"))
-    local.join(broadcast(stats), Seq("pid", spec.key))
+    joinStats(local, stats, Seq("pid", spec.key))
       .select(spec.out.map(col) ++ Seq(
         when(col("lrn") > k, col("prev0")).otherwise(
           when(size(col("prev_ctx")) - (lit(k) - col("lrn")) >= 1,
@@ -632,7 +646,7 @@ object Skew {
         get(col("h0"), lit(0)).as("first_v"),
         col("last_v"),
         get(flatten(col("hs")), lit(n - 1)).as("nth_v"))
-    ranged.join(broadcast(stats), Seq(spec.key), "left")
+    joinStats(ranged, stats, Seq(spec.key), "left")
       .select(spec.out.map(col) ++ Seq(
         col("first_v").as(s"first_${spec.valueAlias}"),
         col("last_v").as(s"last_${spec.valueAlias}"),
@@ -730,15 +744,16 @@ object Skew {
     val stats = ranged.groupBy(col("pid"), col(spec.key))
       .agg(sum(col(spec.value).cast("long")).as("csum"),
         count(lit(1)).as("cnt"))
-      .withColumn("sum_offset",
-        coalesce(sum(col("csum")).over(before), lit(0L)))
+      // null when every earlier summand is null: SUM's own null
+      .withColumn("sum_offset", sum(col("csum")).over(before))
       .withColumn("offset",
         coalesce(sum(col("cnt")).over(before), lit(0L)))
       .select(col("pid"), col(spec.key), col("sum_offset"),
         col("offset"))
-    local.join(broadcast(stats), Seq("pid", spec.key))
+    joinStats(local, stats, Seq("pid", spec.key))
       .select(spec.out.map(col) ++ Seq(
-        (col("lsum") + col("sum_offset")).as(spec.runningName),
+        coalesce(col("lsum") + col("sum_offset"), col("lsum"),
+          col("sum_offset")).as(spec.runningName),
         (col("lrn") + col("offset")).as("rn")): _*)
   }
 
@@ -886,11 +901,16 @@ object Skew {
         private val out = scala.collection.mutable.Queue.empty[Row]
         private var cur: Row = if (rows.hasNext) rows.next() else null
         private var curPid = Int.MinValue
-        private var curKey = Long.MinValue
-        // in-window value groups: (ordval, groupSum, groupCnt)
-        private val win = new java.util.ArrayDeque[(Long, Long, Long)]()
+        // boxed, so a null key is a group of its own (== is null-safe)
+        private var curKey: Any = null
+        // in-window value groups: (ordval, groupSum, groupCnt,
+        // groupNonNull) — a frame whose summands are all null sums to
+        // null, as SUM does
+        private val win =
+          new java.util.ArrayDeque[(Long, Long, Long, Long)]()
         private var wSum = 0L
         private var wCnt = 0L
+        private var wNonNull = 0L
         def hasNext: Boolean = {
           while (out.isEmpty && cur != null) advanceValueGroup()
           out.nonEmpty
@@ -901,9 +921,9 @@ object Skew {
         }
         private def advanceValueGroup(): Unit = {
           val pid = cur.getInt(iPid)
-          val key = cur.getLong(iKey)
+          val key = cur.get(iKey)
           if (pid != curPid || key != curKey) {
-            win.clear(); wSum = 0L; wCnt = 0L
+            win.clear(); wSum = 0L; wCnt = 0L; wNonNull = 0L
             curPid = pid; curKey = key
           }
           val v = cur.getLong(iOrd)
@@ -912,10 +932,13 @@ object Skew {
           val grp = scala.collection.mutable.ArrayBuffer.empty[Row]
           var gSum = 0L
           var gCnt = 0L
+          var gNonNull = 0L
           while (cur != null && cur.getInt(iPid) == pid &&
-              cur.getLong(iKey) == key && cur.getLong(iOrd) == v) {
+              cur.get(iKey) == key && cur.getLong(iOrd) == v) {
             grp += cur
-            gSum += cur.getLong(iVal)
+            if (!cur.isNullAt(iVal)) {
+              gSum += cur.getLong(iVal); gNonNull += 1L
+            }
             gCnt += 1L
             cur = if (rows.hasNext) rows.next() else null
           }
@@ -923,13 +946,16 @@ object Skew {
           // Long.MinValue a wrapped v - w would evict every group
           val lo = if (v < Long.MinValue + w) Long.MinValue else v - w
           while (!win.isEmpty && win.peekFirst()._1 < lo) {
-            val h = win.pollFirst(); wSum -= h._2; wCnt -= h._3
+            val h = win.pollFirst()
+            wSum -= h._2; wCnt -= h._3; wNonNull -= h._4
           }
-          win.addLast((v, gSum, gCnt)); wSum += gSum; wCnt += gCnt
+          win.addLast((v, gSum, gCnt, gNonNull))
+          wSum += gSum; wCnt += gCnt; wNonNull += gNonNull
+          val total = if (wNonNull == 0L) null else wSum
           grp.foreach { r =>
             if (!r.getBoolean(iGhost))
               out.enqueue(Row.fromSeq(
-                outIdx.map(r.get) ++ Seq(wSum, wCnt)))
+                outIdx.map(r.get) ++ Seq(total, wCnt)))
           }
         }
       }
@@ -1092,7 +1118,7 @@ object Skew {
       if (!extended) local
       else local.withColumn("lpe", max(col("lrn")).over(
         Window.partitionBy(col("pid"), col(spec.key), col(coarse))))
-    val joined = localJ.join(broadcast(stats), Seq("pid", spec.key))
+    val joined = joinStats(localJ, stats, Seq("pid", spec.key))
       .withColumn("rn", col("lrn") + col("offset"))
     val rnkExpr = when(col(coarse) === col("prev_last_dt"),
       col("prev_run_start")).otherwise(col("offset") + col("lrk"))
@@ -1142,18 +1168,12 @@ object Skew {
 
   // -------------------------------------------------- auto dispatch
 
-  /** Measured share of the heaviest `key` value in `df`: max per-key
-    * count / total rows — the profile step of the diagnose→choose pair
-    * [[skewDiagnose]] documents, as a single driver-read aggregate
-    * (map-side combined; one job, cost ~ one scan of `df`'s key
-    * column). 0.0 on an empty frame.
+  /** (heaviest key's row count, total rows) of `key` in `df` — the
+    * profile step of the diagnose→choose pair [[skewDiagnose]]
+    * documents, as a single driver-read aggregate (map-side combined;
+    * one job, cost ~ one scan of `df`'s key column). (0, 0) on an
+    * empty frame.
     */
-  def topKeyShare(df: DataFrame, key: String): Double = {
-    val (hot, total) = topKeyStats(df, key)
-    if (total == 0L) 0.0 else hot.toDouble / total.toDouble
-  }
-
-  /** (heaviest key's row count, total rows) — one aggregate job. */
   def topKeyStats(df: DataFrame, key: String): (Long, Long) = {
     val r = df.groupBy(col(key)).agg(count(lit(1)).as("c"))
       .agg(max(col("c")).as("mx"), sum(col("c")).as("n")).first()
@@ -1170,12 +1190,16 @@ object Skew {
   val ProfileSampleFloor = 200000L
   private val ProfileSeed = 1042L
 
-  /** Sampled estimate of [[topKeyShare]] — the scale-honest profile
-    * step: at 100 TB the exact per-key count is an entire extra job
-    * before every auto-dispatched window, while a `fraction` Bernoulli
-    * sample feeds ~1/50 of the rows through the same two aggregates
-    * (the scan still reads the pruned key column; the CPU + shuffle
-    * shrink by the fraction).
+  /** Bytes-per-row divisor of the plan-stats row estimate below. */
+  private val MinRowBytes = 32L
+
+  /** Sampled [[topKeyStats]], counts scaled back up by 1/fraction so
+    * the hot count is corpus-scale — the scale-honest profile step: at
+    * 100 TB the exact per-key count is an entire extra job before
+    * every auto-dispatched window, while a `fraction` Bernoulli sample
+    * feeds ~1/50 of the rows through the same two aggregates (the scan
+    * still reads the pruned key column; the CPU + shuffle shrink by
+    * the fraction).
     *
     * Error bound: the hot key's sampled count is Binomial(c, f), so
     * the estimated share p̂ has stderr ≤ sqrt(p(1−p)/n) for n sampled
@@ -1189,19 +1213,6 @@ object Skew {
     * (where sampling is noisy AND the scan is cheap) always dispatch
     * exactly — and identically across runs, the property the dispatch
     * spec pins.
-    */
-  def topKeyShareSampled(df: DataFrame, key: String,
-                         fraction: Double = ProfileSampleFraction,
-                         floor: Long = ProfileSampleFloor): Double = {
-    val (hot, total) = topKeyStatsSampled(df, key, fraction, floor)
-    if (total == 0L) 0.0 else hot.toDouble / total.toDouble
-  }
-
-  /** Bytes-per-row divisor of the plan-stats row estimate below. */
-  private val MinRowBytes = 32L
-
-  /** Sampled [[topKeyStats]], counts scaled back up by 1/fraction so
-    * the hot count is corpus-scale; exact fallback below the floor.
     *
     * Plan-stats shortcut: when the optimizer's size estimate says the
     * frame cannot clear the sample floor, go straight to the exact
@@ -1229,281 +1240,6 @@ object Skew {
     else ((r.getLong(0) / fraction).toLong, (n / fraction).toLong)
   }
 
-  // ---------------------------------------- persisted stats artifact
-
-  /** Where a table's key-stats artifact lives: a `_graft_stats`
-    * sidecar beside the data (underscore-prefixed, so parquet file
-    * indexes ignore it — the [[graft.exec.ShardedExport]] `_stats`
-    * pattern). A DIRECTORY table keeps it inside; a single-FILE table
-    * keeps it in a sibling `_graft_stats` directory. A plain java
-    * properties file, written and read DRIVER-SIDE: the whole point of
-    * the artifact posture is zero Spark jobs at plan-build time, so
-    * the read must not itself be a query.
-    */
-  private[graft] def statsArtifactPath(root: String): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.isDirectory(p))
-      p.resolve("_graft_stats").resolve("keystats.properties")
-    else p.toAbsolutePath.getParent.resolve("_graft_stats")
-      .resolve(p.getFileName.toString + ".keystats.properties")
-  }
-
-  /** Driver-side staleness fingerprint of the table's data files:
-    * (file count, max mtime, total bytes) — the same listing every
-    * scan's file index performs at plan time, so its cost is already
-    * priced into querying the table at all. `_`/`.`-prefixed entries
-    * (the artifact itself, _SUCCESS markers) are excluded; mid-walk
-    * deletions are tolerated (the Dedup manifest-walk lesson).
-    *
-    * BLIND SPOT (documented per r20 ADVICE, the StoreProtocol
-    * residual-assumption class): an in-place rewrite that preserves
-    * file count and total bytes within one mtime tick passes as fresh
-    * and serves the superseded key stats. The consequence is bounded —
-    * both dispatch branches are row-identical, so a stale artifact
-    * mis-prices a plan, never corrupts a result — but an operator that
-    * rewrites tables in place (compaction with byte-stable output)
-    * should re-run [[profileKeyStats]] afterwards, or set
-    * `spark.graft.window.profile=exact` for the affected queries
-    * (which now bypasses the artifact entirely).
-    */
-  private[graft] def tableFingerprint(root: String): (Long, Long, Long) = {
-    import java.nio.file.{Files, FileVisitResult, Path, Paths,
-      SimpleFileVisitor}
-    import java.nio.file.attribute.BasicFileAttributes
-    val p = Paths.get(root)
-    if (!Files.exists(p)) return (0L, 0L, 0L)
-    if (Files.isRegularFile(p))
-      return (1L, Files.getLastModifiedTime(p).toMillis, Files.size(p))
-    var n = 0L; var mt = 0L; var bytes = 0L
-    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path,
-          attrs: BasicFileAttributes): FileVisitResult = {
-        val nm = d.getFileName.toString
-        if (d != p && (nm.startsWith("_") || nm.startsWith(".")))
-          FileVisitResult.SKIP_SUBTREE
-        else FileVisitResult.CONTINUE
-      }
-      override def visitFile(f: Path,
-          attrs: BasicFileAttributes): FileVisitResult = {
-        val nm = f.getFileName.toString
-        if (!nm.startsWith("_") && !nm.startsWith(".")) {
-          n += 1L
-          mt = math.max(mt, attrs.lastModifiedTime.toMillis)
-          bytes += attrs.size
-        }
-        FileVisitResult.CONTINUE
-      }
-      override def visitFileFailed(f: Path,
-          e: java.io.IOException): FileVisitResult =
-        FileVisitResult.CONTINUE
-    })
-    (n, mt, bytes)
-  }
-
-  /** Approximate DECODED row width in bytes: fixed `defaultSize` per
-    * non-variable field plus measured `octet_length` (+8 overhead) for
-    * strings and binaries — the signal schema-static widths get wrong
-    * (a string's defaultSize is a guess of 20, and the window
-    * gray-band analysis shows decoded width is exactly where the
-    * rows-vs-bytes question lives).
-    */
-  def rowWidthExpr(schema: org.apache.spark.sql.types.StructType): Column = {
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    schema.fields.map { f =>
-      f.dataType match {
-        case StringType | BinaryType =>
-          coalesce(octet_length(col(f.name)).cast("double"), lit(0.0)) +
-            lit(8.0)
-        case dt => lit(dt.defaultSize.toDouble)
-      }
-    }.reduceLeft(_ + _)
-  }
-
-  /** Profile `keys` on the table at `tableRoot` and PERSIST the result
-    * as the table-adjacent stats artifact — the "profiled once,
-    * queried often" posture the 100 TB brief wants: one explicit
-    * profile run (a [[skewDiagnoseOn]] scan plus an avg-row-width
-    * aggregate), after which every [[dispatchChunked]] on the bare
-    * table reads hot/total/width driver-side with ZERO plan-time jobs.
-    * The artifact records the [[tableFingerprint]] at profile time;
-    * any data change (append, compaction, rewrite) flips the
-    * fingerprint and the dispatcher falls back to the sampled profile
-    * rather than trusting stale numbers.
-    */
-  def profileKeyStats(s: SparkSession, tableRoot: String,
-                      keys: Seq[String]): Unit = {
-    import java.nio.file.Files
-    val df = s.read.parquet(tableRoot)
-    val rows = skewDiagnoseOn(df, keys).collect()
-    val widthRow = df.agg(avg(rowWidthExpr(df.schema)).as("w")).first()
-    val width = if (widthRow.isNullAt(0)) 0.0 else widthRow.getDouble(0)
-    val (nf, mt, bytes) = tableFingerprint(tableRoot)
-    val props = new java.util.Properties()
-    props.setProperty("files", nf.toString)
-    props.setProperty("maxMtime", mt.toString)
-    props.setProperty("totalBytes", bytes.toString)
-    props.setProperty("avgRowBytes", width.toString)
-    rows.foreach { r =>
-      val k = r.getAs[String]("key_col")
-      props.setProperty(s"key.$k.hot", r.getAs[Long]("max_cnt").toString)
-      props.setProperty(s"key.$k.total", r.getAs[Long]("n_rows").toString)
-      props.setProperty(s"key.$k.topKey", r.getAs[Long]("top_key").toString)
-    }
-    val path = statsArtifactPath(tableRoot)
-    Files.createDirectories(path.getParent)
-    val out = Files.newOutputStream(path)
-    try props.store(out, "graft key-stats artifact") finally out.close()
-  }
-
-  /** Read a FRESH artifact's (hot rows, total rows, avg row bytes) for
-    * `key`: None when no artifact exists, it doesn't cover the key,
-    * it's malformed, or the table's fingerprint moved since profile
-    * time (staleness guard — fall back to the live profile instead of
-    * trusting a superseded count). `fp` supplies the CURRENT
-    * fingerprint — the dispatch path passes the scan relation's own
-    * cached file index ([[indexFingerprint]]; r20 VERDICT item 5: the
-    * driver re-walked the table's file tree on every dispatch, a
-    * second full listing per query at millions of files, when the
-    * relation already holds the listing), defaulting to the
-    * [[tableFingerprint]] walk for callers without a relation in hand.
-    * A divergence between the two listings fails SAFE: the artifact
-    * reads as stale and the dispatcher profiles live.
-    */
-  private[graft] def artifactStats(root: String, key: String)
-      : Option[(Long, Long, Double)] =
-    artifactStats(root, key, tableFingerprint(root))
-
-  private[graft] def artifactStats(root: String, key: String,
-      fp: => (Long, Long, Long)): Option[(Long, Long, Double)] =
-    scala.util.Try {
-      val path = statsArtifactPath(root)
-      if (!java.nio.file.Files.exists(path)) None
-      else {
-        val props = new java.util.Properties()
-        val in = java.nio.file.Files.newInputStream(path)
-        try props.load(in) finally in.close()
-        val (nf, mt, bytes) = fp
-        val fresh = props.getProperty("files") == nf.toString &&
-          props.getProperty("maxMtime") == mt.toString &&
-          props.getProperty("totalBytes") == bytes.toString
-        if (!fresh) None
-        else for {
-          hot <- Option(props.getProperty(s"key.$key.hot")).map(_.toLong)
-          total <- Option(props.getProperty(s"key.$key.total")).map(_.toLong)
-        } yield (hot, total,
-          Option(props.getProperty("avgRowBytes"))
-            .map(_.toDouble).getOrElse(0.0))
-      }
-    }.toOption.flatten
-
-  /** The single file-source table `df` reads UNALTERED — its analyzed
-    * plan is nothing but attribute-forwarding projections over one
-    * scan. Only then do table-level key stats describe `df`'s key
-    * column: a Filter changes the distribution, and an aliased or
-    * computed projection can redefine the key itself (the spec tests
-    * plant hot keys exactly that way). Conservative by construction —
-    * any unrecognized node refuses and the dispatcher profiles live.
-    */
-  private[graft] def bareTableRoot(df: DataFrame): Option[String] =
-    bareTableScan(df).map(_._1)
-
-  /** [[bareTableRoot]] plus the scan's own relation, so the dispatch
-    * path can fingerprint from the relation's ALREADY-LOADED file
-    * index instead of re-walking the table's file tree.
-    */
-  private[graft] def bareTableScan(df: DataFrame): Option[(String,
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation)] = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
-      Project, SubqueryAlias}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-      LogicalRelation}
-    def walk(p: LogicalPlan): Option[(String, HadoopFsRelation)] =
-      p match {
-        case Project(exprs, child)
-            if exprs.forall(_.isInstanceOf[AttributeReference]) =>
-          walk(child)
-        case SubqueryAlias(_, child) => walk(child)
-        case l: LogicalRelation => l.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths match {
-            case Seq(one) =>
-              val u = one.toUri
-              // LOCAL roots only (r20 ADVICE): the artifact read/write
-              // and fingerprint walk are java.nio (driver-local), and a
-              // remote root (s3a://bucket/p) stripped to its bare path
-              // could alias a previously-profiled local table at /p and
-              // serve it the wrong stats. A remote deployment keys its
-              // artifact store off the full URI; until that exists,
-              // remote tables refuse the artifact posture and profile
-              // live.
-              if (u.getScheme == null || u.getScheme == "file")
-                Some((u.getPath, fs))
-              else None
-            case _ => None
-          }
-          case _ => None
-        }
-        case _ => None
-      }
-    walk(df.queryExecution.analyzed)
-  }
-
-  /** The artifact staleness fingerprint computed from the scan
-    * relation's file index — the listing the query already paid for
-    * at plan time — instead of a second full tree walk per dispatch
-    * ([[tableFingerprint]] remains the write-side source and the
-    * no-relation fallback; the spec pins the two equal on both table
-    * layouts). Same hidden-file filter as the walk.
-    */
-  private[graft] def indexFingerprint(
-      fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation)
-      : (Long, Long, Long) = {
-    var n = 0L; var mt = 0L; var bytes = 0L
-    fs.location.listFiles(Nil, Nil).foreach(_.files.foreach { f =>
-      val nm = f.getPath.getName
-      if (!nm.startsWith("_") && !nm.startsWith(".")) {
-        n += 1L
-        mt = math.max(mt, f.getModificationTime)
-        bytes += f.getLen
-      }
-    })
-    (n, mt, bytes)
-  }
-
-  /** The share the dispatcher acts on, resolved from session conf —
-    * the scale postures, cheapest first:
-    *  - `spark.graft.window.share.<key>` = a PINNED share — the
-    *    operator's explicit word, zero jobs at plan-build time;
-    *  - a fresh table-adjacent stats ARTIFACT (a prior
-    *    [[profileKeyStats]] run) when `df` is a bare scan of one
-    *    table — zero jobs, staleness-guarded;
-    *  - `spark.graft.window.profile` = "sample" (DEFAULT): the
-    *    [[topKeyShareSampled]] estimate, with its documented error
-    *    band and exact fallback below the floor;
-    *  - `spark.graft.window.profile` = "exact": the full per-key scan,
-    *    which also BYPASSES the artifact (r20 ADVICE — the explicit
-    *    debug posture must be able to ignore a bad sidecar).
-    */
-  def profiledShare(s: SparkSession, df: DataFrame, key: String): Double =
-    s.conf.getOption(s"spark.graft.window.share.$key") match {
-      case Some(pinned) => pinned.toDouble
-      case None =>
-        // profile=exact OVERRIDES the artifact (r20 ADVICE): an
-        // operator pinning exact profiling to debug a dispatch must be
-        // able to bypass a bad artifact without deleting the file
-        val mode = s.conf.get("spark.graft.window.profile", "sample")
-        val art = if (mode == "exact") None
-          else bareTableScan(df).flatMap { case (root, rel) =>
-            artifactStats(root, key, indexFingerprint(rel)) }
-        art match {
-          case Some((hot, total, _)) =>
-            if (total == 0L) 0.0 else hot.toDouble / total.toDouble
-          case None =>
-            if (mode == "exact") topKeyShare(df, key)
-            else topKeyShareSampled(df, key)
-        }
-    }
-
   /** Absolute hot-key row floor for the chunked dispatch — the SECOND
     * dispatch signal, measured into existence (SCALING.md r19): on the
     * zipf ×100 EVENTS corpus the hot user holds 15.4% of 10M rows
@@ -1525,7 +1261,7 @@ object Skew {
     * throughput-bound) loses chunked. Every cheap per-row signal was
     * tested against the two endpoints and REFUTED (SCALING.md r20):
     * raw rows (1.54M vs 1.16M), compressed bytes (24 vs 20 MB), and
-    * decoded bytes via [[rowWidthExpr]] (70.1 vs 55.5 MB — the
+    * decoded bytes (70.1 vs 55.5 MB — the
     * carried widths are near-identical, 45.6 vs 48.0 B) all order
     * them the WRONG way; what separates them is the hot task's share
     * of the WHOLE job (19% of the ×10 corpus vs 15% of a corpus with
@@ -1536,68 +1272,31 @@ object Skew {
     * wins 6–40×) and the floor gets every measured point right.
     * Conf-tunable (`spark.graft.window.minHotRows`): a deployment
     * whose windows are wide/straggler-bound lowers it toward 1M; the
-    * specs pin dispatch mechanics with it at 0. The avg decoded width
-    * rides the stats artifact ([[profileKeyStats]]) for deployments
-    * that want to build their own byte floor from persisted signals.
+    * specs pin dispatch mechanics with it at 0.
     */
   val MinHotRows = 2000000L
   val MinHotRowsConf = "spark.graft.window.minHotRows"
 
   /** The dispatch decision [[windowAutoOn]] and the SQL-seam rule act
     * on: chunked iff the profiled share clears `threshold` AND the
-    * hot key's absolute row count clears [[MinHotRows]]. Postures, in
-    * resolution order:
-    *  - PINNED share (`spark.graft.window.share.<key>`): dispatches on
-    *    share alone unless a pinned hot count
-    *    (`spark.graft.window.hot.<key>`) is also present — a
-    *    share-only pin is trusted as the operator's explicit word;
-    *  - ARTIFACT: when `df` is a bare LOCAL scan of one table
-    *    ([[bareTableRoot]]) carrying a FRESH [[profileKeyStats]]
-    *    sidecar AND `profile` is not "exact" (the explicit debug
-    *    posture bypasses the sidecar — r20 ADVICE), both signals come
-    *    from it driver-side — zero plan-time jobs, the "profiled
-    *    once, queried often" posture;
-    *  - otherwise the sampled/exact profile supplies both signals
-    *    from one job.
-    * Every decision is recorded to
-    * [[graft.exec.QueryMetrics.recentDispatches]] with its posture
-    * and signals — an operator that silently picks physical plans
-    * needs an audit trail at 100 TB.
+    * hot key's absolute row count clears [[MinHotRows]]. Both signals
+    * come from one [[topKeyStatsSampled]] job over the frame being
+    * dispatched (the exact [[topKeyStats]] scan below the sample
+    * floor): the plan shape is decided from the data the query reads,
+    * never from statistics stored beside it. Every decision is
+    * recorded to [[graft.exec.QueryMetrics.recentDispatches]] with its
+    * signals — an operator that silently picks physical plans needs
+    * an audit trail at 100 TB.
     */
   def dispatchChunked(s: SparkSession, df: DataFrame, key: String,
                       threshold: Double = WindowSkewShare): Boolean = {
     val minHot = s.conf.get(MinHotRowsConf, MinHotRows.toString).toLong
-    val (posture, hot, total, share, verdict) =
-      s.conf.getOption(s"spark.graft.window.share.$key") match {
-        case Some(pinned) =>
-          val sh = pinned.toDouble
-          val hotPin = s.conf.getOption(s"spark.graft.window.hot.$key")
-            .map(_.toLong)
-          ("pinned", hotPin.getOrElse(-1L), -1L, sh,
-            sh >= threshold && hotPin.forall(_ >= minHot))
-        case None =>
-          // profile=exact overrides the artifact posture (r20 ADVICE)
-          val mode = s.conf.get("spark.graft.window.profile", "sample")
-          val art = if (mode == "exact") None
-            else bareTableScan(df).flatMap { case (root, rel) =>
-              artifactStats(root, key, indexFingerprint(rel)) }
-          art match {
-            case Some((h, t, _)) =>
-              val sh = if (t == 0L) 0.0 else h.toDouble / t
-              ("artifact", h, t, sh,
-                t > 0L && sh >= threshold && h >= minHot)
-            case None =>
-              val (h, t) =
-                if (mode == "exact") topKeyStats(df, key)
-                else topKeyStatsSampled(df, key)
-              val sh = if (t == 0L) 0.0 else h.toDouble / t
-              (if (mode == "exact") "exact" else "sampled", h, t, sh,
-                t > 0L && sh >= threshold && h >= minHot)
-          }
-      }
+    val (hot, total) = topKeyStatsSampled(df, key)
+    val share = if (total == 0L) 0.0 else hot.toDouble / total
+    val verdict = total > 0L && share >= threshold && hot >= minHot
     graft.exec.QueryMetrics.recordDispatch(
       graft.exec.QueryMetrics.WindowDispatch(
-        key, posture, share, hot, total, verdict))
+        key, share, hot, total, verdict))
     verdict
   }
 
@@ -1660,9 +1359,9 @@ object Skew {
 
   /** Auto-dispatching per-key window — [[skewDiagnose]]'s `window_plan`
     * verdict turned into an ENGINE decision instead of a hand-picked
-    * rewrite: profile the heaviest key ([[dispatchChunked]] — pinned
-    * stats, sampled estimate, or exact scan, per session conf), then
-    * run the window class `cls` as the plain single-window plan when
+    * rewrite: profile the heaviest key ([[dispatchChunked]] — a
+    * sampled estimate, exact below the sample floor), then run the
+    * window class `cls` as the plain single-window plan when
     * the key is benign and as the chunked skew rewrite when BOTH
     * signals fire — share at/above `threshold` (one reducer owns a
     * material fraction) and the hot key's absolute rows at/above
@@ -1675,11 +1374,15 @@ object Skew {
     * split, applied to the window family Spark has no runtime split
     * for. Threshold default = [[WindowSkewShare]] (one key ≥ 1/P of
     * the rows pins a full reducer at reference parallelism P = 100);
-    * at a different cluster width pass your own 1/P.
+    * at a different cluster width pass your own 1/P. A threshold
+    * above 1.0 pins the plain branch, and 0.0 with
+    * [[MinHotRowsConf]] at 0 pins the chunked one on any non-empty
+    * frame — how the specs compare the two.
     *
     * `cls`: "lag" (lag/lead/row_number), "rank" (rank/dense_rank/
     * ntile), "running" (cumulative sum + count), "range" (trailing
-    * value-range sum + count). `spec` names the key / ordering /
+    * value-range sum + count), "flast" (first/last/nth value over the
+    * whole partition). `spec` names the key / ordering /
     * value / output roles ([[WindowSpec]]); the lineitem registry
     * queries and the events dispatch spec are just two values of it.
     */

@@ -127,7 +127,9 @@ object WindowAutoRewrite extends Rule[LogicalPlan] {
     * `lo`/`hi`/`nxt_lo`/`prv_hi`/`gk`/`tpid` ride the bounds joins, and
     * `rng_sum`/`rng_n` are the class's own output names — all refused
     * for fail-loud hygiene (a collision would mean wrong data, exactly
-    * the failure class this guard exists to prevent).
+    * the failure class this guard exists to prevent). `_js_`-prefixed
+    * names are the stats side of the null-safe stats join, dropped by
+    * name after it (`Skew.joinStats`).
     */
   private val Scratch = Set("pid", "lrn", "prev0", "next0", "cnt",
     "offset", "prev_last", "next_first", "first_q", "last_q",
@@ -143,6 +145,8 @@ object WindowAutoRewrite extends Rule[LogicalPlan] {
     "cntl", "head_vals", "tail_vals", "prev_ctx", "next_ctx",
     "h0", "hs", "first_v", "last_v", "nth_v",
     "first_qty", "last_qty", "nth_qty")
+  private def scratch(name: String): Boolean =
+    Scratch.contains(name) || name.startsWith("_js_")
 
   /** The expression id a projection entry forwards: a direct reference,
     * or the oracle-SQL idiom `CAST(x AS BIGINT)` (the chunked rewrites
@@ -531,7 +535,7 @@ object WindowAutoRewrite extends Rule[LogicalPlan] {
             (ordO ++ ordI).forall(o => o.direction == Ascending &&
               o.nullOrdering == NullsFirst &&
               o.child.isInstanceOf[AttributeReference]) &&
-            child.output.forall(a => !Scratch.contains(a.name)) &&
+            child.output.forall(a => !scratch(a.name)) &&
             ((rankPair(wesI).isDefined && ntileOne(wesO).isDefined) ||
              (rankPair(wesO).isDefined && ntileOne(wesI).isDefined)) =>
         val (rk, dr, nt, nTiles, coarse, full) =
@@ -597,7 +601,7 @@ object WindowAutoRewrite extends Rule[LogicalPlan] {
                o.nullOrdering == NullsFirst) ||
              order.forall(o => o.direction == Descending &&
                o.nullOrdering == NullsLast)) &&
-            child.output.forall(a => !Scratch.contains(a.name)) =>
+            child.output.forall(a => !scratch(a.name)) =>
         val descending = order.head.direction == Descending
         classify(wes, order.length, descending) match {
           case Some(m) if {

@@ -565,8 +565,9 @@ class PlansSpec extends AnyFunSuite {
           .otherwise(col("l_orderkey") % 2000 + 10000))
     // `_v` is the range sweep's normalized summand (added via
     // withColumn — a same-named passthrough would be silently REPLACED
-    // by the cast value); `ghost` is the shuffle-fallback emit filter
-    for (bad <- Seq("_v", "ghost")) {
+    // by the cast value); `ghost` is the shuffle-fallback emit filter;
+    // `_js_`-prefixed names are dropped after the null-safe stats join
+    for (bad <- Seq("_v", "ghost", "_js_l_suppkey")) {
       li.withColumn(bad, col("l_extendedprice") * 2)
         .createOrReplaceTempView("li_scratch")
       // the collision column is PROJECTED, so pruning cannot remove it

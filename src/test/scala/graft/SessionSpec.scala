@@ -74,4 +74,32 @@ class SessionSpec extends AnyFunSuite {
       s"build sessions through graft.engine.GraftSession: $offenders")
     assert(allowed.forall(files.contains))
   }
+
+  /** Every option the engine reads: `spark.graft.*` conf keys (a
+    * trailing dot marks a per-key family) and `SPARK_GRAFT_*` env vars.
+    * Adding, renaming or removing an option must edit this list.
+    */
+  val ConfKeys = Set(
+    "spark.graft.ann.autoBudget", "spark.graft.ann.ladderCap",
+    "spark.graft.bloomJoin.minSizeRatio", "spark.graft.contain.profileLevel",
+    "spark.graft.groupedTopK.maxKeysPerTask", "spark.graft.rewriteBloomJoin",
+    "spark.graft.rewriteRankLimit", "spark.graft.rewriteWindowAuto",
+    "spark.graft.window.minHotRows")
+  val EnvVars = Set(
+    "SPARK_GRAFT_AQE_MIN_PART", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
+    "SPARK_GRAFT_REPO_ROOT", "SPARK_GRAFT_REPS", "SPARK_GRAFT_SF_DIR")
+
+  test("options inventory: src/main reads exactly the listed spark.graft " +
+       "conf keys and SPARK_GRAFT_ env vars") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val text = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString("\n")
+    val confs = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)".r
+      .findAllMatchIn(text).map(_.group(1)).toSet
+    val envs = "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text).toSet
+    assert(confs === ConfKeys, s"conf keys read: ${confs.toSeq.sorted}")
+    assert(envs === EnvVars, s"env vars read: ${envs.toSeq.sorted}")
+  }
 }

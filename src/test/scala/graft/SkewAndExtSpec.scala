@@ -192,26 +192,21 @@ class SkewAndExtSpec extends AnyFunSuite {
       assert(c.exceptAll(p).count() === 0L, s"ig=$ig")
       assert(p.exceptAll(c).count() === 0L, s"ig=$ig")
     }
-    // the auto dispatcher serves the class: a pinned-hot share takes
-    // the chunked branch, a pinned-benign one the plain window — rows
+    // the auto dispatcher serves the class: threshold 0.0 (hot-row
+    // floor at 0) takes the chunked branch, 1.1 the plain window — rows
     // identical either way (the windowAutoOn contract, fifth class)
     try {
-      spark.conf.set("spark.graft.window.share.o_custkey", "0.5")
       spark.conf.set(Skew.MinHotRowsConf, "0")
-      val hotAuto = Skew.windowAutoOn(spark, orders, "flast",
+      val hotAuto = Skew.windowAutoOn(spark, orders, "flast", 0.0,
         spec = Skew.OrdersFirstLast)
       assert(hotAuto.queryExecution.executedPlan.toString.contains("pid#"))
       assert(hotAuto.exceptAll(flP).count() === 0L)
-      spark.conf.set("spark.graft.window.share.o_custkey", "0.0001")
-      val coldAuto = Skew.windowAutoOn(spark, orders, "flast",
+      val coldAuto = Skew.windowAutoOn(spark, orders, "flast", 1.1,
         spec = Skew.OrdersFirstLast)
       assert(!coldAuto.queryExecution.executedPlan.toString
         .contains("pid#"))
       assert(coldAuto.exceptAll(flP).count() === 0L)
-    } finally {
-      spark.conf.unset("spark.graft.window.share.o_custkey")
-      spark.conf.unset(Skew.MinHotRowsConf)
-    }
+    } finally spark.conf.unset(Skew.MinHotRowsConf)
     // percent_rank / cume_dist
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val ext = Skew.windowRankSkewOn(spark, li,
@@ -486,8 +481,12 @@ class SkewAndExtSpec extends AnyFunSuite {
     val skewed = li.withColumn("l_suppkey",
       when(col("l_orderkey") % 2 === 0, lit(7L))
         .otherwise(col("l_orderkey") % 2000 + 10000))
-    assert(Skew.topKeyShare(uniform, "l_suppkey") < Skew.WindowSkewShare)
-    assert(Skew.topKeyShare(skewed, "l_suppkey") >= Skew.WindowSkewShare)
+    def share(df: org.apache.spark.sql.DataFrame): Double = {
+      val (hot, total) = Skew.topKeyStats(df, "l_suppkey")
+      hot.toDouble / total
+    }
+    assert(share(uniform) < Skew.WindowSkewShare)
+    assert(share(skewed) >= Skew.WindowSkewShare)
     // the SECOND dispatch signal: at the DEFAULT absolute hot-row
     // floor this planted key (share ~0.5 but only ~3k hot rows) is
     // hot-but-tiny — the measured events-×100 case where the chunk
@@ -613,8 +612,7 @@ class SkewAndExtSpec extends AnyFunSuite {
   }
 
   test("sampled profile dispatches identically to the exact scan on " +
-       "both a skewed and a benign corpus; a pinned share short-circuits " +
-       "the profile job entirely") {
+       "both a skewed and a benign corpus") {
     // corpora big enough that the sampled branch really runs (the
     // floor guards tiny frames back to the exact scan)
     val benign = spark.range(400000L).select(
@@ -622,9 +620,11 @@ class SkewAndExtSpec extends AnyFunSuite {
     val skewed = spark.range(400000L).select(
       when(col("id") % 5 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
       col("id").as("v"))
+    def share(stats: (Long, Long)): Double =
+      stats._1.toDouble / stats._2
     for (df <- Seq(benign, skewed)) {
-      val exact = Skew.topKeyShare(df, "k")
-      val sampled = Skew.topKeyShareSampled(df, "k", floor = 1000L)
+      val exact = share(Skew.topKeyStats(df, "k"))
+      val sampled = share(Skew.topKeyStatsSampled(df, "k", floor = 1000L))
       assert((exact >= Skew.WindowSkewShare) ===
         (sampled >= Skew.WindowSkewShare),
         s"dispatch flips sampled=$sampled exact=$exact")
@@ -635,132 +635,111 @@ class SkewAndExtSpec extends AnyFunSuite {
     // below the floor the sampled path falls back to the exact scan:
     // tiny frames always dispatch deterministically
     val tiny = spark.range(1000L).select((col("id") % 7).as("k"))
-    assert(Skew.topKeyShareSampled(tiny, "k") ===
-      Skew.topKeyShare(tiny, "k"))
-    // a pinned share (the cached-stats posture) is read from conf with
-    // NO profile job — pin an absurd value and watch the dispatcher
-    // believe it
-    try {
-      spark.conf.set("spark.graft.window.share.k", "0.99")
-      assert(Skew.profiledShare(spark, benign, "k") === 0.99)
-      spark.conf.set("spark.graft.window.share.k", "0.0")
-      assert(Skew.profiledShare(spark, skewed, "k") === 0.0)
-    } finally spark.conf.unset("spark.graft.window.share.k")
+    assert(Skew.topKeyStatsSampled(tiny, "k") === Skew.topKeyStats(tiny, "k"))
   }
 
-  test("persisted key-stats artifact: a pre-profiled table dispatches " +
-       "with ZERO plan-time jobs and the exact scan's decision on both " +
-       "corpora; a stale artifact falls back to the live profile; " +
-       "every decision lands in the audit trail with its posture") {
+  test("clearDispatches empties the ring: after a full ring and a " +
+       "clear, one new decision reads back as exactly one") {
     import graft.exec.QueryMetrics
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graftstats").toString
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val hotDf = li.withColumn("l_suppkey",
-      when(col("l_orderkey") % 2 === 0, lit(7L))
-        .otherwise(col("l_orderkey") % 2000 + 10000))
-    val hotPath = s"$tmp/hot"
-    val coldPath = s"$tmp/cold"
-    hotDf.write.parquet(hotPath)
-    li.withColumn("l_suppkey", col("l_orderkey") % 2000)
-      .write.parquet(coldPath)
+    def record(i: Int): Unit = QueryMetrics.recordDispatch(
+      QueryMetrics.WindowDispatch(s"k$i", 0.5, i.toLong, 2L * i, true))
+    QueryMetrics.clearDispatches()
+    (1 to 256).foreach(record)
+    assert(QueryMetrics.recentDispatches.size === 256)
+    QueryMetrics.clearDispatches()
+    assert(QueryMetrics.recentDispatches.isEmpty)
+    record(1000)
+    assert(QueryMetrics.recentDispatches.map(_.key) === Seq("k1000"))
+    // the ring keeps its full bound after the clear
+    (1 to 300).foreach(record)
+    assert(QueryMetrics.recentDispatches.size === 256)
+    assert(QueryMetrics.recentDispatches.last.key === "k300")
+    QueryMetrics.clearDispatches()
+  }
+
+  test("property: windowAutoOn's chunked and plain branches emit the " +
+       "same row multiset for every window class on generated frames " +
+       "(seeded scalacheck)") {
+    import org.scalacheck.{Gen, rng}
+    import graft.exec.QueryMetrics
+    import graft.operators.WindowSpec
+    import spark.implicits._
+    // A generated frame: key k (a hot key at a drawn share, null keys),
+    // ordering o drawn from a small domain so tie runs on o straddle
+    // chunk edges, value v (nulls) closing the ordering so full-tuple
+    // ties are full duplicates (the WindowSpec contract). The range
+    // class orders on o: offsets stay in [base, base + 1500), away
+    // from Long.MinValue + w, where the plain twin overflows under
+    // ANSI (the BigInt-reference cases pin both edges).
+    final case class Frame(rows: Seq[(java.lang.Long, Long, java.lang.Long)],
+                           chunks: Int, desc: Boolean)
+    val genFrame: Gen[Frame] = for {
+      // a benign frame spreads its keys three rows each, so its top
+      // share (3/n, n >= 320) sits below WindowSkewShare
+      benign <- Gen.frequency(1 -> true, 2 -> false)
+      n <- if (benign) Gen.choose(320, 400) else Gen.choose(20, 400)
+      chunks <- Gen.choose(1, 8)
+      hotShare <- Gen.oneOf(0.0, 0.004, 0.05, 0.5, 0.9)
+      keys <- Gen.oneOf(1, 5, 60, 400)
+      tieDomain <- Gen.oneOf(1, 3, 25, 1500)
+      base <- Gen.oneOf(0L, -50000L, Long.MaxValue - 2000L)
+      nullV <- Gen.oneOf(0.0, 0.2)
+      nullK <- Gen.oneOf(0.0, 0.05)
+      desc <- Gen.oneOf(false, true)
+      rows <- Gen.listOfN(n, for {
+        uk <- Gen.choose(0.0, 1.0)
+        uh <- Gen.choose(0.0, 1.0)
+        k <- Gen.choose(0L, keys - 1L)
+        o <- Gen.choose(0L, tieDomain - 1L)
+        uv <- Gen.choose(0.0, 1.0)
+        v <- Gen.choose(-50L, 50L)
+      } yield (
+        if (uk < nullK) null
+        else java.lang.Long.valueOf(if (uh < hotShare) 1000L else k),
+        base + o,
+        if (uv < nullV) null else java.lang.Long.valueOf(v)))
+    } yield Frame(
+      if (!benign) rows
+      else rows.zipWithIndex.map { case ((_, o, v), i) =>
+        (java.lang.Long.valueOf(i / 3L), o, v) },
+      chunks, desc)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val shares = Seq.newBuilder[Double]
+    val descended = Set.newBuilder[String]
+    val cases = 10
     spark.conf.set(Skew.MinHotRowsConf, "0")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val jobInfo = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        jobInfo.add(s"job ${js.jobId}: " + Option(js.properties)
-          .map(_.getProperty("callSite.short", "?")).getOrElse("?"))
-      }
-    }
-    def settle(): Unit = Thread.sleep(1000) // listener bus is async
     try {
-      // ground truth BEFORE any artifact exists: the exact scan
-      spark.conf.set("spark.graft.window.profile", "exact")
-      val hotRead = spark.read.parquet(hotPath)
-      val coldRead = spark.read.parquet(coldPath)
-      val exactHot = Skew.dispatchChunked(spark, hotRead, "l_suppkey")
-      val exactCold = Skew.dispatchChunked(spark, coldRead, "l_suppkey")
-      assert(exactHot && !exactCold)
-      spark.conf.unset("spark.graft.window.profile")
-      // profile once, persist the sidecar beside each table
-      Skew.profileKeyStats(spark, hotPath, Seq("l_suppkey"))
-      Skew.profileKeyStats(spark, coldPath, Seq("l_suppkey"))
-      assert(Files.exists(Skew.statsArtifactPath(hotPath)))
-      QueryMetrics.clearDispatches()
-      // the listener registers only NOW, after every setup job — a
-      // late-delivered setup event cannot pollute the zero-jobs window
-      spark.sparkContext.addSparkListener(listener)
-      settle(); jobs.set(0)
-      val dHot = Skew.dispatchChunked(spark, hotRead, "l_suppkey")
-      val dCold = Skew.dispatchChunked(spark, coldRead, "l_suppkey")
-      settle()
-      // posture FIRST: a silent profile fallback diagnoses as itself
-      // rather than as a mystery job count
-      val trail = QueryMetrics.recentDispatches
-      assert(trail.map(_.posture) === Seq("artifact", "artifact"), trail)
-      assert(jobs.get() === 0,
-        "a pre-profiled bare table must dispatch with zero plan-time " +
-          s"jobs; saw: ${jobInfo.toArray.mkString("; ")}")
-      assert(dHot === exactHot && dCold === exactCold,
-        "artifact decisions must equal the exact scan's")
-      assert(trail.head.chunked && !trail.last.chunked)
-      assert(trail.head.share > 0.4 && trail.head.hotRows > 0L)
-      // a planted-key frame is NOT the bare table: the artifact must
-      // not answer for a redefined key column
-      assert(Skew.bareTableRoot(hotDf).isEmpty)
-      // stale: append to the table -> fingerprint moves -> live
-      // profile fallback (jobs run again), decision unchanged
-      hotDf.limit(50).write.mode("append").parquet(hotPath)
-      QueryMetrics.clearDispatches()
-      settle(); jobs.set(0)
-      val hotRead2 = spark.read.parquet(hotPath)
-      val dStale = Skew.dispatchChunked(spark, hotRead2, "l_suppkey")
-      settle()
-      assert(jobs.get() > 0,
-        "a stale artifact must fall back to the live profile job")
-      assert(dStale === true)
-      assert(QueryMetrics.recentDispatches.last.posture === "sampled")
-      // single-FILE table layout: the sidecar lives beside the file
-      val filePath = s"$tmp/li_file.parquet"
-      Files.copy(java.nio.file.Paths.get(s"$dir/lineitem.parquet"),
-        java.nio.file.Paths.get(filePath))
-      // exact ground truth for the file table, pre-artifact (at this
-      // tiny SF the ~10 real suppkeys each hold ~10% — above threshold)
-      spark.conf.set("spark.graft.window.profile", "exact")
-      val exactFile = Skew.dispatchChunked(spark,
-        spark.read.parquet(filePath), "l_suppkey")
-      spark.conf.unset("spark.graft.window.profile")
-      Skew.profileKeyStats(spark, filePath, Seq("l_suppkey"))
-      assert(Skew.statsArtifactPath(filePath).toString
-        .contains("_graft_stats"))
-      // resolve the relation (schema inference runs a job) BEFORE the
-      // measured window — the zero-jobs claim is about the DISPATCH
-      val fileRead = spark.read.parquet(filePath)
-      settle(); jobs.set(0)
-      val dFile = Skew.dispatchChunked(spark, fileRead, "l_suppkey")
-      settle()
-      assert(jobs.get() === 0,
-        s"file-table dispatch ran: ${jobInfo.toArray.mkString("; ")}")
-      assert(dFile === exactFile)
-      assert(QueryMetrics.recentDispatches.last.posture === "artifact")
-      // profile=exact OVERRIDES a fresh artifact (r20 ADVICE): an
-      // operator pinning exact profiling to debug a dispatch must be
-      // able to bypass a bad sidecar without deleting the file
-      spark.conf.set("spark.graft.window.profile", "exact")
-      QueryMetrics.clearDispatches()
-      val dExact = Skew.dispatchChunked(spark, fileRead, "l_suppkey")
-      assert(dExact === exactFile)
-      assert(QueryMetrics.recentDispatches.last.posture === "exact",
-        "profile=exact must bypass the artifact posture")
-      spark.conf.unset("spark.graft.window.profile")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset(Skew.MinHotRowsConf)
-      spark.conf.unset("spark.graft.window.profile")
-    }
+      for ((cls, ci) <- Seq("lag", "rank", "running", "range", "flast")
+             .zipWithIndex; i <- 0 until cases) {
+        val f = genFrame.apply(Gen.Parameters.default,
+          rng.Seed(1000L * ci + i)).get
+        val spec = WindowSpec(key = "k", ord = Seq("o", "v"), value = "v",
+          rangeOrd = "o", out = Seq("k", "o", "v"),
+          rangeOut = Seq("k", "o", "v"), valueAlias = "v",
+          descending = f.desc && (cls == "lag" || cls == "running"))
+        val df = f.rows.toDF("k", "o", "v")
+        val what = s"$cls case $i: ${f.rows.size} rows, ${f.chunks} " +
+          s"chunks, desc=${spec.descending}"
+        if (spec.descending) descended += cls
+        org.apache.spark.TestParallelism.withDefaultParallelism(
+            spark.sparkContext, f.chunks) {
+          assert(spark.sparkContext.defaultParallelism === f.chunks)
+          val chunked = Skew.windowAutoOn(spark, df, cls, 0.0, spec)
+          assert(QueryMetrics.recentDispatches.last.chunked, what)
+          shares += QueryMetrics.recentDispatches.last.share
+          val plain = Skew.windowAutoOn(spark, df, cls, 1.1, spec)
+          assert(!QueryMetrics.recentDispatches.last.chunked, what)
+          assert(sorted(chunked) === sorted(plain), what)
+        }
+      }
+    } finally spark.conf.unset(Skew.MinHotRowsConf)
+    // the generator reached both sides of the dispatch threshold, and
+    // DESC orderings on both classes that take them
+    val seen = shares.result()
+    assert(seen.exists(_ < Skew.WindowSkewShare) &&
+      seen.exists(_ >= Skew.WindowSkewShare), seen)
+    assert(descended.result() === Set("lag", "running"))
   }
 
   test("withCheckpointScope reclaims operator-internal checkpoint " +
@@ -784,30 +763,6 @@ class SkewAndExtSpec extends AnyFunSuite {
     }
     assert(sc.getPersistentRDDs.isEmpty,
       "scope exit must reclaim every RDD the query pinned")
-  }
-
-  test("indexFingerprint equals the tableFingerprint walk on both " +
-       "table layouts (the dispatch path's zero-extra-listing read)") {
-    import java.nio.file.Files
-    // directory table
-    val tmp = Files.createTempDirectory("graftfp").toString
-    val dpath = s"$tmp/tbl"
-    spark.read.parquet(s"$dir/lineitem.parquet")
-      .repartition(3).write.parquet(dpath)
-    val (dRoot, dRel) = Skew.bareTableScan(
-      spark.read.parquet(dpath)).get
-    assert(dRoot === dpath)
-    assert(Skew.indexFingerprint(dRel) === Skew.tableFingerprint(dpath),
-      "directory-table fingerprints must agree between the file index " +
-        "and the tree walk")
-    // single-file table
-    val fpath = s"$tmp/one.parquet"
-    Files.copy(java.nio.file.Paths.get(s"$dir/lineitem.parquet"),
-      java.nio.file.Paths.get(fpath))
-    val (fRoot, fRel) = Skew.bareTableScan(
-      spark.read.parquet(fpath)).get
-    assert(fRoot === fpath)
-    assert(Skew.indexFingerprint(fRel) === Skew.tableFingerprint(fpath))
   }
 
   test("rangeChunked assigns deterministic, order-monotone chunk ids") {
