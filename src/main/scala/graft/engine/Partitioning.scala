@@ -109,8 +109,7 @@ object Partitioning {
     // production scale post-shuffle partitions sit near the advisory
     // size (64 MiB), three orders of magnitude above either floor.
     spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "128k"))
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
     n
   }
 

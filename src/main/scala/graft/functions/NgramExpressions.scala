@@ -254,7 +254,9 @@ case class GramDupFrac(child: Expression, m: Int) extends UnaryExpression {
 
 /** `cdc_chunk_texts(toks, divisor)` → ARRAY<STRING>: content-defined
   * chunk texts (md5_60 boundary, space-joined tokens) in document
-  * order.
+  * order. Null tokens never open a chunk and add no text; LEADING null
+  * tokens (before the first non-null one) are dropped, not emitted as
+  * an empty chunk, so an array of only nulls gives an empty array.
   */
 case class CdcChunkTexts(child: Expression, divisor: Int)
     extends UnaryExpression {

@@ -130,19 +130,16 @@ object RuntimeFilter {
         col("o_orderpriority"))
   }
 
-  /** The SAME star join written naively — no bloom code at all — and
-    * handed to the opt-in [[graft.plans.BloomJoinRewrite]] optimizer
-    * rule, which injects the [[bloomJoin]] device automatically
-    * (sideways information passing as an OPTIMIZER move, the way a
-    * warehouse plants runtime filters; PlansSpec asserts the fired
-    * plan). The conf is scoped to this query by materializing through
-    * `localCheckpoint()` while the rule is enabled — the session's
-    * other queries never see the rule, and the checkpoint rows ARE the
-    * rewritten plan's output, so the oracle (the plain join) checks
-    * rewrite-invariance end to end.
+  /** The SAME star join written naively — no bloom code at all — with
+    * [[graft.plans.BloomJoinRewrite]] applied to its optimized plan,
+    * which injects the [[bloomJoin]] device automatically (sideways
+    * information passing as a PLAN rewrite, the way a warehouse plants
+    * runtime filters; PlansSpec asserts the fired plan). The rewrite
+    * touches this query's plan only: nothing is installed in or set on
+    * the session, so its other statements never see it. The oracle
+    * (the plain join) checks rewrite-invariance end to end.
     */
   def bloomJoinAuto(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.BloomJoinRewrite.ensureRule(s)
     val naive = table(s, dir, "lineitem")
       .join(table(s, dir, "orders")
           .filter(col("o_orderpriority") === "1-URGENT")
@@ -150,8 +147,7 @@ object RuntimeFilter {
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("o_orderpriority"))
-    s.conf.set(graft.plans.BloomJoinRewrite.ConfKey, "true")
-    try naive.localCheckpoint()
-    finally s.conf.unset(graft.plans.BloomJoinRewrite.ConfKey)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(s,
+      graft.plans.BloomJoinRewrite(s, naive.queryExecution.optimizedPlan))
   }
 }

@@ -1046,10 +1046,17 @@ object Skew {
     // shuffled TWICE (r22 StageProf: two ~0.6-1.0 s map stages per
     // rep). Consuming lrn pins the branch to the identical subtree,
     // so one map stage feeds both consumers.
+    // A null coarse value is a peer group of its own and sorts FIRST
+    // (ASC NULLS FIRST), while min/max/countDistinct skip nulls: a
+    // chunk holding one has a null first value and one more distinct
+    // value, and every boundary compare below is null-safe (<=>).
+    // last_dt needs no guard: max is null only on an all-null chunk.
+    val hasNull = count(lit(1)) > count(col(coarse))
     val statsBase = local.groupBy(col("pid"), col(spec.key))
       .agg(max(col("lrn")).as("cnt"),
-        countDistinct(col(coarse)).as("d"),
-        min(col(coarse)).as("first_dt"),
+        (countDistinct(col(coarse)) + when(hasNull, 1L).otherwise(0L))
+          .as("d"),
+        when(!hasNull, min(col(coarse))).as("first_dt"),
         max(col(coarse)).as("last_dt"),
         max(col("lrk")).as("last_rk"),
         // local end position of the chunk's FIRST coarse value (its
@@ -1061,8 +1068,9 @@ object Skew {
       .withColumn("offset", coalesce(sum(col("cnt")).over(before), lit(0L)))
       .withColumn("total", sum(col("cnt")).over(
         Window.partitionBy(col(spec.key))))
-      .withColumn("cont",
-        col("first_dt") === lag(col("last_dt"), 1).over(wk))
+      // a predecessor chunk exists and ends on this chunk's first value
+      .withColumn("cont", lag(col("pid"), 1).over(wk).isNotNull &&
+        (col("first_dt") <=> lag(col("last_dt"), 1).over(wk)))
       .withColumn("overlap",
         when(col("cont"), lit(1L)).otherwise(lit(0L)))
       // dense-rank adjustment: d's before MINUS overlaps through self
@@ -1071,7 +1079,7 @@ object Skew {
           sum(col("overlap")).over(through))
       // run-group device for the boundary run's global start rank
       .withColumn("starts_run",
-        when(col("first_dt") === col("last_dt") && col("cont"), lit(0L))
+        when(col("first_dt") <=> col("last_dt") && col("cont"), lit(0L))
           .otherwise(lit(1L)))
       .withColumn("grp", sum(col("starts_run")).over(through))
     val wg = Window.partitionBy(col(spec.key), col("grp"))
@@ -1120,7 +1128,10 @@ object Skew {
         Window.partitionBy(col("pid"), col(spec.key), col(coarse))))
     val joined = joinStats(localJ, stats, Seq("pid", spec.key))
       .withColumn("rn", col("lrn") + col("offset"))
-    val rnkExpr = when(col(coarse) === col("prev_last_dt"),
+    // prev_run_start is null exactly on a key's first chunk, where a
+    // null coarse value would otherwise match the missing prev_last_dt
+    val rnkExpr = when(col("prev_run_start").isNotNull &&
+        (col(coarse) <=> col("prev_last_dt")),
       col("prev_run_start")).otherwise(col("offset") + col("lrk"))
     // extended: percent_rank and cume_dist from the same machinery.
     // percent_rank = (rank − 1) / (total − 1) needs only the boundary
@@ -1143,7 +1154,7 @@ object Skew {
             .otherwise((col("rnk") - 1).cast("double") /
               (col("total") - 1).cast("double")))
         .withColumn("cdist",
-          when(col(coarse) === col("last_dt"), col("last_val_end"))
+          when(col(coarse) <=> col("last_dt"), col("last_val_end"))
             .otherwise(col("offset") + col("lpe")).cast("double") /
             col("total").cast("double"))
         .select(spec.out.map(col) ++ Seq(col("rnk"), col("prank"),
@@ -1277,13 +1288,13 @@ object Skew {
   val MinHotRows = 2000000L
   val MinHotRowsConf = "spark.graft.window.minHotRows"
 
-  /** The dispatch decision [[windowAutoOn]] and the SQL-seam rule act
-    * on: chunked iff the profiled share clears `threshold` AND the
-    * hot key's absolute row count clears [[MinHotRows]]. Both signals
-    * come from one [[topKeyStatsSampled]] job over the frame being
-    * dispatched (the exact [[topKeyStats]] scan below the sample
-    * floor): the plan shape is decided from the data the query reads,
-    * never from statistics stored beside it. Every decision is
+  /** The dispatch decision [[windowAutoOn]] acts on: chunked iff the
+    * profiled share clears `threshold` AND the hot key's absolute row
+    * count clears [[MinHotRows]]. Both signals come from one
+    * [[topKeyStatsSampled]] job over the frame being dispatched (the
+    * exact [[topKeyStats]] scan below the sample floor): the plan
+    * shape is decided from the data the query reads, never from
+    * statistics stored beside it. Every decision is
     * recorded to [[graft.exec.QueryMetrics.recentDispatches]] with its
     * signals — an operator that silently picks physical plans needs
     * an audit trail at 100 TB.

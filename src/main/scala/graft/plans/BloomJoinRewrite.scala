@@ -3,38 +3,40 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo,
-  Expression, IsNotNull, PredicateHelper}
+  IsNotNull, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join,
   LogicalPlan, Window}
-import org.apache.spark.sql.catalyst.rules.Rule
 import graft.operators.RuntimeFilter
 
-/** Automatic sideways information passing: the opt-in optimizer rule
-  * that injects [[RuntimeFilter]]'s portable Bloom device into plain
-  * star joins — `fact JOIN dim ON k WHERE dim.selective` — without any
-  * query change. The explicit `bloom_join` operator is the engine-
-  * portable formulation a user writes by hand; this rule is ROADMAP
-  * item 9: every qualifying join gets the fact-side pre-filter for
-  * free, the way warehouse optimizers (and Spark's own builtin
-  * `InjectRuntimeFilter`, which this deliberately does not duplicate —
-  * ours is the md5/SQL-mirrorable family, so a rewritten plan stays
+/** Automatic sideways information passing: the plan rewrite that
+  * injects [[RuntimeFilter]]'s portable Bloom device into a plain star
+  * join — `fact JOIN dim ON k WHERE dim.selective` — without any query
+  * change. The explicit `bloom_join` operator is the engine-portable
+  * formulation a user writes by hand; this rewrite plants the same
+  * fact-side pre-filter in a plan that never mentions it, the way
+  * warehouse optimizers (and Spark's own builtin `InjectRuntimeFilter`,
+  * which this deliberately does not duplicate — ours is the
+  * md5/SQL-mirrorable family, so a rewritten plan stays
   * oracle-checkable) plant runtime filters.
   *
+  * It is not installed in any session: a caller applies it to the
+  * optimized plan of its own query and runs the result
+  * ([[RuntimeFilter.bloomJoinAuto]]), so no other statement on the
+  * session is rewritten. The rewrite adds k broadcast probes per fact
+  * row, a plan-shape decision the caller makes knowingly.
+  *
   * Fires only when ALL of:
-  *  - `spark.graft.rewriteBloomJoin=true` (opt-in: the rewrite adds k
-  *    broadcast probes per fact row, a plan-shape decision the user
-  *    makes knowingly — same contract as RankLimitRewrite);
   *  - the join is Inner (either side may be the fact) or LeftSemi (the
   *    left is — a Bloom pass on the preserved side only ever removes
   *    rows the join would drop anyway, so both types are sound);
   *  - both sides are scan chains (no Join / Aggregate / Window below:
   *    the rewrite targets the bottom-most star join, and — since the
-  *    rewritten fact side CONTAINS joins — this is also what makes the
-  *    rule a fixed point under the optimizer's repeated batches);
+  *    rewritten fact side CONTAINS joins — a second application leaves
+  *    the rewritten plan unchanged);
   *  - the dim side carries a real predicate (something beyond the
   *    IsNotNull conjuncts the optimizer plants on every join key);
-  *  - the fact side's estimated size is >= `minSizeRatio` x the dim
+  *  - the fact side's estimated size is >= `MinSizeRatio` (2) x the dim
   *    side's (logical stats; without CBO a Filter reports its child's
   *    size, so the ratio understates true selectivity — conservative in
   *    the right direction);
@@ -49,23 +51,9 @@ import graft.operators.RuntimeFilter
   * rewritten query's output is bit-identical to the original (PlansSpec
   * asserts both the fired plan and result equality).
   */
-object BloomJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object BloomJoinRewrite extends PredicateHelper {
 
-  val ConfKey = "spark.graft.rewriteBloomJoin"
-  val RatioKey = "spark.graft.bloomJoin.minSizeRatio"
-  val DefaultRatio = 2.0
-
-  /** Install into a session built without GraftExtensions (the
-    * TopKPlans.ensureStrategy seam for optimizer rules; experimental
-    * extraOptimizations run in their own fixed-point batch, where this
-    * rule's scan-chain guard keeps it a fixed point). Idempotent; the
-    * rule stays conf-gated either way.
-    */
-  def ensureRule(s: SparkSession): Unit = {
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(BloomJoinRewrite))
-      s.experimental.extraOptimizations = cur :+ BloomJoinRewrite
-  }
+  private val MinSizeRatio = BigDecimal(2)
 
   /** Scan chain = the plan shapes a fact/dim side of a bottom-most star
     * join has (scans, filters, projects). Anything blocking (join, agg,
@@ -99,28 +87,27 @@ object BloomJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * table built from `dim`'s keys. Output attributes (ids and order)
     * are preserved, so the surrounding join resolves unchanged.
     */
-  private def probed(fact: LogicalPlan, factKey: AttributeReference,
+  private def probed(s: SparkSession,
+                     fact: LogicalPlan, factKey: AttributeReference,
                      dim: LogicalPlan, dimKey: AttributeReference)
       : LogicalPlan = {
-    val s = SparkSession.getActiveSession.getOrElse(
-      throw new IllegalStateException(
-        "BloomJoinRewrite ran without an active SparkSession"))
     val dimKeys = GraftSqlBridge.ofRows(s, dim).select(dimKey.name)
     val words = RuntimeFilter.bloomBuild(dimKeys, dimKey.name)
     val spliced = RuntimeFilter.bloomMightContain(
       GraftSqlBridge.ofRows(s, fact), factKey.name, words)
       .queryExecution.analyzed
     // the probe `broadcast()` marks arrive as ResolvedHint nodes, but
-    // the optimizer's hint-elimination batch already ran before this
-    // rule — fold them into the probe joins' JoinHint ourselves, or
-    // the physical planner rejects the plan
+    // the rewrite runs on an optimized plan, whose hint-elimination
+    // batch already ran — fold them into the probe joins' JoinHint
+    // ourselves, or the physical planner rejects the plan
     org.apache.spark.sql.catalyst.optimizer.EliminateResolvedHint(spliced)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
-    val ratio = BigDecimal(conf.getConfString(RatioKey,
-      DefaultRatio.toString))
+  /** `plan` with every qualifying star join's fact side Bloom-probed
+    * (unchanged when none qualifies). `plan` is an optimized plan:
+    * the matcher reads its pushed-down filters and pruned columns.
+    */
+  def apply(s: SparkSession, plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case j @ Join(l, r, jt, Some(cond), _)
           if (jt == Inner || jt == LeftSemi) &&
@@ -137,16 +124,15 @@ object BloomJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           case Some((lk, rk)) =>
             val (ls, rs) =
               (BigDecimal(l.stats.sizeInBytes), BigDecimal(r.stats.sizeInBytes))
-            if (selective(r) && !selective(l) && ls >= ratio * rs &&
+            if (selective(r) && !selective(l) && ls >= MinSizeRatio * rs &&
                 nameOk(l, lk) && nameOk(r, rk) && scratchFree(l))
-              j.copy(left = probed(l, lk, r, rk))
+              j.copy(left = probed(s, l, lk, r, rk))
             else if (jt == Inner && selective(l) && !selective(r) &&
-                rs >= ratio * ls && nameOk(r, rk) && nameOk(l, lk) &&
+                rs >= MinSizeRatio * ls && nameOk(r, rk) && nameOk(l, lk) &&
                 scratchFree(r))
-              j.copy(right = probed(r, rk, l, lk))
+              j.copy(right = probed(s, r, rk, l, lk))
             else j
           case None => j
         }
     }
-  }
 }

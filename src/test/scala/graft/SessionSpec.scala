@@ -81,12 +81,11 @@ class SessionSpec extends AnyFunSuite {
     */
   val ConfKeys = Set(
     "spark.graft.ann.autoBudget", "spark.graft.ann.ladderCap",
-    "spark.graft.bloomJoin.minSizeRatio", "spark.graft.contain.profileLevel",
-    "spark.graft.groupedTopK.maxKeysPerTask", "spark.graft.rewriteBloomJoin",
-    "spark.graft.rewriteRankLimit", "spark.graft.rewriteWindowAuto",
+    "spark.graft.contain.profileLevel",
+    "spark.graft.groupedTopK.maxKeysPerTask",
     "spark.graft.window.minHotRows")
   val EnvVars = Set(
-    "SPARK_GRAFT_AQE_MIN_PART", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_REPO_ROOT", "SPARK_GRAFT_REPS", "SPARK_GRAFT_SF_DIR")
 
   test("options inventory: src/main reads exactly the listed spark.graft " +
@@ -101,5 +100,29 @@ class SessionSpec extends AnyFunSuite {
     val envs = "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text).toSet
     assert(confs === ConfKeys, s"conf keys read: ${confs.toSeq.sorted}")
     assert(envs === EnvVars, s"env vars read: ${envs.toSeq.sorted}")
+  }
+
+  test("sessions carry no engine optimizer rule, and bloom_join_auto " +
+       "leaves the session's extraOptimizations as it found them") {
+    def engineRules(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      s.sessionState.optimizer.batches.flatMap(_.rules).map(_.ruleName)
+        .filter(_.startsWith("graft."))
+    // a session built by the factory's own builder on the shared
+    // context; create() makes it the default and active session, so
+    // the shared test session is put back straight after
+    val factory =
+      try graft.engine.GraftSession.builder("graft-session-spec").create()
+      finally {
+        org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+        org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      }
+    for (s <- Seq(factory, spark, spark.newSession()))
+      assert(engineRules(s).isEmpty, engineRules(s))
+    val before = spark.experimental.extraOptimizations
+    val df = graft.operators.RuntimeFilter.bloomJoinAuto(spark,
+      "/root/testdata/sf0.001")
+    assert(df.count() > 0L)
+    assert(spark.experimental.extraOptimizations === before)
+    assert(engineRules(spark).isEmpty, engineRules(spark))
   }
 }

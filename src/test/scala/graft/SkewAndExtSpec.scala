@@ -667,12 +667,19 @@ class SkewAndExtSpec extends AnyFunSuite {
     // A generated frame: key k (a hot key at a drawn share, null keys),
     // ordering o drawn from a small domain so tie runs on o straddle
     // chunk edges, value v (nulls) closing the ordering so full-tuple
-    // ties are full duplicates (the WindowSpec contract). The range
-    // class orders on o: offsets stay in [base, base + 1500), away
-    // from Long.MinValue + w, where the plain twin overflows under
-    // ANSI (the BigInt-reference cases pin both edges).
+    // ties are full duplicates (the WindowSpec contract). o holds
+    // nulls at a drawn share (`oNulls`; up to whole chunks of them)
+    // for every class but range, whose sweep takes a non-null integral
+    // ordering: there offsets stay in [base, base + 1500), away from
+    // Long.MinValue + w, where the plain twin overflows under ANSI
+    // (the BigInt-reference cases pin both edges).
     final case class Frame(rows: Seq[(java.lang.Long, Long, java.lang.Long)],
-                           chunks: Int, desc: Boolean)
+                           chunks: Int, desc: Boolean,
+                           oNulls: Seq[Boolean]) {
+      def withOrdNulls: Seq[(java.lang.Long, java.lang.Long, java.lang.Long)] =
+        rows.zip(oNulls).map { case ((k, o, v), nul) =>
+          (k, if (nul) null else java.lang.Long.valueOf(o), v) }
+    }
     val genFrame: Gen[Frame] = for {
       // a benign frame spreads its keys three rows each, so its top
       // share (3/n, n >= 320) sits below WindowSkewShare
@@ -698,15 +705,18 @@ class SkewAndExtSpec extends AnyFunSuite {
         else java.lang.Long.valueOf(if (uh < hotShare) 1000L else k),
         base + o,
         if (uv < nullV) null else java.lang.Long.valueOf(v)))
+      nullO <- Gen.oneOf(0.0, 0.1, 0.5)
+      uos <- Gen.listOfN(n, Gen.choose(0.0, 1.0))
     } yield Frame(
       if (!benign) rows
       else rows.zipWithIndex.map { case ((_, o, v), i) =>
         (java.lang.Long.valueOf(i / 3L), o, v) },
-      chunks, desc)
+      chunks, desc, uos.map(_ < nullO))
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     val shares = Seq.newBuilder[Double]
     val descended = Set.newBuilder[String]
+    val nullOrdered = Set.newBuilder[String]
     val cases = 10
     spark.conf.set(Skew.MinHotRowsConf, "0")
     try {
@@ -718,9 +728,13 @@ class SkewAndExtSpec extends AnyFunSuite {
           rangeOrd = "o", out = Seq("k", "o", "v"),
           rangeOut = Seq("k", "o", "v"), valueAlias = "v",
           descending = f.desc && (cls == "lag" || cls == "running"))
-        val df = f.rows.toDF("k", "o", "v")
+        val ordNulls = cls != "range" && f.oNulls.contains(true)
+        val df =
+          if (cls == "range") f.rows.toDF("k", "o", "v")
+          else f.withOrdNulls.toDF("k", "o", "v")
         val what = s"$cls case $i: ${f.rows.size} rows, ${f.chunks} " +
-          s"chunks, desc=${spec.descending}"
+          s"chunks, desc=${spec.descending}, null o=$ordNulls"
+        if (ordNulls) nullOrdered += cls
         if (spec.descending) descended += cls
         org.apache.spark.TestParallelism.withDefaultParallelism(
             spark.sparkContext, f.chunks) {
@@ -731,6 +745,12 @@ class SkewAndExtSpec extends AnyFunSuite {
           val plain = Skew.windowAutoOn(spark, df, cls, 1.1, spec)
           assert(!QueryMetrics.recentDispatches.last.chunked, what)
           assert(sorted(chunked) === sorted(plain), what)
+          // the extended rank class (percent_rank, cume_dist) shares
+          // the boundary algebra
+          if (cls == "rank")
+            assert(sorted(Skew.windowRankSkewOn(spark, df, spec = spec,
+                extended = true)) ===
+              sorted(Skew.windowRankExtPlain(df, spec)), s"$what, extended")
         }
       }
     } finally spark.conf.unset(Skew.MinHotRowsConf)
@@ -740,6 +760,8 @@ class SkewAndExtSpec extends AnyFunSuite {
     assert(seen.exists(_ < Skew.WindowSkewShare) &&
       seen.exists(_ >= Skew.WindowSkewShare), seen)
     assert(descended.result() === Set("lag", "running"))
+    // ...and null ordering values on every class that takes them
+    assert(nullOrdered.result() === Set("lag", "rank", "running", "flast"))
   }
 
   test("withCheckpointScope reclaims operator-internal checkpoint " +
