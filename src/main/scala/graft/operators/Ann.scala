@@ -1329,40 +1329,16 @@ object Ann {
   val KnnGraphRecallMin = 0.85
 
   /** nTables candidates the autotuner sweeps, smallest-first. The cap
-    * (24) bounds the index-size multiplier the tuner may ever choose;
-    * if even the cap misses the floor, the tuner returns the cap and
-    * the recall audit ([[annRecall]]'s knn_lsh verdict) reports the
-    * shortfall honestly rather than silently scanning more.
+    * (24) bounds the index-size multiplier the tuner may ever choose:
+    * on a near-isotropic corpus a fixed recall needs a ~constant
+    * scanned fraction, so the floor's price grows with the corpus and
+    * the engine will not silently spend it. If even the cap misses the
+    * floor, the tuner returns the cap, the recall audit ([[annRecall]]'s
+    * knn_lsh verdict) reports the shortfall, and the serving graph
+    * buys recall back with the NN-descent refinement round
+    * ([[refineFor]]) rather than a bigger index.
     */
   val AutoTablesLadder = Seq(3, 6, 9, 12, 15, 18, 24)
-
-  /** The ladder the tuner actually sweeps: [[AutoTablesLadder]],
-    * extended with doublings (48, 96, …) up to the
-    * `spark.graft.ann.ladderCap` session conf when the operator has
-    * explicitly raised it. The DEFAULT cap stays 24 — on a
-    * near-isotropic corpus a fixed recall needs a ~constant scanned
-    * fraction, so the floor's price grows with the corpus and the
-    * engine will not silently spend it; the conf makes the floor
-    * PURCHASABLE (the measured ×100 curve lives in SCALING.md) while
-    * cap-and-report stays the default contract. The tuned choice is
-    * memoized per dir ([[tablesFor]]), so set the conf before the
-    * first query against a corpus.
-    */
-  private[graft] def ladderFor(s: SparkSession): Seq[Int] = {
-    val capConf = s.conf.getOption("spark.graft.ann.ladderCap")
-    val cap = capConf.map(_.toInt).getOrElse(AutoTablesLadder.max)
-    val ext = Iterator.iterate(AutoTablesLadder.max * 2)(_ * 2)
-      .takeWhile(_ <= cap).toSeq
-    // a configured cap that changes nothing is a silent no-op unless
-    // named: the ladder only extends in doublings of the default max
-    // (48, 96, ...), so caps below 48 leave the default ladder intact
-    if (capConf.isDefined && ext.isEmpty && cap != AutoTablesLadder.max)
-      log.warn(s"spark.graft.ann.ladderCap=$cap has no effect: the " +
-        s"ladder extends in doublings of ${AutoTablesLadder.max} " +
-        s"(48, 96, ...); serving the default ladder " +
-        AutoTablesLadder.mkString("[", ",", "]"))
-    AutoTablesLadder ++ ext
-  }
 
   /** Size-adaptive nTables for [[knnGraphBucketed]] — the recall analog
     * of [[bitsFor]], chosen by MEASUREMENT, not formula: above the
@@ -1374,7 +1350,8 @@ object Ann {
     * knows — so the tuner measures recall@[[KnnK]] per ladder rung
     * against the exact stride-audit graph ([[knnGraph]], ~
     * [[KnnAuditQueries]] queries — O(n)) and picks the SMALLEST rung
-    * meeting [[KnnGraphRecallMin]], the annAutoProbe discipline.
+    * meeting [[KnnGraphRecallMin]], the annAutoProbe discipline; when
+    * no rung meets it, the ladder's cap (see [[AutoTablesLadder]]).
     *
     * Cost shape: ONE candidate join at the ladder's maximum — a pair
     * found first by table t belongs to every rung nt > t, so per-rung
@@ -1391,7 +1368,7 @@ object Ann {
     * without running a job and every existing oracle is bit-identical.
     */
   def tablesFor(s: SparkSession, dir: String): Int = {
-    val t = tablesCache.computeIfAbsent(dir, { _ =>
+    tablesCache.computeIfAbsent(dir, { _ =>
       val n = corpusCount(s, dir)
       if (bitsFor(n) == LshBits) {
         // calibrated regime: floors measured to hold — no refinement
@@ -1399,21 +1376,7 @@ object Ann {
         Integer.valueOf(LshTables)
       } else Integer.valueOf(autotuneTables(s, dir, n))
     }).intValue()
-    // a ladder conf set AFTER the tuner memoized this corpus is inert —
-    // name it (the silent-knob ADVICE): the tuned choice serves until a
-    // fresh JVM or corpus dir
-    Option(tunedLadderCache.get(dir)).foreach { tuned =>
-      val now = ladderFor(s).mkString(",")
-      if (now != tuned)
-        log.warn(s"ann ladder conf changed after tuning memoized for " +
-          s"$dir (tuned over [$tuned], conf now gives [$now]) — still " +
-          s"serving nTables=$t; set ladder confs before the first " +
-          "query against a corpus")
-    }
-    t
   }
-  private val tunedLadderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Whether the serving graph needs the NN-descent refinement round:
     * true iff the autotuner measured that even the ladder cap misses
@@ -1442,57 +1405,15 @@ object Ann {
   def oracleTables(dirOpt: Option[String]): Int =
     dirOpt.flatMap(cachedTables).getOrElse(LshTables)
 
-  /** Budget conf letting the tuner CLOSE the recall floor itself: when
-    * the swept ladder's best rung still misses [[KnnGraphRecallMin]]
-    * and this conf authorizes more tables than the ladder's max, the
-    * tuner extends its own ladder (doublings up to the budget) and
-    * re-sweeps — the r18 `ladderCap` knob turned from a user-set dial
-    * into an engine decision under an explicit spend authorization.
-    * Default 0 = cap-and-report stays the contract: the engine never
-    * silently buys recall with index size (the measured ×100 curve —
-    * 48 tables → 0.908 at ~2× index budget — lives in SCALING.md).
+  /** The tuning sweep: the single candidate join at the ladder's max
+    * plus per-rung re-ranks (see [[tablesFor]]'s cost shape note);
+    * returns the smallest rung meeting the floor, else the max, and
+    * records whether the floor was missed for [[refineFor]].
     */
-  val AutoBudgetConf = "spark.graft.ann.autoBudget"
-
   private def autotuneTables(s: SparkSession, dir: String, n: Long): Int = {
-    val ladder0 = ladderFor(s)
-    var ladder = ladder0
-    var (chosen, recall) = sweepLadder(s, dir, n, ladder)
-    if (recall < KnnGraphRecallMin) {
-      val budget = s.conf.get(AutoBudgetConf, "0").toInt
-      val extended = ladder0 ++ Iterator.iterate(ladder0.max * 2)(_ * 2)
-        .takeWhile(_ <= budget).toSeq
-      if (extended.size > ladder0.size) {
-        log.info(s"ann autotune: ladder max ${ladder0.max} measured " +
-          f"recall $recall%.3f < $KnnGraphRecallMin — extending to " +
-          s"${extended.max} under $AutoBudgetConf=$budget and re-sweeping")
-        ladder = extended
-        val r2 = sweepLadder(s, dir, n, extended)
-        chosen = r2._1; recall = r2._2
-      }
-    }
-    // the cap-shortfall verdict drives the serving graph's refinement
-    // round (refineFor): measured, cached with the table choice
-    refineCache.put(dir, java.lang.Boolean.valueOf(
-      recall < KnnGraphRecallMin))
-    tunedLadderCache.put(dir, ladder.mkString(","))
-    log.info(s"ann autotune($dir): ladder ${ladder.mkString("[", ",", "]")}"
-      + f" -> nTables=$chosen (recall@$KnnK $recall%.3f, floor " +
-      s"$KnnGraphRecallMin${if (recall < KnnGraphRecallMin)
-        " MISSED — refinement round enabled" else ""})")
-    chosen
-  }
-
-  /** One tuning sweep over `ladder`: the single candidate join at the
-    * ladder's max plus per-rung re-ranks (see [[tablesFor]]'s cost
-    * shape note); returns the smallest rung meeting the floor (else
-    * the max) and its measured recall.
-    */
-  private def sweepLadder(s: SparkSession, dir: String, n: Long,
-                          ladder: Seq[Int]): (Int, Double) = {
     graft.functions.GraftFunctions.register(s)
     val nBits = bitsFor(n)
-    val tMax = ladder.max
+    val tMax = AutoTablesLadder.max
     val stride = strideFor(n)
     val exact = knnGraph(s, dir).select(col("src"), col("dst"))
     val sigs = (0 until tMax).map(t =>
@@ -1548,7 +1469,7 @@ object Ann {
     val wr = Window.partitionBy(col("nt"), col("src"))
       .orderBy(col("cos_r").desc, col("dst").asc)
     val perRung = pairs
-      .withColumn("nt", explode(array(ladder.map(lit): _*)))
+      .withColumn("nt", explode(array(AutoTablesLadder.map(lit): _*)))
       .filter(col("first_tbl") < col("nt"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= KnnK)
@@ -1560,10 +1481,20 @@ object Ann {
       .agg(sum(coalesce(col("hit"), lit(0))).as("n_hit"))
       .collect()
       .map(r => (r.getInt(0), r.getLong(1).toDouble / nExact)).toMap
-    val chosen = ladder
+    val chosen = AutoTablesLadder
       .find(t => recalls.getOrElse(t, 0.0) >= KnnGraphRecallMin)
-      .getOrElse(ladder.max)
-    (chosen, recalls.getOrElse(chosen, 0.0))
+      .getOrElse(tMax)
+    val recall = recalls.getOrElse(chosen, 0.0)
+    // the cap-shortfall verdict drives the serving graph's refinement
+    // round (refineFor): measured, cached with the table choice
+    refineCache.put(dir, java.lang.Boolean.valueOf(
+      recall < KnnGraphRecallMin))
+    log.info(s"ann autotune($dir): ladder " +
+      AutoTablesLadder.mkString("[", ",", "]") +
+      f" -> nTables=$chosen (recall@$KnnK $recall%.3f, floor " +
+      s"$KnnGraphRecallMin${if (recall < KnnGraphRecallMin)
+        " MISSED — refinement round enabled" else ""})")
+    chosen
   }
 
   /** Full-corpus kNN graph on the LSH bucket join (oracle-checked) —

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 import graft.sources.Tables.table
 
@@ -1575,11 +1576,9 @@ object Dedup {
     */
   private val ProfileMemoryHeadroom = 0.5
 
-  /** Storage tier for the containment gram-profile checkpoint — the
-    * r19 knob (`spark.graft.contain.profileLevel`, kept as the
-    * operator's explicit word) turned into an ENGINE decision, the
-    * repo's standing pattern: estimate the profile's deserialized
-    * footprint from the input scan's size estimate ×
+  /** Storage tier for the containment gram-profile checkpoint — an
+    * ENGINE decision, the repo's standing pattern: estimate the
+    * profile's deserialized footprint from the input scan's size estimate ×
     * [[ContainProfileExpansion]], read the cluster's remaining storage
     * memory from the executor status map, and buy the serialized tier
     * (MEMORY_AND_DISK_SER — the cold cliff halves, warm passes pay
@@ -1591,33 +1590,33 @@ object Dedup {
     * far under any real pool, a ×100 one (10 GB) far over half of it.
     */
   private[graft] def containProfileLevel(s: SparkSession,
-      input: DataFrame): org.apache.spark.storage.StorageLevel = {
-    import org.apache.spark.storage.StorageLevel
-    s.conf.getOption("spark.graft.contain.profileLevel") match {
-      case Some(lvl) => StorageLevel.fromString(lvl)
-      case None =>
-        val est = input.queryExecution.optimizedPlan.stats.sizeInBytes *
-          ContainProfileExpansion
-        val free = s.sparkContext.getExecutorMemoryStatus.values
-          .map(_._2.toDouble).sum
-        val ser = est > BigInt((free * ProfileMemoryHeadroom).toLong)
-        log.info(s"containment profile tier: est=$est bytes " +
-          s"deserialized vs free=${free.toLong} storage — " +
-          (if (ser) "MEMORY_AND_DISK_SER" else "MEMORY_AND_DISK"))
-        if (ser) StorageLevel.MEMORY_AND_DISK_SER
-        else StorageLevel.MEMORY_AND_DISK
-    }
+      input: DataFrame): StorageLevel = {
+    val est = input.queryExecution.optimizedPlan.stats.sizeInBytes *
+      ContainProfileExpansion
+    val free = s.sparkContext.getExecutorMemoryStatus.values
+      .map(_._2.toDouble).sum
+    val ser = est > BigInt((free * ProfileMemoryHeadroom).toLong)
+    log.info(s"containment profile tier: est=$est bytes " +
+      s"deserialized vs free=${free.toLong} storage — " +
+      (if (ser) "MEMORY_AND_DISK_SER" else "MEMORY_AND_DISK"))
+    if (ser) StorageLevel.MEMORY_AND_DISK_SER
+    else StorageLevel.MEMORY_AND_DISK
   }
 
+  /** `profileLevel` pins the gram-profile checkpoint's storage tier;
+    * None (the default) leaves it to [[containProfileLevel]].
+    */
   def dedupContainment(s: SparkSession, dir: String,
                        threshold: Double = ContainThreshold,
                        maxDf: Int = 0,
-                       posFilter: Boolean = true): DataFrame = {
+                       posFilter: Boolean = true,
+                       profileLevel: Option[StorageLevel] = None)
+      : DataFrame = {
     val docs = table(s, dir, "documents")
     // 0 = corpus-scaled df cut (see containMaxDfFor); explicit pins
     val (g, cand0) = containmentCandidates(s, dir, threshold,
       if (maxDf > 0) maxDf else containMaxDfFor(docCount(s, dir)),
-      posFilter = posFilter)
+      posFilter = posFilter, profileLevel = profileLevel)
     // Materialize the gated candidate pairs once (bounded: the prefix
     // theorem + positional + signature tiers cap them far below the
     // corpus), then SEMI-JOIN the gram profile down to candidate docs
@@ -1676,7 +1675,8 @@ object Dedup {
       // (explicit default here: every caller of this internal surface
       // passes the resolved cut or wants the calibration constant)
       sigPrefilter: Boolean = true,
-      posFilter: Boolean = true): (DataFrame, DataFrame) = {
+      posFilter: Boolean = true, profileLevel: Option[StorageLevel] = None)
+      : (DataFrame, DataFrame) = {
     val q = ContainGramLen
     val docs = table(s, dir, "documents")
     // The gram profile feeds FOUR consumers (prefix side, build side,
@@ -1734,9 +1734,9 @@ object Dedup {
       .withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
         .orderBy(col("df"), col("gram"))))
     // Profile checkpoint storage tier: ENGINE-decided from estimated
-    // deserialized footprint vs the free storage pool, with
-    // spark.graft.contain.profileLevel as the explicit override
-    // ([[containProfileLevel]]). The measured trade (zipf ×100,
+    // deserialized footprint vs the free storage pool
+    // ([[containProfileLevel]]) unless the caller pins `profileLevel`.
+    // The measured trade (zipf ×100,
     // REPS=3, in-session drift control — SCALING.md r19):
     //  - MEMORY_AND_DISK: coldest rep 185 s, warm reps 51–58 s (warm
     //    band 1.13) — row objects live deserialized, a cold heap pays
@@ -1751,7 +1751,7 @@ object Dedup {
     // deserialized tier when it comfortably fits (gate SFs, warm
     // services with headroom).
     val gd = gd0.localCheckpoint(eager = true,
-      storageLevel = containProfileLevel(s, docs))
+      storageLevel = profileLevel.getOrElse(containProfileLevel(s, docs)))
     val g = gd.select(col("doc_id"), col("gram"))
     val pref = gd.filter(
       col("rn") <= floor(col("n") * expr(ContainPrefixFrac)) + 1 &&

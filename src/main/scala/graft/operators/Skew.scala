@@ -926,7 +926,12 @@ object Skew {
             win.clear(); wSum = 0L; wCnt = 0L; wNonNull = 0L
             curPid = pid; curKey = key
           }
-          val v = cur.getLong(iOrd)
+          // a null ordering value is a value group of its own: its
+          // RANGE frame is exactly the key's null-ordered rows, so it
+          // takes its own totals and never enters the deque (nulls
+          // sort first and share one pid per key, so none are ghosts)
+          val nullOrd = cur.isNullAt(iOrd)
+          val v = if (nullOrd) 0L else cur.getLong(iOrd)
           // drain the whole value group first: RANGE frames include
           // PEERS, so every row of the group shares one total
           val grp = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -934,7 +939,8 @@ object Skew {
           var gCnt = 0L
           var gNonNull = 0L
           while (cur != null && cur.getInt(iPid) == pid &&
-              cur.get(iKey) == key && cur.getLong(iOrd) == v) {
+              cur.get(iKey) == key && cur.isNullAt(iOrd) == nullOrd &&
+              (nullOrd || cur.getLong(iOrd) == v)) {
             grp += cur
             if (!cur.isNullAt(iVal)) {
               gSum += cur.getLong(iVal); gNonNull += 1L
@@ -942,20 +948,24 @@ object Skew {
             gCnt += 1L
             cur = if (rows.hasNext) rows.next() else null
           }
-          // the frame's near edge, saturated: within w of
-          // Long.MinValue a wrapped v - w would evict every group
-          val lo = if (v < Long.MinValue + w) Long.MinValue else v - w
-          while (!win.isEmpty && win.peekFirst()._1 < lo) {
-            val h = win.pollFirst()
-            wSum -= h._2; wCnt -= h._3; wNonNull -= h._4
+          if (!nullOrd) {
+            // the frame's near edge, saturated: within w of
+            // Long.MinValue a wrapped v - w would evict every group
+            val lo = if (v < Long.MinValue + w) Long.MinValue else v - w
+            while (!win.isEmpty && win.peekFirst()._1 < lo) {
+              val h = win.pollFirst()
+              wSum -= h._2; wCnt -= h._3; wNonNull -= h._4
+            }
+            win.addLast((v, gSum, gCnt, gNonNull))
+            wSum += gSum; wCnt += gCnt; wNonNull += gNonNull
           }
-          win.addLast((v, gSum, gCnt, gNonNull))
-          wSum += gSum; wCnt += gCnt; wNonNull += gNonNull
-          val total = if (wNonNull == 0L) null else wSum
+          val (fSum, fCnt, fNonNull) =
+            if (nullOrd) (gSum, gCnt, gNonNull) else (wSum, wCnt, wNonNull)
+          val total = if (fNonNull == 0L) null else fSum
           grp.foreach { r =>
             if (!r.getBoolean(iGhost))
               out.enqueue(Row.fromSeq(
-                outIdx.map(r.get) ++ Seq(total, wCnt)))
+                outIdx.map(r.get) ++ Seq(total, fCnt)))
           }
         }
       }
@@ -1281,30 +1291,30 @@ object Skew {
     * any misprediction costs ≤ ~1.7×, while OUTSIDE it the decisions
     * are the ones that matter (≤ ~1M: plain wins ~2×; ≥ ~10M: chunked
     * wins 6–40×) and the floor gets every measured point right.
-    * Conf-tunable (`spark.graft.window.minHotRows`): a deployment
-    * whose windows are wide/straggler-bound lowers it toward 1M; the
-    * specs pin dispatch mechanics with it at 0.
+    * A deployment whose windows are wide/straggler-bound passes a
+    * lower `minHotRows` (toward 1M) to [[windowAutoOn]]; the specs pin
+    * dispatch mechanics with it at 0.
     */
   val MinHotRows = 2000000L
-  val MinHotRowsConf = "spark.graft.window.minHotRows"
 
   /** The dispatch decision [[windowAutoOn]] acts on: chunked iff the
     * profiled share clears `threshold` AND the hot key's absolute row
-    * count clears [[MinHotRows]]. Both signals come from one
-    * [[topKeyStatsSampled]] job over the frame being dispatched (the
-    * exact [[topKeyStats]] scan below the sample floor): the plan
+    * count clears `minHotRows` (default [[MinHotRows]]). Both signals
+    * come from one [[topKeyStatsSampled]] job over the frame being
+    * dispatched (the exact [[topKeyStats]] scan below the sample
+    * floor): the plan
     * shape is decided from the data the query reads, never from
     * statistics stored beside it. Every decision is
     * recorded to [[graft.exec.QueryMetrics.recentDispatches]] with its
     * signals — an operator that silently picks physical plans needs
     * an audit trail at 100 TB.
     */
-  def dispatchChunked(s: SparkSession, df: DataFrame, key: String,
-                      threshold: Double = WindowSkewShare): Boolean = {
-    val minHot = s.conf.get(MinHotRowsConf, MinHotRows.toString).toLong
+  def dispatchChunked(df: DataFrame, key: String,
+                      threshold: Double = WindowSkewShare,
+                      minHotRows: Long = MinHotRows): Boolean = {
     val (hot, total) = topKeyStatsSampled(df, key)
     val share = if (total == 0L) 0.0 else hot.toDouble / total
-    val verdict = total > 0L && share >= threshold && hot >= minHot
+    val verdict = total > 0L && share >= threshold && hot >= minHotRows
     graft.exec.QueryMetrics.recordDispatch(
       graft.exec.QueryMetrics.WindowDispatch(
         key, share, hot, total, verdict))
@@ -1376,9 +1386,9 @@ object Skew {
     * the key is benign and as the chunked skew rewrite when BOTH
     * signals fire — share at/above `threshold` (one reducer owns a
     * material fraction) and the hot key's absolute rows at/above
-    * [[MinHotRows]] (that reducer is genuinely the bottleneck; the
-    * measured events-×100 counterexample in the MinHotRows doc is why
-    * share alone is not enough).
+    * `minHotRows` (default [[MinHotRows]]: that reducer is genuinely
+    * the bottleneck; the measured events-×100 counterexample in the
+    * MinHotRows doc is why share alone is not enough).
     * Both branches produce IDENTICAL rows (each rewrite's oracle is
     * the literal window SQL), so the dispatch is purely a
     * physical-plan decision — the same contract as AQE's skew-join
@@ -1386,9 +1396,9 @@ object Skew {
     * for. Threshold default = [[WindowSkewShare]] (one key ≥ 1/P of
     * the rows pins a full reducer at reference parallelism P = 100);
     * at a different cluster width pass your own 1/P. A threshold
-    * above 1.0 pins the plain branch, and 0.0 with
-    * [[MinHotRowsConf]] at 0 pins the chunked one on any non-empty
-    * frame — how the specs compare the two.
+    * above 1.0 pins the plain branch, and 0.0 with `minHotRows` at 0
+    * pins the chunked one on any non-empty frame — how the specs
+    * compare the two.
     *
     * `cls`: "lag" (lag/lead/row_number), "rank" (rank/dense_rank/
     * ntile), "running" (cumulative sum + count), "range" (trailing
@@ -1400,13 +1410,14 @@ object Skew {
   def windowAutoOn(s: SparkSession, df: DataFrame, cls: String = "lag",
                    threshold: Double = WindowSkewShare,
                    spec: WindowSpec = WindowSpec.Lineitem,
-                   lagK: Int = 1): DataFrame = {
+                   lagK: Int = 1,
+                   minHotRows: Long = MinHotRows): DataFrame = {
     require(!spec.descending || cls == "lag" || cls == "running" ||
         cls == "flast",
       s"descending specs are supported for the lag/running/flast " +
         s"classes only (got '$cls') — the rank/range boundary algebra " +
         "is ascending; fail here rather than silently on one branch")
-    val skewed = dispatchChunked(s, df, spec.key, threshold)
+    val skewed = dispatchChunked(df, spec.key, threshold, minHotRows)
     cls match {
       case "lag" =>
         if (skewed) windowLagSkewOn(s, df, spec, lagK)

@@ -50,13 +50,15 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * operator is a deliberate specialization, not a universal
   * replacement — and the contract is ENFORCED, not just documented:
   * each task counts its distinct keys and fails fast past
-  * `spark.graft.groupedTopK.maxKeysPerTask` (default 1,000,000) with a
+  * `maxKeysPerTask` (default [[TopKPlans.MaxKeysPerTask]]) with a
   * pointer at the window formulation, the same honest-contract
   * treatment dedupClusters gives non-convergence. Silent degradation
   * here would be an executor OOM with no actionable message.
   */
 case class GroupedTopK(groupExprs: Seq[Expression], order: Seq[SortOrder],
-                       k: Int, child: LogicalPlan) extends UnaryNode {
+                       k: Int, child: LogicalPlan,
+                       maxKeysPerTask: Int = TopKPlans.MaxKeysPerTask)
+    extends UnaryNode {
   require(k > 0, s"k must be positive, got $k")
   require(groupExprs.nonEmpty,
     "grouped top-k needs group keys; for global top-k use orderBy().limit()" +
@@ -73,7 +75,7 @@ case class GroupedTopK(groupExprs: Seq[Expression], order: Seq[SortOrder],
   */
 object GroupedTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GroupedTopK(g, o, k, child) =>
+    case GroupedTopK(g, o, k, child, maxKeys) =>
       // normalize float group keys (NaN bit patterns, -0.0 in nested
       // fields) exactly like Window partition specs get normalized —
       // without this, distinct NaN encodings would hash to different
@@ -81,21 +83,16 @@ object GroupedTopKStrategy extends SparkStrategy {
       // row_number formulation it must match
       val gn = g.map(org.apache.spark.sql.GraftSqlBridge.normalizeFloats)
       GroupedTopKExec(gn, o, k, partial = false,
-        GroupedTopKExec(gn, o, k, partial = true, planLater(child))) :: Nil
+        GroupedTopKExec(gn, o, k, partial = true, planLater(child), maxKeys),
+        maxKeys) :: Nil
     case _ => Nil
   }
 }
 
-object GroupedTopKExec {
-  /** Per-task distinct-key ceiling — the enforced edge of the bounded-
-    * heap memory contract (see the operator scaladoc).
-    */
-  val MaxKeysPerTaskKey = "spark.graft.groupedTopK.maxKeysPerTask"
-}
-
 case class GroupedTopKExec(groupExprs: Seq[Expression],
                            order: Seq[SortOrder], k: Int, partial: Boolean,
-                           child: SparkPlan) extends UnaryExecNode {
+                           child: SparkPlan, maxKeysPerTask: Int)
+    extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def nodeName: String =
     if (partial) "GroupedTopKPartial" else "GroupedTopKFinal"
@@ -107,10 +104,8 @@ case class GroupedTopKExec(groupExprs: Seq[Expression],
   protected override def doExecute(): RDD[InternalRow] = {
     // capture only serializable expression trees; the projection and
     // generated ordering are built per-task inside the closure
-    val (gExprs, ord, childOut, kk) = (groupExprs, order, child.output, k)
-    // read driver-side (SQLConf does not travel into task closures)
-    val maxKeys = conf.getConfString(
-      GroupedTopKExec.MaxKeysPerTaskKey, "1000000").toInt
+    val (gExprs, ord, childOut, kk, maxKeys) =
+      (groupExprs, order, child.output, k, maxKeysPerTask)
     child.execute().mapPartitions { iter =>
       val groupProj = UnsafeProjection.create(gExprs, childOut)
       val ordering = new LazilyGeneratedOrdering(ord, childOut)
@@ -127,11 +122,10 @@ case class GroupedTopKExec(groupExprs: Seq[Expression],
           // bounded, or this is the wrong operator for the data
           if (heaps.size() >= maxKeys)
             throw new IllegalStateException(
-              s"GroupedTopK: task exceeded $maxKeys distinct group keys " +
-                s"(${GroupedTopKExec.MaxKeysPerTaskKey}); near-unique " +
-                "keys break the bounded-heap memory contract - use the " +
-                "sort-based window (row_number() OVER (PARTITION BY key " +
-                "ORDER BY ord) <= k), which spills, or raise the bound")
+              s"GroupedTopK: task exceeded $maxKeys distinct group keys; " +
+                "near-unique keys break the bounded-heap memory contract " +
+                "- use the sort-based window (row_number() OVER " +
+                "(PARTITION BY key ORDER BY ord) <= k), which spills")
           // start small and let the queue grow: an eager k+1 capacity
           // would allocate O(k) slots for every group even when groups
           // hold a handful of rows (k is a bound, not a size hint)
@@ -154,19 +148,23 @@ case class GroupedTopKExec(groupExprs: Seq[Expression],
 }
 
 /** DataFrame-level entry: `TopKPlans.groupedTopK(df, keys, orders, k)`.
-  * Installs the strategy into the session's experimental strategies if
-  * absent (idempotent), so it works on any session — no extensions
+  * Installs the strategy into the session's experimental strategies
+  * when its planner lacks it (a bare session; `GraftExtensions` already
+  * injects it), so it works on any session — no extensions
   * configuration required.
   */
 object TopKPlans {
-  def ensureStrategy(s: SparkSession): Unit = {
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(GroupedTopKStrategy))
-      s.experimental.extraStrategies = cur :+ GroupedTopKStrategy
-  }
+  /** Per-task distinct-key ceiling — the enforced edge of the bounded-
+    * heap memory contract (see the [[GroupedTopK]] scaladoc).
+    */
+  val MaxKeysPerTask = 1000000
+
+  def ensureStrategy(s: SparkSession): Unit =
+    if (!s.sessionState.planner.strategies.contains(GroupedTopKStrategy))
+      s.experimental.extraStrategies :+= GroupedTopKStrategy
 
   def groupedTopK(df: DataFrame, keys: Seq[Column], orders: Seq[Column],
-                  k: Int): DataFrame = {
+                  k: Int, maxKeysPerTask: Int = MaxKeysPerTask): DataFrame = {
     val session = df.sparkSession
     ensureStrategy(session)
     import org.apache.spark.sql.GraftSqlBridge.expression
@@ -176,6 +174,6 @@ object TopKPlans {
     })
     GraftSqlBridge.ofRows(session,
       GroupedTopK(keys.map(expression), sortOrders, k,
-        df.queryExecution.analyzed))
+        df.queryExecution.analyzed, maxKeysPerTask))
   }
 }

@@ -572,37 +572,23 @@ class PipelineSpec extends AnyFunSuite {
     // the profile checkpoint's storage tier is a pure physical knob:
     // the serialized level (the measured cold-cliff escape, SCALING.md
     // r19) must produce the identical verdict frame
-    try {
-      spark.conf.set("spark.graft.contain.profileLevel",
-        "MEMORY_AND_DISK_SER")
-      val vSer = graft.operators.Dedup.dedupContainment(spark, dir)
-      assert(vSer.exceptAll(vOn).count() === 0L)
-      assert(vOn.exceptAll(vSer).count() === 0L)
-    } finally spark.conf.unset("spark.graft.contain.profileLevel")
-    // the tier is now ENGINE-decided when no conf is set (vOn above
+    import org.apache.spark.storage.StorageLevel
+    val vSer = graft.operators.Dedup.dedupContainment(spark, dir,
+      profileLevel = Some(StorageLevel.MEMORY_AND_DISK_SER))
+    assert(vSer.exceptAll(vOn).count() === 0L)
+    assert(vOn.exceptAll(vSer).count() === 0L)
+    // the tier is ENGINE-decided when the caller pins none (vOn above
     // already ran the auto path): a profile that comfortably fits
     // stays deserialized, one whose estimated footprint crowds the
     // storage pool buys the serialized level — both branches pinned
     // through the estimate the decision actually reads (plan stats;
     // a triple cross join's size estimate exceeds any pool)
-    import org.apache.spark.storage.StorageLevel
     val small = spark.read.parquet(s"$dir/documents.parquet")
     assert(graft.operators.Dedup.containProfileLevel(spark, small) ===
       StorageLevel.MEMORY_AND_DISK)
     val huge = small.crossJoin(small).crossJoin(small)
     assert(graft.operators.Dedup.containProfileLevel(spark, huge) ===
       StorageLevel.MEMORY_AND_DISK_SER)
-    // and the conf remains the operator's explicit word over the
-    // engine's estimate, in both directions
-    try {
-      spark.conf.set("spark.graft.contain.profileLevel",
-        "MEMORY_AND_DISK_SER")
-      assert(graft.operators.Dedup.containProfileLevel(spark, small) ===
-        StorageLevel.MEMORY_AND_DISK_SER)
-      spark.conf.set("spark.graft.contain.profileLevel", "MEMORY_AND_DISK")
-      assert(graft.operators.Dedup.containProfileLevel(spark, huge) ===
-        StorageLevel.MEMORY_AND_DISK)
-    } finally spark.conf.unset("spark.graft.contain.profileLevel")
   }
 
   test("dedup_segments: boilerplate removed, clean text stable, totals add up") {
@@ -822,26 +808,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(refRecall > 0.0)
   }
 
-  test("ann ladder cap knob: default ladder unchanged, conf extends " +
-       "with doublings, never past the configured cap") {
-    import graft.operators.Ann
-    val key = "spark.graft.ann.ladderCap"
-    try {
-      // default: exactly the declared ladder — the cap-and-report
-      // contract's budget bound
-      spark.conf.unset(key)
-      assert(Ann.ladderFor(spark) === Ann.AutoTablesLadder)
-      // a raised cap extends with doublings of the default max…
-      spark.conf.set(key, "48")
-      assert(Ann.ladderFor(spark) === Ann.AutoTablesLadder :+ 48)
-      spark.conf.set(key, "96")
-      assert(Ann.ladderFor(spark) === Ann.AutoTablesLadder ++ Seq(48, 96))
-      // …and a cap below the next doubling changes nothing
-      spark.conf.set(key, "40")
-      assert(Ann.ladderFor(spark) === Ann.AutoTablesLadder)
-    } finally spark.conf.unset(key)
-  }
-
   /** A non-calibrated-regime corpus (n > 2048 so bitsFor widens and the
     * autotuner actually runs): `nCluster` identical vectors (their true
     * top-K are siblings, but identical vectors sign identically under
@@ -873,46 +839,26 @@ class PipelineSpec extends AnyFunSuite {
     tmp
   }
 
-  test("ann autoBudget: on a corpus whose recall floor the default " +
-       "ladder structurally misses, the tuner extends its own ladder " +
-       "under the budget conf — and never extends without it") {
+  test("ann autotune: on a corpus whose recall floor the ladder " +
+       "structurally misses, the tuner stops at the cap and enables " +
+       "the refinement round; a benign corpus meets the floor below it") {
     import graft.operators.Ann
-    // two copies of the SAME adversarial corpus (the tuner memoizes per
-    // dir): 2000 of 5000 vectors identical → ≥40% of exact edges live
-    // in cap-dropped cells, recall ≤ ~0.6 < 0.85 at every rung
-    val dirA = autotuneCorpus("abudA", 2000)
-    val dirB = autotuneCorpus("abudB", 2000)
-    try {
-      spark.conf.unset(Ann.AutoBudgetConf)
-      val tA = Ann.tablesFor(spark, dirA)
-      // cap-and-report default: the tuner stops at the ladder max and
-      // flags the shortfall for the refinement round
-      assert(tA === Ann.AutoTablesLadder.max, s"chose $tA")
-      assert(Ann.refineFor(spark, dirA),
-        "a structural miss must set the refinement verdict")
-      // budget set: the tuner extends its own ladder (doublings up to
-      // the budget) and — the miss being structural — lands on the
-      // extended max, with the shortfall still reported honestly
-      spark.conf.set(Ann.AutoBudgetConf, "96")
-      val tB = Ann.tablesFor(spark, dirB)
-      assert(tB === 96, s"budgeted tuner chose $tB, expected 96")
-      assert(Ann.refineFor(spark, dirB))
-    } finally spark.conf.unset(Ann.AutoBudgetConf)
-    // benign corpus: the floor is met inside the default ladder, so the
-    // budget must NOT extend anything (no silent index-size spend)
-    val dirC = autotuneCorpus("abudC", 0)
-    val dirD = autotuneCorpus("abudD", 0)
-    try {
-      spark.conf.unset(Ann.AutoBudgetConf)
-      val tC = Ann.tablesFor(spark, dirC)
-      assert(tC < Ann.AutoTablesLadder.max,
-        s"benign corpus unexpectedly at the cap ($tC) — floor not met?")
-      assert(!Ann.refineFor(spark, dirC))
-      spark.conf.set(Ann.AutoBudgetConf, "96")
-      val tD = Ann.tablesFor(spark, dirD)
-      assert(tD === tC, s"budget changed a floor-met choice: $tC -> $tD")
-      assert(!Ann.refineFor(spark, dirD))
-    } finally spark.conf.unset(Ann.AutoBudgetConf)
+    // adversarial corpus: 2000 of 5000 vectors identical → ≥40% of
+    // exact edges live in cap-dropped cells, recall ≤ ~0.6 < 0.85 at
+    // every rung
+    val dirA = autotuneCorpus("autotuneA", 2000)
+    val tA = Ann.tablesFor(spark, dirA)
+    // cap-and-report: the tuner stops at the ladder max and flags the
+    // shortfall for the refinement round
+    assert(tA === Ann.AutoTablesLadder.max, s"chose $tA")
+    assert(Ann.refineFor(spark, dirA),
+      "a structural miss must set the refinement verdict")
+    // benign corpus: the floor is met inside the ladder
+    val dirC = autotuneCorpus("autotuneC", 0)
+    val tC = Ann.tablesFor(spark, dirC)
+    assert(tC < Ann.AutoTablesLadder.max,
+      s"benign corpus unexpectedly at the cap ($tC) — floor not met?")
+    assert(!Ann.refineFor(spark, dirC))
   }
 
   /** Scala mirror of V.hyperplaneBucket for [[cellCapCorpus]]: bit j set

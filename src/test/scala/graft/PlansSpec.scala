@@ -87,23 +87,19 @@ class PlansSpec extends AnyFunSuite {
   }
 
   test("near-unique keys fail fast past the per-task key bound") {
-    // group by the near-unique o_orderkey with a tiny configured bound:
-    // the task must throw the honest-contract error (pointing at the
-    // window formulation), not silently build an input-sized heap map
-    val key = graft.plans.GroupedTopKExec.MaxKeysPerTaskKey
-    spark.conf.set(key, "10")
-    try {
-      val orders = spark.read.parquet(s"$dir/orders.parquet").coalesce(1)
-      val e = intercept[Exception] {
-        TopKPlans.groupedTopK(orders, Seq(col("o_orderkey")),
-          Seq(col("o_totalprice").desc), 2).count()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++
-          msgs(x.getCause))
-      assert(msgs(e).exists(m => m.contains("distinct group keys") &&
-        m.contains("row_number")))
-    } finally spark.conf.unset(key)
+    // group by the near-unique o_orderkey with a tiny bound: the task
+    // must throw the honest-contract error (pointing at the window
+    // formulation), not silently build an input-sized heap map
+    val orders = spark.read.parquet(s"$dir/orders.parquet").coalesce(1)
+    val e = intercept[Exception] {
+      TopKPlans.groupedTopK(orders, Seq(col("o_orderkey")),
+        Seq(col("o_totalprice").desc), 2, maxKeysPerTask = 10).count()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++
+        msgs(x.getCause))
+    assert(msgs(e).exists(m => m.contains("distinct group keys") &&
+      m.contains("row_number")))
     // and the same query under the default bound is fine
     val ok = TopKPlans.groupedTopK(
       spark.read.parquet(s"$dir/orders.parquet").coalesce(1),

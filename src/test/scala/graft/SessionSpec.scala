@@ -75,31 +75,42 @@ class SessionSpec extends AnyFunSuite {
     assert(allowed.forall(files.contains))
   }
 
-  /** Every option the engine reads: `spark.graft.*` conf keys (a
-    * trailing dot marks a per-key family) and `SPARK_GRAFT_*` env vars.
-    * Adding, renaming or removing an option must edit this list.
+  /** Every option the engine reads: `spark.graft.*` conf keys (none:
+    * per-operator budgets are constants or arguments) and
+    * `SPARK_GRAFT_*` env vars. Adding, renaming or removing an option
+    * must edit these lists.
     */
-  val ConfKeys = Set(
-    "spark.graft.ann.autoBudget", "spark.graft.ann.ladderCap",
-    "spark.graft.contain.profileLevel",
-    "spark.graft.groupedTopK.maxKeysPerTask",
-    "spark.graft.window.minHotRows")
+  val ConfKeys = Set.empty[String]
   val EnvVars = Set(
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
     "SPARK_GRAFT_REPO_ROOT", "SPARK_GRAFT_REPS", "SPARK_GRAFT_SF_DIR")
 
-  test("options inventory: src/main reads exactly the listed spark.graft " +
-       "conf keys and SPARK_GRAFT_ env vars") {
-    val root = Paths.get("src/main/scala")
+  private def scalaText(dir: String): String = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val text = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString("\n")
-    val confs = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)".r
-      .findAllMatchIn(text).map(_.group(1)).toSet
-    val envs = "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(text).toSet
+  }
+
+  /** A conf key as written anywhere in source: at least one key
+    * character after the prefix, so the escaped pattern below and the
+    * `spark.graft.*` wildcard in prose do not match this file itself.
+    */
+  private val ConfKey = "spark\\.graft\\.[A-Za-z0-9_][A-Za-z0-9_.]*".r
+
+  test("options inventory: src/main reads exactly the listed spark.graft " +
+       "conf keys and SPARK_GRAFT_ env vars") {
+    val main = scalaText("src/main/scala")
+    val confs = ConfKey.findAllIn(main).toSet
+    val envs = "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(main).toSet
     assert(confs === ConfKeys, s"conf keys read: ${confs.toSeq.sorted}")
     assert(envs === EnvVars, s"env vars read: ${envs.toSeq.sorted}")
+    // a spec setting a key the engine does not read pins nothing: the
+    // set is a silent no-op, so specs name only the listed keys
+    val set = ConfKey.findAllIn(scalaText("src/test/scala")).toSet
+    assert(set.subsetOf(ConfKeys), s"specs set unread conf keys: " +
+      (set -- ConfKeys).toSeq.sorted)
   }
 
   test("sessions carry no engine optimizer rule, and bloom_join_auto " +
@@ -124,5 +135,13 @@ class SessionSpec extends AnyFunSuite {
     assert(df.count() > 0L)
     assert(spark.experimental.extraOptimizations === before)
     assert(engineRules(spark).isEmpty, engineRules(spark))
+    // the extensions already inject the grouped top-k strategy, so a
+    // groupedTopK call must not append a second copy to the session
+    import org.apache.spark.sql.functions.col
+    val strategies = factory.experimental.extraStrategies
+    val top = graft.plans.TopKPlans.groupedTopK(factory.range(100)
+      .toDF("id"), Seq(col("id") % 7), Seq(col("id").desc), 2)
+    assert(top.count() === 14L)
+    assert(factory.experimental.extraStrategies === strategies)
   }
 }

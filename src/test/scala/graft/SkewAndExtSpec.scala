@@ -195,18 +195,15 @@ class SkewAndExtSpec extends AnyFunSuite {
     // the auto dispatcher serves the class: threshold 0.0 (hot-row
     // floor at 0) takes the chunked branch, 1.1 the plain window — rows
     // identical either way (the windowAutoOn contract, fifth class)
-    try {
-      spark.conf.set(Skew.MinHotRowsConf, "0")
-      val hotAuto = Skew.windowAutoOn(spark, orders, "flast", 0.0,
-        spec = Skew.OrdersFirstLast)
-      assert(hotAuto.queryExecution.executedPlan.toString.contains("pid#"))
-      assert(hotAuto.exceptAll(flP).count() === 0L)
-      val coldAuto = Skew.windowAutoOn(spark, orders, "flast", 1.1,
-        spec = Skew.OrdersFirstLast)
-      assert(!coldAuto.queryExecution.executedPlan.toString
-        .contains("pid#"))
-      assert(coldAuto.exceptAll(flP).count() === 0L)
-    } finally spark.conf.unset(Skew.MinHotRowsConf)
+    val hotAuto = Skew.windowAutoOn(spark, orders, "flast", 0.0,
+      spec = Skew.OrdersFirstLast, minHotRows = 0L)
+    assert(hotAuto.queryExecution.executedPlan.toString.contains("pid#"))
+    assert(hotAuto.exceptAll(flP).count() === 0L)
+    val coldAuto = Skew.windowAutoOn(spark, orders, "flast", 1.1,
+      spec = Skew.OrdersFirstLast, minHotRows = 0L)
+    assert(!coldAuto.queryExecution.executedPlan.toString
+      .contains("pid#"))
+    assert(coldAuto.exceptAll(flP).count() === 0L)
     // percent_rank / cume_dist
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val ext = Skew.windowRankSkewOn(spark, li,
@@ -496,10 +493,8 @@ class SkewAndExtSpec extends AnyFunSuite {
       "a tiny hot partition must not pay the chunk machinery")
     // floor lowered to 0: share alone decides — the rest of this test
     // pins the share signal's mechanics on executed plans
-    spark.conf.set(Skew.MinHotRowsConf, "0")
-    try {
-    val plainPick = Skew.windowAutoOn(spark, uniform)
-    val chunkPick = Skew.windowAutoOn(spark, skewed)
+    val plainPick = Skew.windowAutoOn(spark, uniform, minHotRows = 0L)
+    val chunkPick = Skew.windowAutoOn(spark, skewed, minHotRows = 0L)
     // dispatch pinned on EXECUTED plans (the chunked rewrite's
     // signature is the spark_partition_id chunk column; the plain
     // branch must be one Window with no chunk machinery)
@@ -531,14 +526,13 @@ class SkewAndExtSpec extends AnyFunSuite {
     assert(literal.exceptAll(chunkPick).count() === 0L)
     // per-class dispatch: every window class obeys the same verdict
     for (cls <- Seq("rank", "running", "range")) {
-      assert(!Skew.windowAutoOn(spark, uniform, cls).queryExecution
-        .executedPlan.toString.contains("pid#"),
+      assert(!Skew.windowAutoOn(spark, uniform, cls, minHotRows = 0L)
+        .queryExecution.executedPlan.toString.contains("pid#"),
         s"class $cls must run plain below the threshold")
-      assert(Skew.windowAutoOn(spark, skewed, cls).queryExecution
-        .executedPlan.toString.contains("pid#"),
+      assert(Skew.windowAutoOn(spark, skewed, cls, minHotRows = 0L)
+        .queryExecution.executedPlan.toString.contains("pid#"),
         s"class $cls must run chunked above the threshold")
     }
-    } finally spark.conf.unset(Skew.MinHotRowsConf)
   }
 
   test("windowAuto on a second table shape (events keyed on user_id): " +
@@ -557,13 +551,13 @@ class SkewAndExtSpec extends AnyFunSuite {
     // floor at 0 for the mechanics pin: the planted hot key is tiny in
     // ABSOLUTE rows, which the default floor correctly leaves plain
     // (the first dispatch test pins that signal)
-    spark.conf.set(Skew.MinHotRowsConf, "0")
-    try {
+    def auto(df: org.apache.spark.sql.DataFrame, cls: String) =
+      Skew.windowAutoOn(spark, df, cls, spec = spec, minHotRows = 0L)
     for (cls <- Seq("lag", "rank", "running", "range")) {
-      assert(!Skew.windowAutoOn(spark, uniform, cls, spec = spec)
+      assert(!auto(uniform, cls)
         .queryExecution.executedPlan.toString.contains("pid#"),
         s"events/$cls must run plain below the threshold")
-      assert(Skew.windowAutoOn(spark, skewed, cls, spec = spec)
+      assert(auto(skewed, cls)
         .queryExecution.executedPlan.toString.contains("pid#"),
         s"events/$cls must run chunked above the threshold")
     }
@@ -577,7 +571,7 @@ class SkewAndExtSpec extends AnyFunSuite {
       lag(col("value"), 1).over(wf).as("prev_val"),
       lead(col("value"), 1).over(wf).as("next_val"),
       row_number().over(wf).cast("long").as("rn"))
-    val lagChunk = Skew.windowAutoOn(spark, skewed, "lag", spec = spec)
+    val lagChunk = auto(skewed, "lag")
     assert(lagChunk.exceptAll(lagLit).count() === 0L)
     assert(lagLit.exceptAll(lagChunk).count() === 0L)
     val wd = Window.partitionBy(col("user_id")).orderBy(col("event_type"))
@@ -586,7 +580,7 @@ class SkewAndExtSpec extends AnyFunSuite {
       rank().over(wd).cast("long").as("rnk"),
       dense_rank().over(wd).cast("long").as("drank"),
       ntile(4).over(wf).cast("long").as("bucket"))
-    val rankChunk = Skew.windowAutoOn(spark, skewed, "rank", spec = spec)
+    val rankChunk = auto(skewed, "rank")
     assert(rankChunk.exceptAll(rankLit).count() === 0L)
     assert(rankLit.exceptAll(rankChunk).count() === 0L)
     // real coarse ties (the boundary machinery's food): rnk != drank
@@ -597,7 +591,7 @@ class SkewAndExtSpec extends AnyFunSuite {
       col("event_type"), col("value"),
       sum(col("value").cast("long")).over(wr).as("rng_sum"),
       count(lit(1)).over(wr).as("rng_n"))
-    val rangeChunk = Skew.windowAutoOn(spark, skewed, "range", spec = spec)
+    val rangeChunk = auto(skewed, "range")
     assert(rangeChunk.exceptAll(rangeLit).count() === 0L)
     assert(rangeLit.exceptAll(rangeChunk).count() === 0L)
     val wrun = wf.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -605,10 +599,9 @@ class SkewAndExtSpec extends AnyFunSuite {
       col("event_type"), col("value"),
       sum(col("value").cast("long")).over(wrun).as("running_val"),
       count(lit(1)).over(wrun).as("rn"))
-    val runChunk = Skew.windowAutoOn(spark, skewed, "running", spec = spec)
+    val runChunk = auto(skewed, "running")
     assert(runChunk.exceptAll(runLit).count() === 0L)
     assert(runLit.exceptAll(runChunk).count() === 0L)
-    } finally spark.conf.unset(Skew.MinHotRowsConf)
   }
 
   test("sampled profile dispatches identically to the exact scan on " +
@@ -668,14 +661,14 @@ class SkewAndExtSpec extends AnyFunSuite {
     // ordering o drawn from a small domain so tie runs on o straddle
     // chunk edges, value v (nulls) closing the ordering so full-tuple
     // ties are full duplicates (the WindowSpec contract). o holds
-    // nulls at a drawn share (`oNulls`; up to whole chunks of them)
-    // for every class but range, whose sweep takes a non-null integral
-    // ordering: there offsets stay in [base, base + 1500), away from
-    // Long.MinValue + w, where the plain twin overflows under ANSI
-    // (the BigInt-reference cases pin both edges).
+    // nulls at a drawn share (`oNulls`; up to whole chunks of them) on
+    // every class; its non-null offsets stay in [base, base + 1500),
+    // away from Long.MinValue + w, where range's plain twin overflows
+    // under ANSI (the BigInt-reference cases pin both edges). The lag
+    // class runs at a drawn offset `lagK`.
     final case class Frame(rows: Seq[(java.lang.Long, Long, java.lang.Long)],
                            chunks: Int, desc: Boolean,
-                           oNulls: Seq[Boolean]) {
+                           oNulls: Seq[Boolean], lagK: Int) {
       def withOrdNulls: Seq[(java.lang.Long, java.lang.Long, java.lang.Long)] =
         rows.zip(oNulls).map { case ((k, o, v), nul) =>
           (k, if (nul) null else java.lang.Long.valueOf(o), v) }
@@ -707,61 +700,65 @@ class SkewAndExtSpec extends AnyFunSuite {
         if (uv < nullV) null else java.lang.Long.valueOf(v)))
       nullO <- Gen.oneOf(0.0, 0.1, 0.5)
       uos <- Gen.listOfN(n, Gen.choose(0.0, 1.0))
+      lagK <- Gen.oneOf(1, 2, 3)
     } yield Frame(
       if (!benign) rows
       else rows.zipWithIndex.map { case ((_, o, v), i) =>
         (java.lang.Long.valueOf(i / 3L), o, v) },
-      chunks, desc, uos.map(_ < nullO))
+      chunks, desc, uos.map(_ < nullO), lagK)
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     val shares = Seq.newBuilder[Double]
     val descended = Set.newBuilder[String]
     val nullOrdered = Set.newBuilder[String]
+    val lagKs = Set.newBuilder[Int]
     val cases = 10
-    spark.conf.set(Skew.MinHotRowsConf, "0")
-    try {
-      for ((cls, ci) <- Seq("lag", "rank", "running", "range", "flast")
-             .zipWithIndex; i <- 0 until cases) {
-        val f = genFrame.apply(Gen.Parameters.default,
-          rng.Seed(1000L * ci + i)).get
-        val spec = WindowSpec(key = "k", ord = Seq("o", "v"), value = "v",
-          rangeOrd = "o", out = Seq("k", "o", "v"),
-          rangeOut = Seq("k", "o", "v"), valueAlias = "v",
-          descending = f.desc && (cls == "lag" || cls == "running"))
-        val ordNulls = cls != "range" && f.oNulls.contains(true)
-        val df =
-          if (cls == "range") f.rows.toDF("k", "o", "v")
-          else f.withOrdNulls.toDF("k", "o", "v")
-        val what = s"$cls case $i: ${f.rows.size} rows, ${f.chunks} " +
-          s"chunks, desc=${spec.descending}, null o=$ordNulls"
-        if (ordNulls) nullOrdered += cls
-        if (spec.descending) descended += cls
-        org.apache.spark.TestParallelism.withDefaultParallelism(
-            spark.sparkContext, f.chunks) {
-          assert(spark.sparkContext.defaultParallelism === f.chunks)
-          val chunked = Skew.windowAutoOn(spark, df, cls, 0.0, spec)
-          assert(QueryMetrics.recentDispatches.last.chunked, what)
-          shares += QueryMetrics.recentDispatches.last.share
-          val plain = Skew.windowAutoOn(spark, df, cls, 1.1, spec)
-          assert(!QueryMetrics.recentDispatches.last.chunked, what)
-          assert(sorted(chunked) === sorted(plain), what)
-          // the extended rank class (percent_rank, cume_dist) shares
-          // the boundary algebra
-          if (cls == "rank")
-            assert(sorted(Skew.windowRankSkewOn(spark, df, spec = spec,
-                extended = true)) ===
-              sorted(Skew.windowRankExtPlain(df, spec)), s"$what, extended")
-        }
+    for ((cls, ci) <- Seq("lag", "rank", "running", "range", "flast")
+           .zipWithIndex; i <- 0 until cases) {
+      val f = genFrame.apply(Gen.Parameters.default,
+        rng.Seed(1000L * ci + i)).get
+      val spec = WindowSpec(key = "k", ord = Seq("o", "v"), value = "v",
+        rangeOrd = "o", out = Seq("k", "o", "v"),
+        rangeOut = Seq("k", "o", "v"), valueAlias = "v",
+        descending = f.desc && (cls == "lag" || cls == "running"))
+      val ordNulls = f.oNulls.contains(true)
+      val df = f.withOrdNulls.toDF("k", "o", "v")
+      val what = s"$cls case $i: ${f.rows.size} rows, ${f.chunks} " +
+        s"chunks, desc=${spec.descending}, null o=$ordNulls, k=${f.lagK}"
+      if (ordNulls) nullOrdered += cls
+      if (spec.descending) descended += cls
+      if (cls == "lag") lagKs += f.lagK
+      def auto(threshold: Double) = Skew.windowAutoOn(spark, df, cls,
+        threshold, spec, lagK = f.lagK, minHotRows = 0L)
+      org.apache.spark.TestParallelism.withDefaultParallelism(
+          spark.sparkContext, f.chunks) {
+        assert(spark.sparkContext.defaultParallelism === f.chunks)
+        val chunked = auto(0.0)
+        assert(QueryMetrics.recentDispatches.last.chunked, what)
+        shares += QueryMetrics.recentDispatches.last.share
+        val plain = auto(1.1)
+        assert(!QueryMetrics.recentDispatches.last.chunked, what)
+        assert(sorted(chunked) === sorted(plain), what)
+        // the extended rank class (percent_rank, cume_dist) shares
+        // the boundary algebra
+        if (cls == "rank")
+          assert(sorted(Skew.windowRankSkewOn(spark, df, spec = spec,
+              extended = true)) ===
+            sorted(Skew.windowRankExtPlain(df, spec)), s"$what, extended")
       }
-    } finally spark.conf.unset(Skew.MinHotRowsConf)
+    }
     // the generator reached both sides of the dispatch threshold, and
     // DESC orderings on both classes that take them
     val seen = shares.result()
     assert(seen.exists(_ < Skew.WindowSkewShare) &&
       seen.exists(_ >= Skew.WindowSkewShare), seen)
     assert(descended.result() === Set("lag", "running"))
-    // ...and null ordering values on every class that takes them
-    assert(nullOrdered.result() === Set("lag", "rank", "running", "flast"))
+    // ...null ordering values on every class...
+    assert(nullOrdered.result() ===
+      Set("lag", "rank", "running", "range", "flast"))
+    // ...and lag offsets both at 1 and above it
+    val ks = lagKs.result()
+    assert(ks.contains(1) && ks.exists(_ > 1), ks)
   }
 
   test("withCheckpointScope reclaims operator-internal checkpoint " +
