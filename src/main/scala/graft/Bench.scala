@@ -52,8 +52,8 @@ object Bench {
          if pass < repsFor(name)) {
       val t0 = System.nanoTime()
       // withCheckpointScope: dead operator-internal localCheckpoint
-      // blocks (the chunked skew windows' chunk pins) are reclaimed as
-      // the rep completes — engine behavior now
+      // blocks (Dedup, Ann, Graph, Curation, Maintenance) are reclaimed
+      // as the rep completes — engine behavior now
       // (graft.engine.CheckpointScope), not a harness courtesy; each
       // rep rebuilds its query from scratch, so the reap can never
       // invalidate a future read.

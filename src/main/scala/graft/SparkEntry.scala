@@ -3109,12 +3109,11 @@ object SparkEntry {
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY event_type, ts,
         event_id, value)""",
-    // window_lag_k: the general-offset lag/lead chunked rewrite at
-    // k = 3 — a k-offset neighbor can live several chunks away, so
-    // the scalar edge stats become bounded edge ARRAYS stitched along
-    // the chunk sequence (Skew.windowLagKSkewOn); oracle = the
-    // literal offset-3 window SQL, chunked branch pinned like
-    // window_lag_skew
+    // window_lag_k: the chunked lag/lead rewrite at k = 3 — a
+    // k-offset neighbor can live several chunks away, so bounded edge
+    // ARRAYS are stitched along the chunk sequence
+    // (Skew.windowLagSkewOn); oracle = the literal offset-3 window
+    // SQL, chunked branch pinned like window_lag_skew
     "window_lag_k" -> """
       SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate, l_quantity,
         lag(l_quantity, 3) OVER w AS prev_qty,
@@ -3169,8 +3168,8 @@ object SparkEntry {
     // window_auto_desc: the r20 descending flip (WindowSpec.descending)
     // under the literal DESC window SQL — DESC NULLS LAST is both
     // engines' default and the exact reverse of ASC NULLS FIRST, the
-    // total-order argument the chunked rewrite's min_by/max_by swap
-    // rides; both dispatch branches stay row-identical
+    // total-order argument the chunked rewrite's range chunks ride;
+    // both dispatch branches stay row-identical
     "window_auto_desc" -> """
       SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate, l_quantity,
         lag(l_quantity, 1) OVER w AS prev_qty,

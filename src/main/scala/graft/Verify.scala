@@ -22,7 +22,8 @@ object Verify {
       .foreach { case (name, fn) =>
       // scoped reclaim of operator-internal checkpoint pins (see
       // graft.engine.CheckpointScope) — 190+ queries in one session
-      // would otherwise accumulate every chunked window's blocks
+      // would otherwise accumulate every Dedup, Ann, Graph, Curation
+      // and Maintenance checkpoint
       try graft.engine.CheckpointScope.withCheckpointScope(spark) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -3,10 +3,11 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 /** Scoped lifecycle for operator-internal pinned RDDs — the
-  * `localCheckpoint` blocks the chunked skew windows
-  * ([[graft.operators.Skew]]) and `assign_row_ids`
-  * ([[graft.operators.Maintenance]]) use to pin ONE physical chunk
-  * assignment for their multiple consumers. Those blocks are
+  * `localCheckpoint` blocks that [[graft.operators.Dedup]],
+  * [[graft.operators.Ann]], [[graft.operators.Graph]],
+  * [[graft.operators.Curation]] and [[graft.operators.Maintenance]]
+  * (`assign_row_ids`) use to pin one materialized frame for several
+  * consumers. Those blocks are
   * unreachable once the query's action completes (each invocation
   * rebuilds its plan from scratch), but Spark only reclaims them at
   * the ContextCleaner's periodic GC — far longer than a bench session

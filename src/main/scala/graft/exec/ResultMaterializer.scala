@@ -85,9 +85,9 @@ object ResultMaterializer {
   def materialize(df: DataFrame, root: String, queryId: String): ResultSet = {
     val dir = Paths.get(root, queryId)
     // scoped reclaim of operator-internal checkpoint pins: once the
-    // write completes the plan is spent, so whatever it pinned
-    // (chunked-window chunk assignments) is dead weight in a
-    // long-lived serving session
+    // write completes the plan is spent, so whatever it pinned (the
+    // Dedup, Ann, Graph, Curation and Maintenance checkpoints) is dead
+    // weight in a long-lived serving session
     graft.engine.CheckpointScope.withCheckpointScope(df.sparkSession) {
       df.write.mode("overwrite").parquet(dir.toString)
     }

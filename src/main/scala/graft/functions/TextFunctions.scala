@@ -56,9 +56,10 @@ object TextFunctions {
     *
     * The lambda runs interpreted (higher-order functions skip codegen),
     * but the hash itself is the digest-bytes fast path and documents
-    * bound the gram count — for corpora where this pass dominates, the
-    * codegen'd `rabin_winnow` expression is the perf path (same
-    * windowing algorithm, pinned equivalent in WinnowSpec).
+    * bound the gram count. The compiled `md5_winnow_set` /
+    * `md5_gram_min` expressions are its codegen'd twins (value-equal,
+    * pinned in WinnowSpec); `rabin_winnow` runs the same windowing over
+    * a different hash base.
     */
   def gramHashes(text: Column, k: Int = WinnowK): Column = {
     val m = length(text) - k + 1

@@ -664,7 +664,7 @@ object Dedup {
     // build time). Bucket pruning pays on BATCH-sized probes, which is
     // where it runs: DedupStream.processBatch / the ingest benches.
     val index = s.read.parquet(minhashIndexPath(s, dir)).drop("pb")
-    incrementalVerdicts(s, delta, minhashBands(s, delta), index,
+    incrementalVerdicts(delta, minhashBands(s, delta), index,
       docsRaw.select(col("doc_id"), col("text")), threshold)
   }
 
@@ -678,10 +678,10 @@ object Dedup {
     * arithmetic — the streaming spec's verdict-equality proof depends
     * on it.
     */
-  private[graft] def incrementalVerdicts(s: SparkSession, delta: DataFrame,
+  private[graft] def incrementalVerdicts(delta: DataFrame,
       bandsD: DataFrame, index: DataFrame, partners: DataFrame,
       threshold: Double): DataFrame =
-    incrementalVerify(s, delta,
+    incrementalVerify(delta,
       incrementalCandidates(bandsD, index, threshold), partners, threshold)
 
   /** Tier-1 candidate generation of the incremental shape: delta bands
@@ -727,7 +727,7 @@ object Dedup {
     * corpus size, and the pair texts and Jaccard arithmetic are
     * byte-identical to the two-join shape — the oracle is untouched.
     */
-  private[graft] def incrementalVerify(s: SparkSession, delta: DataFrame,
+  private[graft] def incrementalVerify(delta: DataFrame,
       candidates: DataFrame, partners: DataFrame,
       threshold: Double): DataFrame = {
     val melted = candidates
@@ -1090,29 +1090,21 @@ object Dedup {
     * buckets doubles as an IDF filter (common boilerplate carries no
     * dedup signal).
     *
-    * Fingerprints come from the md5-gram SQL device by default
+    * Fingerprints come from the md5-gram SQL device
     * (TextFunctions.gramHashes/windowMins — hash-checked against a
-    * DuckDB mirror of the whole pipeline); `rabin = true` swaps in the
-    * codegen'd rolling-hash expression (same windowing algorithm —
-    * pinned in WinnowSpec — different hash base, so fingerprints and
-    * hence verdicts can differ on boundary pairs) for corpora where the
-    * gram pass dominates.
+    * DuckDB mirror of the whole pipeline).
     */
   def dedupWinnow(s: SparkSession, dir: String,
                   minShared: Int = MinSharedFps,
-                  minRatio: Double = MinSharedRatio,
-                  rabin: Boolean = false): DataFrame = {
+                  minRatio: Double = MinSharedRatio): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    import graft.functions.{TextFunctions => T}
     val docs = table(s, dir, "documents")
     val par = s.sparkContext.defaultParallelism
     // md5_winnow_set is the COMPILED twin of the SQL-device formulation
     // array_distinct(T.windowMins(T.gramHashes(text))) — value-identical
     // (pinned in WinnowSpec), ~40x faster (one codegen'd call per row vs
     // interpreted per-window slice lambdas)
-    val fpSet =
-      if (rabin) array_distinct(expr("rabin_winnow(text)"))
-      else expr("md5_winnow_set(text)")
+    val fpSet = expr("md5_winnow_set(text)")
     // per-doc fp dedup happens INSIDE the row (array_distinct before the
     // explode) — a post-explode distinct() would shuffle the whole
     // fingerprint stream for the same result

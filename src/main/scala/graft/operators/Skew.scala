@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Relational.dsum
 import graft.sources.Tables.table
 
 /** Parameterization of the skew-window family: which columns play the
@@ -51,8 +51,8 @@ final case class WindowSpec(
   /** Window-order sort expressions for the row-frame classes. An
     * all-DESC (nulls-last) ordering is the exact REVERSE of the
     * all-ASC nulls-first total order, so the lag/running rewrites flip
-    * mechanically: range-partition and window-sort on these, and swap
-    * first/last edge stats ([[Skew.windowLagSkewOn]]). The rank and
+    * mechanically: range-partition and window-sort on these; their edge
+    * values are picked by local row number, which needs no flip. The rank and
     * range classes refuse descending specs (their boundary algebra is
     * written against the ascending sweep).
     */
@@ -213,8 +213,6 @@ object Skew {
   }
 
   // ------------------------- deterministic range-chunk assignment
-  // (r21 optimization round: replaces the RangePartitioner sample +
-  // eager localCheckpoint scaffold of the row-frame chunked classes)
 
   /** Rows collected by the one chunk-bounds sampling pass, and the cap
     * on how many chunks the expression-based assignment serves. Beyond
@@ -313,7 +311,8 @@ object Skew {
     }
   }
 
-  /** The chunk bounds: ONE bottom-k job (seeded per-row rank,
+  /** The chunk bounds under the `fields` order ((column, descending)
+    * pairs): ONE bottom-k job (seeded per-row rank,
     * per-partition top-k heap + driver merge — a uniform row sample),
     * sorted on the driver, bounds picked at stride. Bound quality
     * affects BALANCE only — any monotone bound set yields correct
@@ -324,45 +323,43 @@ object Skew {
     * md5-over-the-sort-tuple rank was measured at ~1.5 s single-task
     * on the bench's one-split scans — pure overhead).
     */
-  private[graft] def chunkBounds(df: DataFrame, spec: WindowSpec,
-      chunks: Int): IndexedSeq[Row] = {
+  private[graft] def chunkBounds(df: DataFrame,
+      fields: Seq[(String, Boolean)], chunks: Int): IndexedSeq[Row] = {
     if (chunks <= 1) return IndexedSeq.empty
-    val sortFields = spec.key +: spec.ord
     val n = math.min(chunks * 64, ChunkSampleMax)
     val rows = df
-      .select(sortFields.map(col) :+ rand(ProfileSeed).as("_cbr"): _*)
+      .select(fields.map(f => col(f._1)) :+ rand(ProfileSeed).as("_cbr"): _*)
       .orderBy(col("_cbr")).limit(n)
       .drop("_cbr")
       .collect()
     if (rows.isEmpty) return IndexedSeq.empty
-    val dirs = (false +: spec.ord.map(_ => spec.descending)).toIndexedSeq
-    val sorted = rows.sorted(boundRowOrdering(dirs))
+    val sorted = rows.sorted(boundRowOrdering(fields.map(_._2).toIndexedSeq))
     (1 until chunks).map { i =>
       sorted(math.min(sorted.length - 1, i * sorted.length / chunks))
     }.toIndexedSeq
   }
 
+  /** One chunk bound set over `df` under the `fields` order: the chunk
+    * count (the cluster width, capped at [[ChunkExprMax]]) and the
+    * search mapping a column tuple in that order to its chunk id. Every
+    * search a caller stamps comes from this one bound set, so each is a
+    * pure function of the row's values.
+    */
+  private def chunkSearch(s: SparkSession, df: DataFrame,
+      fields: Seq[(String, Boolean)]): (Int, Seq[String] => Column) = {
+    val chunks = math.min(s.sparkContext.defaultParallelism, ChunkExprMax)
+    val bounds = chunkBounds(df, fields, chunks)
+    (chunks, cols => boundSearchTree(cols.zip(fields.map(_._2)), bounds, 0,
+      bounds.length).cast("int"))
+  }
+
   /** Deterministic chunk assignment for the row-frame chunked window
     * classes: project the spec's columns and stamp `pid` — the row's
     * range chunk under the (key, ordering...) order — computed by a
-    * codegen'd binary search against driver-collected bounds.
-    *
-    * This replaces the previous `repartitionByRange +
-    * spark_partition_id + localCheckpoint` scaffold (guide §1.2 /
-    * §2.4): the checkpoint existed ONLY to pin a nondeterministic
-    * physical assignment (RangePartitioner's sample seed) so the two
-    * consumers (local windows, edge stats) could not diverge. With
-    * pid a pure function of the row's values and a bound set
-    * collected once on the driver, divergence is impossible by
-    * construction, so the full-corpus materialization (checkpoint
-    * write + pinned blocks + the non-replicated-block failure mode at
-    * cluster scale) and the RangePartitioner sampling pass both
-    * disappear; what remains is one bottom-k sampling job over the
-    * sort columns. A hot key still splits across its pid range exactly
-    * as before. The range class (r22) uses the same bound-search
-    * device directly — purity makes its ghost targets a per-row
-    * expression ([[windowRangeSkewOn]]), so it no longer needs
-    * pid-pure physical partitions at all.
+    * codegen'd binary search against driver-collected bounds
+    * ([[chunkSearch]]). pid is a pure function of the row's values, so
+    * every consumer of the frame sees the same assignment, and a hot
+    * key splits across a contiguous pid range.
     *
     * `cluster`: when true (the lag/running/rank classes), ONE explicit
     * hash exchange on (pid, key) is planted so that both consumers —
@@ -371,24 +368,20 @@ object Skew {
     * (guide §2.4: two operations keyed the same way share one
     * exchange); without it each consumer's first stage (window map
     * side, stats partial aggregate) runs at the SCAN's parallelism,
-    * which on an under-split table is one task (measured: the lag
-    * class's min_by/max_by edge stats single-task cost exceeded the
-    * entire saved checkpoint). Exchange reuse is an optimization here,
-    * never a correctness dependence — pid is deterministic, so a
-    * defeated reuse recomputes the identical assignment. The firstlast
-    * class passes false: its OUTPUT path is a bare broadcast join onto
-    * the rows (no clustering requirement at all), so planting the
-    * exchange would add a corpus shuffle its plan no longer needs.
+    * which on an under-split table is one task. Exchange reuse is an
+    * optimization here, never a correctness dependence — pid is
+    * deterministic, so a defeated reuse recomputes the identical
+    * assignment. The firstlast class passes false: its OUTPUT path is
+    * a bare broadcast join onto the rows (no clustering requirement at
+    * all), so planting the exchange would add a corpus shuffle its
+    * plan does not need.
     */
   private[graft] def rangeChunked(s: SparkSession, df: DataFrame,
       spec: WindowSpec, cluster: Boolean = true): DataFrame = {
-    val chunks =
-      math.min(s.sparkContext.defaultParallelism, ChunkExprMax)
     val projected = df.select(spec.keep.map(col): _*)
-    val bounds = chunkBounds(projected, spec, chunks)
     val fields = (spec.key, false) +: spec.ord.map(o => (o, spec.descending))
-    val stamped = projected.withColumn("pid",
-      boundSearchTree(fields, bounds, 0, bounds.length).cast("int"))
+    val (_, pidOf) = chunkSearch(s, projected, fields)
+    val stamped = projected.withColumn("pid", pidOf(fields.map(_._1)))
     if (cluster) stamped.repartition(col("pid"), col(spec.key))
     else stamped
   }
@@ -407,36 +400,81 @@ object Skew {
       .drop(cols.map(c => s"_js_$c"): _*)
   }
 
-  /** Skew-resilient lag/lead/row_number — the chunked two-pass rewrite
-    * of the per-key ordered window, for when ONE key owns a material
-    * share of the fact table (the measured zipf worst case: the plain
-    * `window_lag_lead` ran 42.7x at the x100 hot-key corpus because a
-    * single user's window partition cannot split; SCALING.md). Result
-    * IDENTICAL to the plain window (the oracle is the literal
-    * LAG/LEAD/ROW_NUMBER SQL — the same proof device as saltedJoin /
-    * aggTwoPhase), but no task ever holds more than ~1/P of any key:
+  /** The chunk plan of the lag, running, rank and first/last classes:
+    * the range-chunked rows ([[rangeChunked]]), the windows over them,
+    * and the join that brings per-(chunk, key) stats back. A class adds
+    * its local window columns to `ranged`, aggregates its stats per
+    * (pid, key), and projects its fix-up columns through [[output]].
+    */
+  private final class ChunkPlan(s: SparkSession, df: DataFrame,
+      spec: WindowSpec, cluster: Boolean = true) {
+    val ranged: DataFrame = rangeChunked(s, df, spec, cluster)
+    /** One key's rows inside one chunk; `local` in window order. */
+    val group = Window.partitionBy(col("pid"), col(spec.key))
+    val local = group.orderBy(spec.ordSorted: _*)
+    /** One key's chunks in range order; `before` frames the earlier ones. */
+    val byChunk = Window.partitionBy(col(spec.key)).orderBy(col("pid"))
+    val before = byChunk.rowsBetween(Window.unboundedPreceding, -1)
+    /** Over a stats frame: the key's row count (`cnt`) in earlier chunks,
+      * which turns a local row number into the global one.
+      */
+    val offset: Column = coalesce(sum(col("cnt")).over(before), lit(0L))
+    /** `stats` joined back onto `rows`, projected to the spec's
+      * passthrough columns and `cols`.
+      */
+    def output(rows: DataFrame, stats: DataFrame, cols: Column*): DataFrame =
+      joinStats(rows, stats, Seq("pid", spec.key))
+        .select(spec.out.map(col) ++ cols: _*)
+  }
+
+  /** The values `v` of the rows where `pick` holds, as an array sorted
+    * on `at`. Each value rides a struct through collect_list, which
+    * would silently drop a bare null.
+    */
+  private def orderedValues(at: Column, v: Column,
+      pick: Column = lit(true)): Column =
+    transform(array_sort(collect_list(when(pick,
+      struct(at.as("i"), v.as("v"))))), _.getField("v"))
+
+  /** Skew-resilient lag/lead/row_number at offset k — the chunked
+    * two-pass rewrite of the per-key ordered window, for when ONE key
+    * owns a material share of the fact table (the measured zipf worst
+    * case: the plain `window_lag_lead` ran 42.7x at the x100 hot-key
+    * corpus because a single user's window partition cannot split;
+    * SCALING.md). Result IDENTICAL to the plain window (the oracle is
+    * the literal LAG/LEAD/ROW_NUMBER SQL — the same proof device as
+    * saltedJoin / aggTwoPhase), but no task ever holds more than ~1/P
+    * of any key:
     *
     *  1. range-partition by (key, ordering...) into P chunks — a hot
     *     key spans several CONTIGUOUS chunks instead of one partition;
     *  2. window over (chunk, key): local row_number + local lag/lead —
     *     the exchange is keyed on (pid, key), so the hot key's rows
     *     split across its chunks;
-    *  3. one tiny per-(chunk, key) stats aggregate (count, first/last
-    *     value in ordering position — min_by/max_by on the ordering
-    *     struct): cumulative counts give each chunk's global row-number
-    *     offset, and lag/lead ACROSS a chunk boundary come from the
-    *     neighbor chunk's edge values — stats rows number
+    *  3. one tiny per-(chunk, key) stats aggregate: the row count
+    *     (cumulative counts give each chunk's global row-number offset)
+    *     and the first k and last k values IN WINDOW ORDER
+    *     (`head_vals`/`tail_vals`, picked by local row number, so the
+    *     device is sort-direction-agnostic) — stats rows number
     *     #keys + O(P) (only boundary-spanning keys repeat), broadcast
     *     back. At extreme key cardinality swap the broadcast for a
     *     plain shuffle join on (pid, key) — itself skew-free, the key
     *     is composite.
     *
-    * Boundary algebra: within a (chunk, key) group, lag is local
-    * except at local row 1, whose true predecessor is the SAME key's
-    * last row in its previous chunk (stats `lag(last_q) over key by
-    * chunk` — null exactly when the key starts here: the window's own
-    * null). Lead mirrors with the next chunk's first row. Global
-    * row_number = local + sum of the key's counts over earlier chunks.
+    * Boundary algebra: a k-offset neighbour can live SEVERAL chunks
+    * away (a chunk may hold fewer than k of the key's rows), so the
+    * edge arrays are stitched along the key's chunk sequence:
+    *  - `prev_ctx` = the last k of the CONCATENATION of all earlier
+    *    chunks' tails (any value not in its own chunk's tail has ≥ k
+    *    successors in that chunk alone, so the concatenation always
+    *    contains the true trailing k — the bound that keeps stats
+    *    rows at ≤ 2k values regardless of the hot key's size);
+    *    `next_ctx` mirrors with the following chunks' heads;
+    *  - a local row at position p takes lag k locally when p > k,
+    *    else `prev_ctx[|ctx| − (k − p)]` (1-based; null when the key
+    *    has fewer than k predecessors — the window's own null), and
+    *    symmetrically for lead via `next_ctx[p + k − cnt]`;
+    *  - global row_number = local + `offset`.
     * Ties across a chunk boundary are inert: the ordering includes
     * every projected column, so tied rows are full duplicates and any
     * tie split yields the same output multiset (the windowLagLead
@@ -448,135 +486,42 @@ object Skew {
   private[graft] def windowLagSkewOn(s: SparkSession, df: DataFrame,
       spec: WindowSpec = WindowSpec.Lineitem, k: Int = 1): DataFrame = {
     require(k >= 1, s"lag/lead offset must be positive, got $k")
-    if (k > 1) return windowLagKSkewOn(s, df, spec, k)
-    import org.apache.spark.sql.expressions.Window
-    val ordCols = spec.ordSorted
-    // The ranged frame fans out to TWO consumers (local windows, edge
-    // stats) that must agree on the chunk assignment. pid is a pure
-    // expression over the row's values against one driver-collected
-    // bound set ([[rangeChunked]]), so the consumers CANNOT diverge —
-    // the determinism the previous localCheckpoint scaffold bought by
-    // materializing the whole frame, now by construction and without
-    // the full-corpus checkpoint write or the RangePartitioner
-    // sampling pass.
-    val ranged = rangeChunked(s, df, spec)
-    val wl = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(ordCols: _*)
-    val local = ranged
-      .withColumn("lrn", row_number().over(wl).cast("long"))
-      .withColumn("prev0", lag(col(spec.value), 1).over(wl))
-      .withColumn("next0", lead(col(spec.value), 1).over(wl))
-    // per-(chunk, key) edge stats; the ordering struct makes
-    // min_by/max_by the first/last row in window order (ties are full
-    // duplicates — same value — so arg-min ambiguity is valueless).
-    // Catalyst's struct total order compares fields asc-nulls-first,
-    // so min_by = first under ASC NULLS FIRST and, because DESC NULLS
-    // LAST is that order's exact reverse, max_by = first under a
-    // descending spec (the plain struct carries no sort direction —
-    // the swap IS the flip).
-    val ordStruct = struct(spec.ord.map(col): _*)
-    val wk = Window.partitionBy(col(spec.key)).orderBy(col("pid"))
-    val firstAgg = if (spec.descending) max_by(col(spec.value), ordStruct)
-      else min_by(col(spec.value), ordStruct)
-    val lastAgg = if (spec.descending) min_by(col(spec.value), ordStruct)
-      else max_by(col(spec.value), ordStruct)
-    val stats = ranged.groupBy(col("pid"), col(spec.key))
-      .agg(count(lit(1)).as("cnt"),
-        firstAgg.as("first_q"),
-        lastAgg.as("last_q"))
-      .withColumn("offset", coalesce(sum(col("cnt")).over(
-        wk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("prev_last", lag(col("last_q"), 1).over(wk))
-      .withColumn("next_first", lead(col("first_q"), 1).over(wk))
-      .select(col("pid"), col(spec.key), col("cnt"), col("offset"),
-        col("prev_last"), col("next_first"))
-    joinStats(local, stats, Seq("pid", spec.key))
-      .select(spec.out.map(col) ++ Seq(
-        when(col("lrn") === 1L, col("prev_last"))
-          .otherwise(col("prev0")).as(spec.prevName),
-        when(col("lrn") === col("cnt"), col("next_first"))
-          .otherwise(col("next0")).as(spec.nextName),
-        (col("lrn") + col("offset")).as("rn")): _*)
-  }
-
-  /** The general-offset lag/lead chunked rewrite (k > 1; the k = 1
-    * fast path above keeps its scalar min_by/max_by edge stats
-    * untouched). Same scaffold — range-chunk, local windows on
-    * (chunk, key), tiny per-(chunk, key) stats broadcast back — but a
-    * k-offset neighbor can live SEVERAL chunks away (a chunk may hold
-    * fewer than k of the key's rows), so scalar edge values become
-    * bounded edge ARRAYS stitched along the chunk sequence:
-    *
-    *  - per (chunk, key): the first k and last k values IN WINDOW
-    *    ORDER (`head_vals`/`tail_vals`, extracted by local row number
-    *    so the device is sort-direction-agnostic; values ride structs
-    *    through collect_list, which would silently drop bare nulls);
-    *  - `prev_ctx` = the last k of the CONCATENATION of all earlier
-    *    chunks' tails (any value not in its own chunk's tail has ≥ k
-    *    successors in that chunk alone, so the concatenation always
-    *    contains the true trailing k — the bound that keeps stats
-    *    rows at ≤ 2k values regardless of the hot key's size);
-    *    `next_ctx` mirrors with the following chunks' heads;
-    *  - a local row at position p takes lag k locally when p > k,
-    *    else `prev_ctx[|ctx| − (k − p)]` (1-based; null when the key
-    *    has fewer than k predecessors — the window's own null), and
-    *    symmetrically for lead via `next_ctx[p + k − cnt]`.
-    * Ordering ties remain full duplicates under the spec contract, so
-    * any chunk tie split yields the same output multiset; oracle =
-    * the literal LAG/LEAD/ROW_NUMBER SQL at offset k.
-    */
-  private def windowLagKSkewOn(s: SparkSession, df: DataFrame,
-      spec: WindowSpec, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ordCols = spec.ordSorted
-    val ranged = rangeChunked(s, df, spec)
-    val wl = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(ordCols: _*)
-    val wFullGrp = Window.partitionBy(col("pid"), col(spec.key))
-    val local = ranged
-      .withColumn("lrn", row_number().over(wl).cast("long"))
-      .withColumn("prev0", lag(col(spec.value), k).over(wl))
-      .withColumn("next0", lead(col(spec.value), k).over(wl))
-      .withColumn("cntl", count(lit(1)).over(wFullGrp))
-    // per-(chunk, key) edge arrays: ≤ k values each side, in window
-    // order (sorted by local row number; struct-wrapped so a null
-    // VALUE survives collect_list)
-    val edged = local
-      .filter(col("lrn") <= k || col("lrn") > col("cntl") - k)
+    val plan = new ChunkPlan(s, df, spec)
+    val local = plan.ranged
+      .withColumn("lrn", row_number().over(plan.local).cast("long"))
+      .withColumn("prev0", lag(col(spec.value), k).over(plan.local))
+      .withColumn("next0", lead(col(spec.value), k).over(plan.local))
+      .withColumn("cntl", count(lit(1)).over(plan.group))
+    val isHead = col("lrn") <= k
+    val isTail = col("lrn") > col("cntl") - k
+    val edged = local.filter(isHead || isTail)
       .groupBy(col("pid"), col(spec.key))
       .agg(max(col("cntl")).as("cnt"),
-        transform(array_sort(collect_list(when(col("lrn") <= k,
-            struct(col("lrn").as("i"), col(spec.value).as("v"))))),
-          _.getField("v")).as("head_vals"),
-        transform(array_sort(collect_list(when(col("lrn") > col("cntl") - k,
-            struct(col("lrn").as("i"), col(spec.value).as("v"))))),
-          _.getField("v")).as("tail_vals"))
-    val wk = Window.partitionBy(col(spec.key)).orderBy(col("pid"))
-    val before = wk.rowsBetween(Window.unboundedPreceding, -1)
-    val after = wk.rowsBetween(1, Window.unboundedFollowing)
-    val prevFlat = flatten(collect_list(col("tail_vals")).over(before))
+        orderedValues(col("lrn"), col(spec.value), isHead).as("head_vals"),
+        orderedValues(col("lrn"), col(spec.value), isTail).as("tail_vals"))
+    val after = plan.byChunk.rowsBetween(1, Window.unboundedFollowing)
+    val prevFlat = flatten(collect_list(col("tail_vals")).over(plan.before))
     val nextFlat = flatten(collect_list(col("head_vals")).over(after))
     val stats = edged
-      .withColumn("offset", coalesce(sum(col("cnt")).over(before), lit(0L)))
+      .withColumn("offset", plan.offset)
       .withColumn("prev_ctx",
         when(size(prevFlat) <= k, prevFlat)
           .otherwise(slice(prevFlat, -k, k)))
       .withColumn("next_ctx", slice(nextFlat, 1, k))
       .select(col("pid"), col(spec.key), col("cnt"), col("offset"),
         col("prev_ctx"), col("next_ctx"))
-    joinStats(local, stats, Seq("pid", spec.key))
-      .select(spec.out.map(col) ++ Seq(
-        when(col("lrn") > k, col("prev0")).otherwise(
-          when(size(col("prev_ctx")) - (lit(k) - col("lrn")) >= 1,
-            element_at(col("prev_ctx"),
-              (size(col("prev_ctx")) - (lit(k) - col("lrn"))).cast("int")))
-            .otherwise(lit(null))).as(spec.prevName),
-        when(col("lrn") <= col("cnt") - k, col("next0")).otherwise(
-          when(size(col("next_ctx")) >= col("lrn") + k - col("cnt"),
-            element_at(col("next_ctx"),
-              (col("lrn") + k - col("cnt")).cast("int")))
-            .otherwise(lit(null))).as(spec.nextName),
-        (col("lrn") + col("offset")).as("rn")): _*)
+    plan.output(local, stats,
+      when(col("lrn") > k, col("prev0")).otherwise(
+        when(size(col("prev_ctx")) - (lit(k) - col("lrn")) >= 1,
+          element_at(col("prev_ctx"),
+            (size(col("prev_ctx")) - (lit(k) - col("lrn"))).cast("int")))
+          .otherwise(lit(null))).as(spec.prevName),
+      when(col("lrn") <= col("cnt") - k, col("next0")).otherwise(
+        when(size(col("next_ctx")) >= col("lrn") + k - col("cnt"),
+          element_at(col("next_ctx"),
+            (col("lrn") + k - col("cnt")).cast("int")))
+          .otherwise(lit(null))).as(spec.nextName),
+      (col("lrn") + col("offset")).as("rn"))
   }
 
   /** Skew-resilient FIRST/LAST/NTH value over the whole-partition
@@ -606,39 +551,32 @@ object Skew {
       spec: WindowSpec, n: Int = 2,
       ignoreNulls: Boolean = false): DataFrame = {
     require(n >= 1, s"nth_value position must be positive, got $n")
-    import org.apache.spark.sql.expressions.Window
-    val ordCols = spec.ordSorted
     // cluster = false: the output path below is a bare broadcast join
     // onto the rows — with pid an expression, it needs NO exchange at
     // all, and only the (small, filtered) edge path pays one
-    val ranged = rangeChunked(s, df, spec, cluster = false)
+    val plan = new ChunkPlan(s, df, spec, cluster = false)
     // IGNORE NULLS = the same constants over the value's NON-NULL
     // subsequence: drop value-null rows before the edge extraction and
     // everything downstream is unchanged (the final join stays on the
     // unfiltered rows; a key whose values are ALL null simply misses
     // the stats frame and the left join gives it the window's nulls)
-    val edgeBase = if (ignoreNulls) ranged.filter(col(spec.value).isNotNull)
-      else ranged
-    val wl = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(ordCols: _*)
-    val wg = Window.partitionBy(col("pid"), col(spec.key))
+    val edgeBase =
+      if (ignoreNulls) plan.ranged.filter(col(spec.value).isNotNull)
+      else plan.ranged
     val local = edgeBase
-      .withColumn("lrn", row_number().over(wl).cast("long"))
-      .withColumn("cntl", count(lit(1)).over(wg))
+      .withColumn("lrn", row_number().over(plan.local).cast("long"))
+      .withColumn("cntl", count(lit(1)).over(plan.group))
+    val isHead = col("lrn") <= n
     val edged = local
-      .filter(col("lrn") <= n || col("lrn") === col("cntl"))
+      .filter(isHead || col("lrn") === col("cntl"))
       .groupBy(col("pid"), col(spec.key))
-      .agg(
-        transform(array_sort(collect_list(when(col("lrn") <= n,
-            struct(col("lrn").as("i"), col(spec.value).as("v"))))),
-          _.getField("v")).as("head_vals"),
+      .agg(orderedValues(col("lrn"), col(spec.value), isHead).as("head_vals"),
         max_by(col(spec.value), col("lrn")).as("tail_val"))
     val stats = edged.groupBy(col(spec.key))
       .agg(
         min_by(col("head_vals"), col("pid")).as("h0"),
         max_by(col("tail_val"), col("pid")).as("last_v"),
-        transform(array_sort(collect_list(struct(col("pid").as("p"),
-            col("head_vals").as("h")))), _.getField("h")).as("hs"))
+        orderedValues(col("pid"), col("head_vals")).as("hs"))
       // get() is 0-based and null-on-out-of-bounds (ANSI-safe where
       // element_at would throw): a key with fewer than n rows yields
       // the window's own null
@@ -646,7 +584,7 @@ object Skew {
         get(col("h0"), lit(0)).as("first_v"),
         col("last_v"),
         get(flatten(col("hs")), lit(n - 1)).as("nth_v"))
-    joinStats(ranged, stats, Seq(spec.key), "left")
+    joinStats(plan.ranged, stats, Seq(spec.key), "left")
       .select(spec.out.map(col) ++ Seq(
         col("first_v").as(s"first_${spec.valueAlias}"),
         col("last_v").as(s"last_${spec.valueAlias}"),
@@ -656,7 +594,6 @@ object Skew {
   private[graft] def windowFirstLastPlain(df: DataFrame,
       spec: WindowSpec, n: Int = 2,
       ignoreNulls: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(spec.key))
       .orderBy(spec.ordSorted: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -716,45 +653,30 @@ object Skew {
 
   private[graft] def windowRunningSkewOn(s: SparkSession, df: DataFrame,
       spec: WindowSpec = WindowSpec.Lineitem): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ordCols = spec.ordSorted
-    val ranged = rangeChunked(s, df, spec)
-    val wl = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(ordCols: _*)
+    val plan = new ChunkPlan(s, df, spec)
+    val frame = plan.local
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged
-      .withColumn("lsum", sum(col(spec.value).cast("long")).over(wl))
-      .withColumn("lrn", count(lit(1)).over(wl))
-    val wk = Window.partitionBy(col(spec.key)).orderBy(col("pid"))
-    val before = wk.rowsBetween(Window.unboundedPreceding, -1)
-    // Stats aggregate the RAW ranged frame, accepting that column
-    // pruning shrinks this branch to its own narrow (pid, key, value)
-    // scan + exchange instead of reusing the join side's wide one.
-    // The shared-exchange variant (stats off the local window's last
-    // row: max_by(lsum, lrn) / max(lrn)) was TRIED in r22 and
-    // REVERTED: unlike the rank class — whose stats branch sorts
-    // either way, so deduplicating the exchange was a pure win — the
-    // running stats are a plain HASH aggregate, and pinning them to
-    // the windowed subtree replaced a narrow column-pruned scan +
-    // narrow shuffle with a second full-width SORT of the corpus
-    // partitions. Measured consistently negative at sf0.1 (REPS=5
-    // med 2.03 -> 2.18/2.42 across two sessions, controls adverse
-    // by less), and the scale trade (extra corpus sort + spill vs a
-    // ~3-column scan and shuffle) leans the same way.
-    val stats = ranged.groupBy(col("pid"), col(spec.key))
+    val local = plan.ranged
+      .withColumn("lsum", sum(col(spec.value).cast("long")).over(frame))
+      .withColumn("lrn", count(lit(1)).over(frame))
+    // Stats aggregate the RAW ranged frame, so column pruning narrows
+    // this branch to its own (pid, key, value) scan + shuffle. Reading
+    // them off the local window's last row would share the join side's
+    // exchange but add a second full-width sort of the corpus: a plain
+    // hash aggregate gains nothing from that exchange (measured slower
+    // at sf0.1, REPS=5 med 2.03 -> 2.18/2.42 s).
+    val stats = plan.ranged.groupBy(col("pid"), col(spec.key))
       .agg(sum(col(spec.value).cast("long")).as("csum"),
         count(lit(1)).as("cnt"))
       // null when every earlier summand is null: SUM's own null
-      .withColumn("sum_offset", sum(col("csum")).over(before))
-      .withColumn("offset",
-        coalesce(sum(col("cnt")).over(before), lit(0L)))
+      .withColumn("sum_offset", sum(col("csum")).over(plan.before))
+      .withColumn("offset", plan.offset)
       .select(col("pid"), col(spec.key), col("sum_offset"),
         col("offset"))
-    joinStats(local, stats, Seq("pid", spec.key))
-      .select(spec.out.map(col) ++ Seq(
-        coalesce(col("lsum") + col("sum_offset"), col("lsum"),
-          col("sum_offset")).as(spec.runningName),
-        (col("lrn") + col("offset")).as("rn")): _*)
+    plan.output(local, stats,
+      coalesce(col("lsum") + col("sum_offset"), col("lsum"),
+        col("sum_offset")).as(spec.runningName),
+      (col("lrn") + col("offset")).as("rn"))
   }
 
   /** Value width of [[windowRangeSkew]]'s trailing frame (orderkeys are
@@ -769,10 +691,9 @@ object Skew {
     * its ordering value. So the rewrite ships GHOST ROWS instead of
     * stats: each row replicates into every LATER chunk whose frames
     * can see it — under the deterministic value-pure chunk assignment
-    * (r22) that is exactly the contiguous pid range (pid,
+    * that is exactly the contiguous pid range (pid,
     * pidOf(key, ordval + w)], computed per row by the same binary
-    * search that assigns pid (tie peers always share a chunk, so the
-    * scaffold's forward tie transport no longer exists). Ghost volume
+    * search that assigns pid (tie peers always share a chunk). Ghost volume
     * per boundary is bounded by the rows inside one `w`-wide value
     * band — independent of the hot key's total size, which is the
     * whole point. Ghosts contribute to local frames and are dropped
@@ -791,7 +712,6 @@ object Skew {
     require(!spec.descending,
       "the range-class sweep is written against the ascending value " +
         "order; rewrite the frame bounds instead of flipping the sort")
-    val chunks = math.min(s.sparkContext.defaultParallelism, ChunkExprMax)
     // normalized role columns (_k/_ov/_v — BIGINT key + ordering +
     // summand) so the sweep below is spec-independent: passthrough
     // columns keep their original types and ride by position
@@ -802,46 +722,20 @@ object Skew {
       .withColumn("_k", col(spec.key).cast("long"))
       .withColumn("_ov", col(spec.rangeOrd).cast("long"))
       .withColumn("_v", col(spec.value).cast("long"))
-    // r22: deterministic chunk ids replace the class's
-    // repartitionByRange + spark_partition_id + localCheckpoint
-    // scaffold (the last full-corpus materialization in the window
-    // family — the row-frame classes shed theirs in r21). pid is the
-    // same codegen'd binary search over one driver-collected bound
-    // set ([[rangeChunked]]'s device) on the (key, ordval) order, and
-    // purity buys the range class MORE than determinism:
-    //  - ties cannot split across chunks (pid is a function of the
-    //    VALUE tuple), so the forward tie-peer transport disappears;
-    //  - a row's ghost targets collapse to the CONTIGUOUS pid range
-    //    (pid, pidOf(key, ordval + w)] — the same search expression
-    //    evaluated at the frame's far edge — so the bounds aggregate,
-    //    both broadcast joins, and the driver-side ghost collect (up
-    //    to 1M rows) all disappear; ghost candidacy is a per-row
-    //    expression, and every frame row still arrives: for a target
-    //    row x in chunk t with u in [x-w, x], monotonicity gives
-    //    t = pidOf(k, x) <= pidOf(k, u + w) = the ghost's hi.
-    //    Chunks whose actual rows start above u + w receive a ghost
-    //    the old data-extreme prefilter would have pruned; it joins
-    //    no frame (the sweep admits by VALUE) and costs only its
-    //    bounded transport.
-    // One exchange remains — the (pid, key)-hashed sweep input that
-    // both real and ghost rows ride — vs the scaffold's range
-    // exchange + checkpoint write + pinned blocks + the
-    // executor-loss-fails-the-query failure mode.
-    val fields = Seq(("_k", false), ("_ov", false))
-    val bounds = chunkBounds(projected,
-      WindowSpec(key = "_k", ord = Seq("_ov"), value = "_v",
-        rangeOrd = "_ov", out = Seq("_k", "_ov"),
-        rangeOut = Seq("_k", "_ov")), chunks)
+    // pid and a row's last ghost chunk _hi come from one bound set, so
+    // every frame row arrives: for a target row x in chunk t with u in
+    // [x-w, x], monotonicity gives t = pidOf(k, x) <= pidOf(k, u + w) =
+    // the ghost's hi. A ghost may reach a chunk whose rows all lie above
+    // u + w; the sweep admits by VALUE, so it joins no frame there.
+    val (chunks, pidOf) =
+      chunkSearch(s, projected, Seq(("_k", false), ("_ov", false)))
     val stamped = projected
-      .withColumn("pid",
-        boundSearchTree(fields, bounds, 0, bounds.length).cast("int"))
+      .withColumn("pid", pidOf(Seq("_k", "_ov")))
       // the frame's far edge, saturated: within w of Long.MaxValue a
       // wrapped add would search a negative value and ship no ghosts
       .withColumn("_ovw", when(col("_ov") > lit(Long.MaxValue - w),
         lit(Long.MaxValue)).otherwise(col("_ov") + w))
-      .withColumn("_hi",
-        boundSearchTree(Seq(("_k", false), ("_ovw", false)),
-          bounds, 0, bounds.length).cast("int"))
+      .withColumn("_hi", pidOf(Seq("_k", "_ovw")))
     val real = stamped
       .select(keep.map(col) ++ Seq(col("_k"), col("_ov"), col("_v"),
         col("pid"), lit(false).as("ghost")): _*)
@@ -882,7 +776,6 @@ object Skew {
 
   private def rangeFrameSweep(all: DataFrame, w: Long, chunks: Int,
       spec: WindowSpec): DataFrame = {
-    import org.apache.spark.sql.Row
     // hash on (pid, KEY), not pid alone: the sweep's state is per
     // (pid, key) group, so the finer key spreads evenly where 32 pid
     // values hashed into 32 partitions would collide (~1/e of the
@@ -1024,38 +917,26 @@ object Skew {
       nTiles: Int = 4,
       spec: WindowSpec = WindowSpec.Lineitem,
       extended: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(!spec.descending,
       "the rank-class boundary algebra (run groups, first/last coarse " +
         "values) is written against the ascending order")
-    val ordCols = spec.ord.map(col)
     val coarse = spec.ord.head
-    // one deterministic chunk assignment for both consumers (the
-    // windowLagSkew rangeChunked rationale)
-    val ranged = rangeChunked(s, df, spec)
-    val wFull = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(ordCols: _*)
-    val wDate = Window.partitionBy(col("pid"), col(spec.key))
-      .orderBy(col(coarse))
-    val local = ranged
-      .withColumn("lrn", row_number().over(wFull).cast("long"))
+    val plan = new ChunkPlan(s, df, spec)
+    val wDate = plan.group.orderBy(col(coarse))
+    val local = plan.ranged
+      .withColumn("lrn", row_number().over(plan.local).cast("long"))
       .withColumn("lrk", rank().over(wDate).cast("long"))
       .withColumn("ldr", dense_rank().over(wDate).cast("long"))
-    val wk = Window.partitionBy(col(spec.key)).orderBy(col("pid"))
-    val before = wk.rowsBetween(Window.unboundedPreceding, -1)
+    val wk = plan.byChunk
     val through = wk.rowsBetween(Window.unboundedPreceding, 0)
     // max(lrk) IS the last coarse value's local run-start rank (rank of
     // the chunk's maximal value = cnt − last_cnt + 1), so the stats
     // ride the local frame and need no nested aggregate.
-    // cnt = max(lrn), NOT count(*): within a (pid, key) group lrn is
-    // 1..cnt so the two are identical — but count(*) lets column
-    // pruning drop the wFull window (and with it every ordering
-    // column) from this branch, shrinking its exchange to 3 columns
-    // and DEFEATING exchange reuse with the join side's 8-column
-    // exchange (guide §2.4): the corpus was scanned, pid-stamped and
-    // shuffled TWICE (r22 StageProf: two ~0.6-1.0 s map stages per
-    // rep). Consuming lrn pins the branch to the identical subtree,
-    // so one map stage feeds both consumers.
+    // cnt = max(lrn), NOT count(*): the two are equal, but count(*)
+    // lets column pruning drop the local window from this branch, which
+    // then no longer reuses the join side's exchange — the corpus is
+    // scanned, pid-stamped and shuffled twice (measured: two ~0.6-1.0 s
+    // map stages per rep at sf0.1).
     // A null coarse value is a peer group of its own and sorts FIRST
     // (ASC NULLS FIRST), while min/max/countDistinct skip nulls: a
     // chunk holding one has a null first value and one more distinct
@@ -1075,7 +956,7 @@ object Skew {
         // (and so pruned) in the base class
         max(when(col("lrk") === 1L, col("lrn"))).as("cnt_first"))
     val stats0 = statsBase
-      .withColumn("offset", coalesce(sum(col("cnt")).over(before), lit(0L)))
+      .withColumn("offset", plan.offset)
       .withColumn("total", sum(col("cnt")).over(
         Window.partitionBy(col(spec.key))))
       // a predecessor chunk exists and ends on this chunk's first value
@@ -1085,7 +966,7 @@ object Skew {
         when(col("cont"), lit(1L)).otherwise(lit(0L)))
       // dense-rank adjustment: d's before MINUS overlaps through self
       .withColumn("adj_d",
-        coalesce(sum(col("d")).over(before), lit(0L)) -
+        coalesce(sum(col("d")).over(plan.before), lit(0L)) -
           sum(col("overlap")).over(through))
       // run-group device for the boundary run's global start rank
       .withColumn("starts_run",
@@ -1127,20 +1008,9 @@ object Skew {
         .withColumn("last_val_end", last(col("end_if_last")).over(
           wg.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
         .select(baseCols ++ Seq(col("last_dt"), col("last_val_end")): _*)
-    // extended: one extra LOCAL window on the join side — max(lrn)
-    // over (pid, key, coarse) is the peer group's end position within
-    // its chunk. (pid, key) hash clustering satisfies the finer
-    // partitioning and the existing full-tuple sort has (pid, key,
-    // coarse) as a prefix, so this adds NO exchange and NO sort.
-    val localJ =
-      if (!extended) local
-      else local.withColumn("lpe", max(col("lrn")).over(
-        Window.partitionBy(col("pid"), col(spec.key), col(coarse))))
-    val joined = joinStats(localJ, stats, Seq("pid", spec.key))
-      .withColumn("rn", col("lrn") + col("offset"))
     // prev_run_start is null exactly on a key's first chunk, where a
     // null coarse value would otherwise match the missing prev_last_dt
-    val rnkExpr = when(col("prev_run_start").isNotNull &&
+    val rnk = when(col("prev_run_start").isNotNull &&
         (col(coarse) <=> col("prev_last_dt")),
       col("prev_run_start")).otherwise(col("offset") + col("lrk"))
     // extended: percent_rank and cume_dist from the same machinery.
@@ -1148,43 +1018,39 @@ object Skew {
     // rank and the per-key total the stats already carry (0.0 on a
     // single-row key, both engines' convention). cume_dist = the peer
     // group's LAST global position / total: the position is the local
-    // peer end offset-corrected when the group ends inside this chunk
-    // (coarse < last_dt — contiguous chunk ranges put every later
-    // peer in a later chunk), and the stats-side boundary-run end
-    // otherwise. r22: this replaces a full (key, coarse) window over
-    // the OUTPUT (one corpus exchange + sort per query) with a local
-    // window and two tiny stats columns. Both divisions are exact
-    // integer numerators over the same total — identical doubles in
-    // both engines, no rounding needed.
-    if (extended) {
-      return joined
-        .withColumn("rnk", rnkExpr)
-        .withColumn("prank",
-          when(col("total") === 1L, lit(0.0))
-            .otherwise((col("rnk") - 1).cast("double") /
-              (col("total") - 1).cast("double")))
-        .withColumn("cdist",
-          when(col(coarse) <=> col("last_dt"), col("last_val_end"))
-            .otherwise(col("offset") + col("lpe")).cast("double") /
-            col("total").cast("double"))
-        .select(spec.out.map(col) ++ Seq(col("rnk"), col("prank"),
-          col("cdist")): _*)
-    }
-    joined
-      .select(spec.out.map(col) ++ Seq(
-        rnkExpr.as("rnk"),
-        (col("ldr") + col("adj_d")).as("drank"),
-        // Spark/DuckDB NTILE: total mod n buckets of size q+1 first,
-        // the rest size q (q = total div n); the div-by-zero branch
-        // when q = 0 is unreachable (the first branch then covers
-        // every rn ≤ total) and CaseWhen short-circuits
-        expr(s"""CASE
-          WHEN rn <= ((total div $nTiles) + 1) * (total % $nTiles)
-          THEN (rn - 1) div ((total div $nTiles) + 1) + 1
-          ELSE (total % $nTiles) +
-            (rn - 1 - ((total div $nTiles) + 1) * (total % $nTiles))
-              div (total div $nTiles) + 1
-          END""").as("bucket")): _*)
+    // peer end (`lpe`, max(lrn) over (pid, key, coarse) — the (pid, key)
+    // clustering and the full-tuple sort already serve it, so it adds
+    // no exchange and no sort) offset-corrected when the group ends
+    // inside this chunk (coarse < last_dt — contiguous chunk ranges put
+    // every later peer in a later chunk), and the stats-side
+    // boundary-run end otherwise. Both divisions are exact integer
+    // numerators over the same total — identical doubles in both
+    // engines, no rounding needed.
+    if (extended) plan.output(
+      local.withColumn("lpe", max(col("lrn")).over(
+        Window.partitionBy(col("pid"), col(spec.key), col(coarse)))),
+      stats,
+      rnk.as("rnk"),
+      when(col("total") === 1L, lit(0.0))
+        .otherwise((rnk - 1).cast("double") /
+          (col("total") - 1).cast("double")).as("prank"),
+      (when(col(coarse) <=> col("last_dt"), col("last_val_end"))
+        .otherwise(col("offset") + col("lpe")).cast("double") /
+        col("total").cast("double")).as("cdist"))
+    else plan.output(local, stats,
+      rnk.as("rnk"),
+      (col("ldr") + col("adj_d")).as("drank"),
+      // Spark/DuckDB NTILE: total mod n buckets of size q+1 first,
+      // the rest size q (q = total div n); the div-by-zero branch
+      // when q = 0 is unreachable (the first branch then covers
+      // every rn ≤ total) and CaseWhen short-circuits
+      expr(s"""CASE
+        WHEN lrn + offset <= ((total div $nTiles) + 1) * (total % $nTiles)
+        THEN (lrn + offset - 1) div ((total div $nTiles) + 1) + 1
+        ELSE (total % $nTiles) +
+          (lrn + offset - 1 - ((total div $nTiles) + 1) * (total % $nTiles))
+            div (total div $nTiles) + 1
+        END""").as("bucket"))
   }
 
   // -------------------------------------------------- auto dispatch
@@ -1326,7 +1192,6 @@ object Skew {
     */
   private[graft] def windowLagPlain(df: DataFrame,
       spec: WindowSpec = WindowSpec.Lineitem, k: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(spec.key))
       .orderBy(spec.ordSorted: _*)
     df.select(spec.out.map(col) ++ Seq(
@@ -1337,7 +1202,6 @@ object Skew {
 
   private[graft] def windowRankPlain(df: DataFrame, nTiles: Int = 4,
       spec: WindowSpec = WindowSpec.Lineitem): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wd = Window.partitionBy(col(spec.key)).orderBy(col(spec.ord.head))
     val wf = Window.partitionBy(col(spec.key))
       .orderBy(spec.ord.map(col): _*)
@@ -1349,7 +1213,6 @@ object Skew {
 
   private[graft] def windowRankExtPlain(df: DataFrame,
       spec: WindowSpec = WindowSpec.Lineitem): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wd = Window.partitionBy(col(spec.key)).orderBy(col(spec.ord.head))
     df.select(spec.out.map(col) ++ Seq(
       rank().over(wd).cast("long").as("rnk"),
@@ -1359,7 +1222,6 @@ object Skew {
 
   private[graft] def windowRunningPlain(df: DataFrame,
       spec: WindowSpec = WindowSpec.Lineitem): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(spec.key))
       .orderBy(spec.ordSorted: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1370,7 +1232,6 @@ object Skew {
 
   private[graft] def windowRangePlain(df: DataFrame, w: Long = RangeSkewW,
       spec: WindowSpec = WindowSpec.Lineitem): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wr = Window.partitionBy(col(spec.key)).orderBy(col(spec.rangeOrd))
       .rangeBetween(-w, 0)
     df.select(spec.rangeOut.map(col) ++ Seq(

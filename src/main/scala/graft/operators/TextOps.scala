@@ -50,31 +50,21 @@ object TextOps {
     * (the single stable document fingerprint), n_winnow the
     * consecutive-deduped winnowing pick count — both from the md5-gram
     * SQL device (TextFunctions) so DuckDB recomputes the entire pipeline
-    * by value. `rabin = true` swaps in the codegen'd rolling-hash
-    * expressions (RabinFingerprint/RabinWinnow, same algorithm — pinned
-    * in WinnowSpec — different hash base) as the perf path.
+    * by value.
     */
-  def docFingerprint(s: SparkSession, dir: String,
-                     rabin: Boolean = false): DataFrame = {
+  def docFingerprint(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    val fingerprinted =
-      if (rabin)
-        table(s, dir, "documents")
-          .select(col("doc_id"), expr("rabin_fingerprint(text)").as("fp"),
-            size(expr("rabin_winnow(text)")).as("n_winnow"))
-      else
-        // compiled twins of the TextFunctions SQL device (WinnowSpec
-        // pins value equality); one codegen'd call per row each. The
-        // repartition spreads the per-doc hash pass across cores — the
-        // source is one parquet split, and the pass runs BEFORE the
-        // window's fp exchange (single-split trap; measured 3.1->0.9 s)
-        table(s, dir, "documents")
-          .repartition(s.sparkContext.defaultParallelism)
-          .select(col("doc_id"), expr("md5_gram_min(text)").as("fp"),
-            expr("md5_winnow_count(text)").as("n_winnow"))
-    fingerprinted
+    // compiled twins of the TextFunctions SQL device (WinnowSpec pins
+    // value equality); one codegen'd call per row each. The repartition
+    // spreads the per-doc hash pass across cores — the source is one
+    // parquet split, and the pass runs BEFORE the window's fp exchange
+    // (single-split trap; measured 3.1->0.9 s)
+    table(s, dir, "documents")
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("doc_id"), expr("md5_gram_min(text)").as("fp"),
+        expr("md5_winnow_count(text)").as("n_winnow"))
       .withColumn("first_doc", first(col("doc_id")).over(w))
       .withColumn("is_dup", col("doc_id") =!= col("first_doc"))
   }

@@ -255,7 +255,7 @@ object DedupStream {
            readStoreDocs(s, root, candIds, docs).union(docs)
          else docs)
       val verdicts = Dedup.incrementalVerify(
-        s, docs, cand, partners, threshold)
+        docs, cand, partners, threshold)
       verdicts.write.parquet(s"$root/verdicts/b=$batchId")
       bands.write.parquet(s"$root/bands/b=$batchId")
       docs.write.parquet(s"$root/docs/b=$batchId")

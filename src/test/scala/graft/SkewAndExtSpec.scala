@@ -668,18 +668,18 @@ class SkewAndExtSpec extends AnyFunSuite {
     // class runs at a drawn offset `lagK`.
     final case class Frame(rows: Seq[(java.lang.Long, Long, java.lang.Long)],
                            chunks: Int, desc: Boolean,
-                           oNulls: Seq[Boolean], lagK: Int) {
+                           oNulls: Seq[Boolean], lagK: Int,
+                           flastN: Int, flastIgnoreNulls: Boolean) {
       def withOrdNulls: Seq[(java.lang.Long, java.lang.Long, java.lang.Long)] =
         rows.zip(oNulls).map { case ((k, o, v), nul) =>
           (k, if (nul) null else java.lang.Long.valueOf(o), v) }
     }
-    val genFrame: Gen[Frame] = for {
-      // a benign frame spreads its keys three rows each, so its top
-      // share (3/n, n >= 320) sits below WindowSkewShare
-      benign <- Gen.frequency(1 -> true, 2 -> false)
-      n <- if (benign) Gen.choose(320, 400) else Gen.choose(20, 400)
-      chunks <- Gen.choose(1, 8)
-      hotShare <- Gen.oneOf(0.0, 0.004, 0.05, 0.5, 0.9)
+    def genFrameOf(benignG: Gen[Boolean], nG: Boolean => Gen[Int],
+        chunksG: Gen[Int], hotShareG: Gen[Double]): Gen[Frame] = for {
+      benign <- benignG
+      n <- nG(benign)
+      chunks <- chunksG
+      hotShare <- hotShareG
       keys <- Gen.oneOf(1, 5, 60, 400)
       tieDomain <- Gen.oneOf(1, 3, 25, 1500)
       base <- Gen.oneOf(0L, -50000L, Long.MaxValue - 2000L)
@@ -701,11 +701,23 @@ class SkewAndExtSpec extends AnyFunSuite {
       nullO <- Gen.oneOf(0.0, 0.1, 0.5)
       uos <- Gen.listOfN(n, Gen.choose(0.0, 1.0))
       lagK <- Gen.oneOf(1, 2, 3)
+      flastN <- Gen.oneOf(1, 2, 5)
+      flastIgnoreNulls <- Gen.oneOf(false, true)
     } yield Frame(
       if (!benign) rows
       else rows.zipWithIndex.map { case ((_, o, v), i) =>
         (java.lang.Long.valueOf(i / 3L), o, v) },
-      chunks, desc, uos.map(_ < nullO), lagK)
+      chunks, desc, uos.map(_ < nullO), lagK, flastN, flastIgnoreNulls)
+    // a benign frame spreads its keys three rows each, so its top
+    // share (3/n, n >= 320) sits below WindowSkewShare
+    val genFrame: Gen[Frame] = genFrameOf(
+      Gen.frequency(1 -> true, 2 -> false),
+      benign => if (benign) Gen.choose(320, 400) else Gen.choose(20, 400),
+      Gen.choose(1, 8), Gen.oneOf(0.0, 0.004, 0.05, 0.5, 0.9))
+    // wide frames: a hot key big enough to span many of 12-24 chunks,
+    // drawn from their own generator so the cases above keep their frames
+    val genWide: Gen[Frame] = genFrameOf(Gen.const(false),
+      _ => Gen.choose(1500, 3000), Gen.choose(12, 24), Gen.oneOf(0.5, 0.9))
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     val shares = Seq.newBuilder[Double]
@@ -713,10 +725,12 @@ class SkewAndExtSpec extends AnyFunSuite {
     val nullOrdered = Set.newBuilder[String]
     val lagKs = Set.newBuilder[Int]
     val cases = 10
+    val wideCases = 2
     for ((cls, ci) <- Seq("lag", "rank", "running", "range", "flast")
-           .zipWithIndex; i <- 0 until cases) {
-      val f = genFrame.apply(Gen.Parameters.default,
-        rng.Seed(1000L * ci + i)).get
+           .zipWithIndex; i <- 0 until cases + wideCases) {
+      val wide = i >= cases
+      val f = (if (wide) genWide else genFrame).apply(
+        Gen.Parameters.default, rng.Seed(1000L * ci + i)).get
       val spec = WindowSpec(key = "k", ord = Seq("o", "v"), value = "v",
         rangeOrd = "o", out = Seq("k", "o", "v"),
         rangeOut = Seq("k", "o", "v"), valueAlias = "v",
@@ -745,6 +759,20 @@ class SkewAndExtSpec extends AnyFunSuite {
           assert(sorted(Skew.windowRankSkewOn(spark, df, spec = spec,
               extended = true)) ===
             sorted(Skew.windowRankExtPlain(df, spec)), s"$what, extended")
+        // first/last/nth at a drawn position, with and without IGNORE
+        // NULLS
+        if (cls == "flast")
+          assert(sorted(Skew.windowFirstLastSkewOn(spark, df, spec,
+              f.flastN, f.flastIgnoreNulls)) ===
+            sorted(Skew.windowFirstLastPlain(df, spec, f.flastN,
+              f.flastIgnoreNulls)),
+            s"$what, n=${f.flastN}, ignoreNulls=${f.flastIgnoreNulls}")
+        // non-vacuity: a wide frame's hot key really spans chunks
+        if (wide) {
+          val hotPids = Skew.rangeChunked(spark, df, spec)
+            .filter(col("k") === 1000L).select("pid").distinct().count()
+          assert(hotPids >= 4L, s"$what: hot key in $hotPids chunks")
+        }
       }
     }
     // the generator reached both sides of the dispatch threshold, and
@@ -763,18 +791,23 @@ class SkewAndExtSpec extends AnyFunSuite {
 
   test("withCheckpointScope reclaims operator-internal checkpoint " +
        "blocks once the action completes") {
-    // r22: the range window class replaced its checkpoint scaffold
-    // with deterministic chunk ids — the whole chunked window family
-    // now pins NOTHING; dedup_recall's audit-slice checkpoint is the
-    // scope's remaining in-spec device
+    // the chunked window family pins nothing (its chunk ids are
+    // deterministic); dedup_recall's audit-slice checkpoint is the
+    // scope's in-spec device
     val sc = spark.sparkContext
     sc.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = true))
+    val chunked = Seq("window_lag_skew", "window_lag_k",
+      "window_rank_skew", "window_rank_ext", "window_running_skew",
+      "window_range_skew", "window_firstlast_skew",
+      "window_firstlast_nulls")
     graft.engine.CheckpointScope.withCheckpointScope(spark) {
-      Skew.windowRangeSkew(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      assert(sc.getPersistentRDDs.isEmpty,
-        "the deterministic range rewrite must pin no blocks at all")
+      for (name <- chunked) {
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        assert(sc.getPersistentRDDs.isEmpty,
+          s"the deterministic chunked rewrite $name must pin no blocks")
+      }
       graft.operators.Dedup.dedupRecall(spark, dir)
         .write.format("noop").mode("overwrite").save()
       assert(sc.getPersistentRDDs.nonEmpty,

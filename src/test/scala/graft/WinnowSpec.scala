@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{GraftFunctions, RabinHash, TextFunctions => T}
-import graft.operators.{Dedup, TextOps}
 
 /** The md5-gram winnowing SQL device (TextFunctions.gramHashes /
   * windowMins / winnowCount — the formulation the DuckDB oracle mirrors
@@ -93,19 +92,5 @@ class WinnowSpec extends AnyFunSuite {
       assert(r.getInt(3) == ref.length && r.getInt(5) == ref.length)
       assert(r.getSeq[Long](4).toSet == ref.toSet)
     }
-  }
-
-  test("rabin=true perf path keeps schema and verdict shape") {
-    val sqlPath = Dedup.dedupWinnow(spark, dir)
-    val rabinPath = Dedup.dedupWinnow(spark, dir, rabin = true)
-    assert(rabinPath.schema == sqlPath.schema)
-    assert(rabinPath.count() == 500 && sqlPath.count() == 500)
-    // both paths must catch synthetic near-dups; hash bases differ so
-    // verdicts may differ on boundary pairs
-    assert(rabinPath.filter(!col("keep")).count() > 0)
-    assert(sqlPath.filter(!col("keep")).count() > 0)
-    val fpr = TextOps.docFingerprint(spark, dir, rabin = true)
-    assert(fpr.schema == TextOps.docFingerprint(spark, dir).schema)
-    assert(fpr.count() == 500)
   }
 }
