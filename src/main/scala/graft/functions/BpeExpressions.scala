@@ -179,10 +179,11 @@ object BpeOps {
     if (es.length <= 1) Default
     else {
       val e = es(1)
-      require(e.foldable,
+      if (!e.foldable) throw GraftFunctions.analysisError(
         "bpe_encode merges path must be a string literal, got: " + e.sql)
       val v = e.eval()
-      require(v != null, "bpe_encode merges path must not be NULL")
+      if (v == null) throw GraftFunctions.analysisError(
+        "bpe_encode merges path must not be NULL")
       loadVocab(v.toString)
     }
 }

@@ -272,43 +272,31 @@ case class RabinWinnow(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
-/** SQL registration so `expr("rabin_fingerprint(text)")` / spark.sql work. */
+/** The engine's SQL function table, for SQL text (`spark.sql`,
+  * `selectExpr`). Operators do not look functions up by name: they build
+  * the same expressions as Columns through [[TextFunctions]] and
+  * [[VectorFunctions]], so they run on any session.
+  */
 object GraftFunctions {
-  /** `word_shingles(text[, n])` — n must be a foldable int literal. */
-  private[graft] def shingleN(es: Seq[Expression]): Int =
-    if (es.length > 1) es(1).eval().asInstanceOf[Number].intValue() else 3
+  private[functions] def analysisError(msg: String) =
+    new org.apache.spark.sql.AnalysisException(
+      errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
+      messageParameters = Map("errorMessage" -> msg))
 
-  /** The second argument of a `fn(toks, n)` builder, validated at
-    * resolution time: exactly two arguments and a foldable integral
-    * literal, or a descriptive AnalysisException naming the function —
-    * a bare `es(1).eval()` on a column reference evaluates an
-    * unresolved expression (raw eval/cast error), and `es(1)` on a
-    * one-argument call throws IndexOutOfBounds.
+  /** A builder's order argument: a foldable integral literal, positive
+    * and in Int range (a 2.9 must not run as n = 2), else an
+    * AnalysisException naming the function.
     */
-  private[graft] def literalIntArg(fn: String, es: Seq[Expression]): Int = {
-    if (es.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" ->
-          s"$fn requires exactly 2 arguments (tokens, n), got ${es.length}"))
-    val arg = es(1)
-    if (!arg.foldable)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" ->
-          (s"$fn requires a literal integer as its second argument, " +
-            s"got non-foldable expression ${arg.sql}")))
-    // integral types only, in Int range: a 2.9 must not run as n=2
+  private def literalIntArg(fn: String, arg: Expression): Int = {
+    def refuse(got: String) = analysisError(s"$fn requires a positive " +
+      s"literal integer as its second argument, got $got")
+    if (!arg.foldable) throw refuse(s"non-foldable expression ${arg.sql}")
     val integral = Seq(ByteType, ShortType, IntegerType, LongType)
       .contains(arg.dataType)
     arg.eval() match {
-      case n: Number if integral && n.longValue == n.intValue => n.intValue
-      case other =>
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "_LEGACY_ERROR_USER_RAISED_EXCEPTION",
-          messageParameters = Map("errorMessage" ->
-            (s"$fn requires a literal integer as its second argument, " +
-              s"got $other")))
+      case n: Number if integral && n.longValue == n.intValue &&
+        n.intValue >= 1 => n.intValue
+      case other => throw refuse(String.valueOf(other))
     }
   }
 
@@ -316,47 +304,51 @@ object GraftFunctions {
     * registration seams read: [[graft.engine.GraftExtensions]] injects it
     * when a session is built, [[register]] binds it into a live one. An
     * extensions-only session and a registered session therefore resolve
-    * the same names.
+    * the same names. Every builder checks its argument count first
+    * ([[FunctionDef.build]]).
     */
-  val Table: Seq[FunctionDef] = Seq(
-    FunctionDef("rabin_fingerprint", classOf[RabinFingerprint],
-      es => RabinFingerprint(es.head, 8)),
-    FunctionDef("rabin_winnow", classOf[RabinWinnow],
-      es => RabinWinnow(es.head, 8, 16)),
-    FunctionDef("md5_winnow_set", classOf[Md5WinnowSet],
-      es => Md5WinnowSet(es.head,
+  val Table: Seq[FunctionDef] = {
+    def text(name: String, clazz: Class[_ <: Expression])(
+        make: Expression => Expression) =
+      FunctionDef(name, clazz, "text", 1 to 1, es => make(es.head))
+    def orderArg(name: String, clazz: Class[_ <: Expression])(
+        make: (Expression, Int) => Expression) =
+      FunctionDef(name, clazz, "tokens, n", 2 to 2,
+        es => make(es.head, literalIntArg(name, es(1))))
+    def vectors(name: String, clazz: Class[_ <: Expression])(
+        make: (Expression, Expression) => Expression) =
+      FunctionDef(name, clazz, "a, b", 2 to 2, es => make(es(0), es(1)))
+    Seq(
+      text("rabin_fingerprint", classOf[RabinFingerprint])(
+        RabinFingerprint(_, 8)),
+      text("rabin_winnow", classOf[RabinWinnow])(RabinWinnow(_, 8, 16)),
+      text("md5_winnow_set", classOf[Md5WinnowSet])(Md5WinnowSet(_,
         TextFunctions.WinnowK, TextFunctions.WinnowW)),
-    FunctionDef("md5_winnow_count", classOf[Md5WinnowCount],
-      es => Md5WinnowCount(es.head,
+      text("md5_winnow_count", classOf[Md5WinnowCount])(Md5WinnowCount(_,
         TextFunctions.WinnowK, TextFunctions.WinnowW)),
-    FunctionDef("md5_gram_min", classOf[Md5GramMin],
-      es => Md5GramMin(es.head, TextFunctions.WinnowK)),
-    FunctionDef("word_shingles", classOf[WordShingles],
-      es => WordShingles(es.head, shingleN(es))),
-    FunctionDef("bpe_encode", classOf[BpeEncode],
-      es => BpeEncode(es.head, BpeOps.vocabFromArgs(es))),
-    FunctionDef("md5_prefix60", classOf[Md5Prefix60],
-      es => Md5Prefix60(es.head)),
-    FunctionDef("word_ngrams", classOf[WordNgrams],
-      es => WordNgrams(es.head, literalIntArg("word_ngrams", es))),
-    FunctionDef("gram_rungs", classOf[GramRungs],
-      es => GramRungs(es.head, literalIntArg("gram_rungs", es))),
-    FunctionDef("gram_top_frac", classOf[GramTopFrac],
-      es => GramTopFrac(es.head, literalIntArg("gram_top_frac", es))),
-    FunctionDef("gram_dup_frac", classOf[GramDupFrac],
-      es => GramDupFrac(es.head, literalIntArg("gram_dup_frac", es))),
-    FunctionDef("cdc_chunk_texts", classOf[CdcChunkTexts],
-      es => CdcChunkTexts(es.head, literalIntArg("cdc_chunk_texts", es))),
-    FunctionDef("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))),
-    FunctionDef("vec_cosine", classOf[VecCosine],
-      es => VecCosine(es(0), es(1))),
-    FunctionDef("vec_l2sq", classOf[VecL2sq], es => VecL2sq(es(0), es(1))))
+      text("md5_gram_min", classOf[Md5GramMin])(
+        Md5GramMin(_, TextFunctions.WinnowK)),
+      FunctionDef("word_shingles", classOf[WordShingles], "text[, n]",
+        1 to 2, es => WordShingles(es.head,
+          if (es.length > 1) literalIntArg("word_shingles", es(1)) else 3)),
+      FunctionDef("bpe_encode", classOf[BpeEncode], "text[, merges_path]",
+        1 to 2, es => BpeEncode(es.head, BpeOps.vocabFromArgs(es))),
+      text("md5_prefix60", classOf[Md5Prefix60])(Md5Prefix60),
+      orderArg("word_ngrams", classOf[WordNgrams])(WordNgrams),
+      orderArg("gram_rungs", classOf[GramRungs])(GramRungs),
+      orderArg("gram_top_frac", classOf[GramTopFrac])(GramTopFrac),
+      orderArg("gram_dup_frac", classOf[GramDupFrac])(GramDupFrac),
+      orderArg("cdc_chunk_texts", classOf[CdcChunkTexts])(CdcChunkTexts),
+      vectors("vec_dot", classOf[VecDot])(VecDot),
+      vectors("vec_cosine", classOf[VecCosine])(VecCosine),
+      vectors("vec_l2sq", classOf[VecL2sq])(VecL2sq))
+  }
 
   /** Bind [[Table]] into the session's function registry, skipping every
     * name the session already binds (a GraftExtensions session, or an
-    * earlier call). Operators call this on each build, and re-binding a
-    * name would log one "replaced a previously registered function"
-    * warning per function per call.
+    * earlier call): re-binding a name would log one "replaced a
+    * previously registered function" warning per function per call.
+    * Needed only for SQL text on a session built without the extensions.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -368,9 +360,24 @@ object GraftFunctions {
 }
 
 /** One SQL function of the engine: its name, the expression class it
-  * builds (for DESCRIBE FUNCTION) and the builder over its arguments.
+  * builds (for DESCRIBE FUNCTION), its parameter list and accepted
+  * argument counts, and the builder over its arguments.
   */
 final case class FunctionDef(name: String, clazz: Class[_ <: Expression],
-                             build: Seq[Expression] => Expression) {
+                             params: String, arity: Range,
+                             make: Seq[Expression] => Expression) {
   def info: ExpressionInfo = new ExpressionInfo(clazz.getName, name)
+
+  /** The registry builder: a wrong argument count fails analysis,
+    * naming the function, instead of dropping or indexing arguments.
+    */
+  val build: Seq[Expression] => Expression = es =>
+    if (arity.contains(es.length)) make(es)
+    else throw GraftFunctions.analysisError(
+      s"$name requires $counts ($params), got ${es.length}")
+
+  private def counts: String =
+    if (arity.size > 1) s"${arity.mkString(" or ")} arguments"
+    else if (arity.head == 1) "exactly 1 argument"
+    else s"exactly ${arity.head} arguments"
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Text-analysis column functions for large-scale training-data pipelines:
@@ -12,6 +13,28 @@ import org.apache.spark.sql.functions._
   * surface at all (README.md:73-75); this module is north-star scope.
   */
 object TextFunctions {
+
+  // The engine's codegen'd expressions as Columns, one constructor each
+  // (see the expression classes). Built directly, not looked up by name,
+  // so operators run on any session and leave its function registry as
+  // they found it; GraftFunctions.Table is the SQL-text surface.
+  private def unary(c: Column)(f: Expression => Expression): Column =
+    GraftSqlBridge.column(f(GraftSqlBridge.expression(c)))
+  def md5Prefix60(c: Column): Column = unary(c)(Md5Prefix60)
+  def wordNgrams(toks: Column, m: Int): Column = unary(toks)(WordNgrams(_, m))
+  def gramRungs(toks: Column, maxM: Int): Column =
+    unary(toks)(GramRungs(_, maxM))
+  def gramTopFrac(toks: Column, m: Int): Column =
+    unary(toks)(GramTopFrac(_, m))
+  def gramDupFrac(toks: Column, m: Int): Column =
+    unary(toks)(GramDupFrac(_, m))
+  def cdcChunkTexts(toks: Column, divisor: Int): Column =
+    unary(toks)(CdcChunkTexts(_, divisor))
+  def md5WinnowSet(text: Column): Column =
+    unary(text)(Md5WinnowSet(_, WinnowK, WinnowW))
+  def md5WinnowCount(text: Column): Column =
+    unary(text)(Md5WinnowCount(_, WinnowK, WinnowW))
+  def md5GramMin(text: Column): Column = unary(text)(Md5GramMin(_, WinnowK))
 
   /** Whitespace tokenization, lowercased, empty-safe.
     *
@@ -37,7 +60,7 @@ object TextFunctions {
     * above stays for the oracle-checked text_stats — this is the
     * engine-seam upgrade a production vocab plugs into.
     */
-  def bpeEncode(c: Column): Column = call_function("bpe_encode", c)
+  def bpeEncode(c: Column): Column = unary(c)(BpeEncode(_))
 
   // ------------------------------------------------ md5-gram winnowing
 
@@ -51,8 +74,7 @@ object TextFunctions {
     * order — the SQL-expressible twin of the Rabin rolling-hash stream
     * (DuckDB mirror: `CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT)`).
     * Short-text edges match RabinHash: empty text -> empty stream; text
-    * shorter than one gram -> a single whole-text hash. Requires
-    * GraftFunctions.register (md5_prefix60).
+    * shorter than one gram -> a single whole-text hash.
     *
     * The lambda runs interpreted (higher-order functions skip codegen),
     * but the hash itself is the digest-bytes fast path and documents
@@ -64,9 +86,9 @@ object TextFunctions {
   def gramHashes(text: Column, k: Int = WinnowK): Column = {
     val m = length(text) - k + 1
     when(length(text) === 0, expr("array()").cast("array<bigint>"))
-      .when(m < 1, array(call_function("md5_prefix60", text)))
+      .when(m < 1, array(md5Prefix60(text)))
       .otherwise(transform(sequence(lit(1), m),
-        i => call_function("md5_prefix60", text.substr(i, lit(k)))))
+        i => md5Prefix60(text.substr(i, lit(k)))))
   }
 
   /** Sliding-window minima of a gram-hash stream — winnowing's pick per
@@ -171,5 +193,5 @@ object TextFunctions {
     * replaced was interpreted and ~100x slower on the corpus pass.
     */
   def wordShingles(c: Column, n: Int): Column =
-    call_function("word_shingles", c, lit(n))
+    unary(c)(WordShingles(_, n))
 }

@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Vector math over ARRAY<FLOAT> embedding columns, backed by the
   * codegen'd Catalyst expressions in [[VecOps]] (see VectorExpressions
   * .scala — the higher-order-function formulation was interpreted and
-  * dominated every pair-verify stage). Callers must have
-  * [[GraftFunctions.register]] applied to the session; every operator
-  * entry point does this defensively.
+  * dominated every pair-verify stage). Each helper builds its
+  * expression directly, with no function-registry lookup, so it
+  * resolves on any session, with or without [[GraftFunctions.register]].
   *
   * Precision discipline: elements are widened to double BEFORE
   * multiplying and the fold is left-to-right, so the result is
@@ -17,14 +18,17 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  private def binary(a: Column, b: Column)(
+      f: (Expression, Expression) => Expression): Column =
+    GraftSqlBridge.column(
+      f(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
+  def dot(a: Column, b: Column): Column = binary(a, b)(VecDot)
 
-  def cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
+  def cosine(a: Column, b: Column): Column = binary(a, b)(VecCosine)
 
   /** Squared L2 distance — the IVF probe-assignment metric. */
-  def l2sq(a: Column, b: Column): Column = call_function("vec_l2sq", a, b)
+  def l2sq(a: Column, b: Column): Column = binary(a, b)(VecL2sq)
 
   /** Random-hyperplane LSH signature: `planes` is a small deterministic
     * matrix (seeded off-driver, broadcast as literals); bit j of the result

@@ -53,7 +53,6 @@ object Ann {
       s, table(s, dir, "embeddings"), s"$dir/embeddings.parquet")
 
   def annBruteforce(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = table(s, dir, "embeddings")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -289,7 +288,6 @@ object Ann {
 
   def annIvf(s: SparkSession, dir: String, nCentroids: Int = IvfCentroids,
              nProbe: Int = IvfProbe): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val centroids = fitCentroids(s, dir, nCentroids)
     // Corpus assignment in the plan, NOT via MLlib transform: the
     // native [[cellAssign]] expression (flat strict-< argmin at the
@@ -427,7 +425,6 @@ object Ann {
     */
   def ivfIndexPath(s: SparkSession, dir: String): String =
     ivfIndexCache.computeIfAbsent(dir, { _ =>
-      graft.functions.GraftFunctions.register(s)
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val path = new java.io.File(
@@ -484,7 +481,6 @@ object Ann {
     */
   def annIncremental(s: SparkSession, dir: String,
                      nProbe: Int = IvfProbe): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val centroids =
       fitCentroids(s, dir, ivfCellsFor(corpusCount(s, dir)))
     val index = s.read.parquet(ivfIndexPath(s, dir))
@@ -685,7 +681,6 @@ object Ann {
     */
   def annPq(s: SparkSession, dir: String,
             shortlistOpt: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // 0 = size-adaptive (the default): [[shortlistFor]] holds the
     // scanned fraction, so the recall floor survives corpus growth; an
     // explicit positive value pins the historical behavior
@@ -757,7 +752,6 @@ object Ann {
     */
   def annIvfPq(s: SparkSession, dir: String,
                shortlistOpt: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // size-adaptive shortlist, as in [[annPq]]
     val shortlist = if (shortlistOpt > 0) shortlistOpt
       else shortlistFor(corpusCount(s, dir))
@@ -915,7 +909,6 @@ object Ann {
   def annLsh(s: SparkSession, dir: String, nBits: Int = LshBits,
              nTables: Int = LshTables,
              probeBits: Int = LshProbeBits): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sigs = (0 until nTables).map(t =>
       V.hyperplaneBucket(col("embedding"), planes(nBits, 64, lshSeed(t)))
         .as(s"b$t"))
@@ -1059,7 +1052,6 @@ object Ann {
     * division — bit-identical cross-engine, no rounding device).
     */
   def annAutoProbe(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val centroids = fitCentroids(s, dir, IvfCentroids)
     val maxProbe = ProbeLadder.max
     val assigned = table(s, dir, "embeddings")
@@ -1146,7 +1138,6 @@ object Ann {
     * harness hashes scalars, not arrays.
     */
   def projectEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val g = planes(JlDim, 64, JlSeed)
     val scale = 1.0 / math.sqrt(JlDim.toDouble)
     val comps = g.map { row =>
@@ -1298,7 +1289,6 @@ object Ann {
     * reproducibility device.
     */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = table(s, dir, "embeddings")
     // size-adaptive stride: ~KnnAuditQueries query nodes at any corpus
     // size, so the exact pass stays O(n) (see strideFor)
@@ -1411,7 +1401,6 @@ object Ann {
     * records whether the floor was missed for [[refineFor]].
     */
   private def autotuneTables(s: SparkSession, dir: String, n: Long): Int = {
-    graft.functions.GraftFunctions.register(s)
     val nBits = bitsFor(n)
     val tMax = AutoTablesLadder.max
     val stride = strideFor(n)
@@ -1574,7 +1563,6 @@ object Ann {
   private[graft] def knnRefineRound(s: SparkSession, dir: String,
       base0: DataFrame, nBitsOpt: Int, probeBits: Int,
       srcStride: Long, rounds: Int = KnnRefineRounds): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // the base graph is consumed by each round's expansion, the
     // candidate-id collect (audit path), and the union — pin it once
     // (small: |src| × fan rows of ids)
@@ -1643,7 +1631,6 @@ object Ann {
                        srcStride: Long = 0,
                        srcIds: Array[Long] = null,
                        k: Int = KnnK): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // 0 = size-adaptive (the default): [[bitsFor]] keeps the expected
     // cell at TargetCellRows so the bucket self-join scales linearly;
     // an explicit positive width pins the historical behavior

@@ -93,7 +93,6 @@ object Curation {
     * shingles shared.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     val par = s.sparkContext.defaultParallelism
     val sh = docs.repartition(par).select(col("doc_id"),
@@ -145,7 +144,6 @@ object Curation {
     * round(6) on exact integers — engine-agreed.
     */
   def decontaminateFuzzy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     // leak probes: bench first-ceil-half ++ successor's floor-tail-half,
     // token-aligned so the re-tokenized splice is exactly the two slices
@@ -646,7 +644,6 @@ object Curation {
   }
 
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     // localCheckpoint: the (doc, bucket) count frame has two consumers
     // (the bucket-table aggregate and the per-doc score join) whose
@@ -655,7 +652,7 @@ object Curation {
     val tf = docs
       .select(col("doc_id"), col("lang"),
         explode(T.tokens(col("text"))).as("term"))
-      .withColumn("b", pmod(call_function("md5_prefix60", col("term")),
+      .withColumn("b", pmod(T.md5Prefix60(col("term")),
         lit(DsirBuckets.toLong)))
       .groupBy(col("doc_id"), col("lang"), col("b"))
       .agg(count(lit(1)).as("tf"))

@@ -132,10 +132,6 @@ object Dedup {
     */
   private[graft] def minhashBandTuples(s: SparkSession,
                                        docs: DataFrame): DataFrame = {
-    // word_shingles is a registry function (codegen'd Catalyst expression);
-    // register defensively — the caller's session may not carry
-    // GraftExtensions (same pattern as TextOps.docFingerprint).
-    graft.functions.GraftFunctions.register(s)
     // Signature in the vectorized shape: explode shingles, md5 each
     // shingle ONCE, then derive the 64 family members arithmetically
     // (see SigMask above). min() aggregates give map-side partial combine
@@ -152,8 +148,7 @@ object Dedup {
       // md5_prefix60 = conv(substring(md5(sh),1,15),16,10) computed from
       // the digest bytes (no hex-string round trip); h1/h2 are disjoint-
       // enough 30-bit slices of it (bits 57..28 and 29..0)
-      .select(col("doc_id"),
-        call_function("md5_prefix60", col("sh")).as("p"))
+      .select(col("doc_id"), T.md5Prefix60(col("sh")).as("p"))
       .select(col("doc_id"),
         shiftright(col("p"), 28).bitwiseAND(lit(SigMask)).as("h1"),
         (col("p").bitwiseAND(lit(SigMask)).bitwiseOR(lit(1L))).as("h2"))
@@ -781,12 +776,11 @@ object Dedup {
     * size (vs. folding 60 times per row inside a projection).
     */
   def simhashSignatures(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tok = table(s, dir, "documents")
       .select(col("doc_id"), explode(T.tokens(col("text"))).as("tok"))
       // md5_prefix60 = conv(substring(md5(tok),1,15),16,10), minus the
       // hex string round trip (codegen'd; see Md5Ops)
-      .withColumn("h", call_function("md5_prefix60", col("tok")))
+      .withColumn("h", T.md5Prefix60(col("tok")))
     val voteCols = (0 until SimhashBits).map { j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"v$j")
@@ -1097,14 +1091,13 @@ object Dedup {
   def dedupWinnow(s: SparkSession, dir: String,
                   minShared: Int = MinSharedFps,
                   minRatio: Double = MinSharedRatio): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     val par = s.sparkContext.defaultParallelism
     // md5_winnow_set is the COMPILED twin of the SQL-device formulation
     // array_distinct(T.windowMins(T.gramHashes(text))) — value-identical
     // (pinned in WinnowSpec), ~40x faster (one codegen'd call per row vs
     // interpreted per-window slice lambdas)
-    val fpSet = expr("md5_winnow_set(text)")
+    val fpSet = T.md5WinnowSet(col("text"))
     // per-doc fp dedup happens INSIDE the row (array_distinct before the
     // explode) — a post-explode distinct() would shuffle the whole
     // fingerprint stream for the same result
@@ -1345,7 +1338,6 @@ object Dedup {
   def dedupEmbeddingLsh(s: SparkSession, dir: String,
                         threshold: Double = 0.4,
                         nBitsOpt: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // 0 = size-adaptive code width (Ann.bitsFor): cells track
     // Ann.TargetCellRows instead of n/64, so the cap never mass-drops
     // and the bucket join stays linear — nBits "~ log2(corpus /
@@ -1430,7 +1422,6 @@ object Dedup {
   def dedupSemantic(s: SparkSession, dir: String,
                     nClusters: Int = 0,
                     threshold: Double = SemDedupCos): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // 0 = size-adaptive (the default): k tracks the corpus so cells
     // stay near SemTargetCell; an explicit k pins behavior
     val k = if (nClusters > 0) nClusters
@@ -1898,7 +1889,6 @@ object Dedup {
 
   def dedupEmbedding(s: SparkSession, dir: String,
                      threshold: Double = 0.4): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // The cap window plants Exchange(label) — which is exactly the pair
     // join's key — so with a merge hint (nothing corpus-sized may
     // broadcast) BOTH self-join sides reuse that one exchange and the
@@ -1945,7 +1935,6 @@ object Dedup {
     * exhibit, so the floor is a tight regression guard, not a formality.
     */
   def dedupRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val flagged = dedupMinhash(s, dir).filter(col("dup_of").isNotNull)
       .select(col("doc_id"))
     val sh = table(s, dir, "documents")
@@ -2016,15 +2005,14 @@ object Dedup {
     * arithmetic is integer/string — both engines agree bit for bit.
     */
   def cdcChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // engine-guarded spread: the per-token md5 boundary pass runs
     // inside the scan stage — single task on an under-split table (the
     // dedup_ngram lesson, via Partitioning.spreadIfNarrow so a wide
     // production scan skips the exchange)
     val chunks = graft.engine.Partitioning.spreadIfNarrow(s,
         table(s, dir, "documents"), s"$dir/documents.parquet")
-      .select(col("doc_id"), explode(call_function("cdc_chunk_texts",
-        T.tokens(col("text")), lit(CdcDivisor))).as("chunk_text"))
+      .select(col("doc_id"), explode(T.cdcChunkTexts(
+        T.tokens(col("text")), CdcDivisor)).as("chunk_text"))
     chunks
       .groupBy(md5(col("chunk_text")).as("chunk_hash"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),

@@ -249,7 +249,6 @@ object Ranking {
   def hybridRankFusion(s: SparkSession, dir: String,
                        k: Int = RrfTopK): DataFrame = {
     import graft.functions.{VectorFunctions => V}
-    graft.functions.GraftFunctions.register(s)
     val bm = bm25Search(s, dir)
       .select(col("doc_id"), col("rank").as("r_bm25"))
     val e = table(s, dir, "embeddings")
@@ -295,15 +294,13 @@ object Ranking {
     */
   def bigramLogLikelihood(s: SparkSession, dir: String,
                           keepAbove: Double = -10.0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     val bigrams = docs
       .select(col("doc_id"), T.tokens(col("text")).as("toks"))
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= 2)
       // codegen'd gram generator — see bigramsOf
-      .select(col("doc_id"), explode(
-        call_function("word_ngrams", col("toks"), lit(2))).as("bg"))
+      .select(col("doc_id"), explode(T.wordNgrams(col("toks"), 2)).as("bg"))
     val tf = bigrams.groupBy(col("doc_id"), col("bg"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -361,7 +358,6 @@ object Ranking {
                          avgCol: String): DataFrame = {
     require(n >= 3, s"the backoff ladder starts at n=3 (got $n); " +
       "unigram/bigram scoring have their own closed forms")
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     val base = spreadDocs(s, dir)
       .select(col("doc_id"), T.tokens(col("text")).as("toks"))
@@ -372,7 +368,7 @@ object Ranking {
     // interpreted per element — see bigramsOf)
     def gramsOf(m: Int): Column =
       if (m == 1) col("toks")
-      else call_function("word_ngrams", col("toks"), lit(m))
+      else T.wordNgrams(col("toks"), m)
     // ALL lower-order rung counts (m = 1..n-1) from ONE tokenize+explode
     // pass, keyed by the TAGGED string "m:gram": per position i, the
     // m-grams of every order starting there (m <= min(n-1, nt-i+1)) —
@@ -394,7 +390,7 @@ object Ranking {
     // array_join(slice(toks, i, m), " "))))) — identical tagged strings
     // in identical order, one tight loop instead of nested interpreted
     // lambdas (NgramExpressions scaladoc has the measurement)
-    val rungPairs = call_function("gram_rungs", col("toks"), lit(n - 1))
+    val rungPairs = T.gramRungs(col("toks"), n - 1)
     val rungCounts = base
       .select(explode(rungPairs).as("gk"))
       .groupBy(col("gk")).agg(count(lit(1)).as("c"))
@@ -515,13 +511,11 @@ object Ranking {
     * put the corpus tokenize+gram stages at ~0.5-0.6 s of single-task
     * CPU each at sf0.1, dominated by lambda interpretation), where the
     * expression emits the identical strings in one codegen'd loop.
-    * Callers must have GraftFunctions registered.
     */
   private def bigramsOf(docs: DataFrame, keep: Column*): DataFrame =
     docs.select(keep :+ T.tokens(col("text")).as("toks"): _*)
       .filter(size(col("toks")) >= 2)
-      .select(keep :+ explode(
-        call_function("word_ngrams", col("toks"), lit(2))).as("bg"): _*)
+      .select(keep :+ explode(T.wordNgrams(col("toks"), 2)).as("bg"): _*)
 
   /** Collocation extraction floor and report size. */
   val CollocMinCount = 5
@@ -550,7 +544,6 @@ object Ranking {
     * before ranking so the TakeOrdered sees only candidate phrases.
     */
   def collocationsPmi(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cnt = bigramsOf(table(s, dir, "documents"))
       .groupBy(col("bg")).agg(count(lit(1)).as("cbg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -632,7 +625,6 @@ object Ranking {
     */
   def kneserNeyLogLikelihood(s: SparkSession, dir: String,
                              keepAbove: Double = -9.0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     val tf = bigramsOf(docs, col("doc_id"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf"))

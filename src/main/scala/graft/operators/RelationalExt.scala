@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Relational.dsum
 import graft.sources.Tables.table
+import graft.sql.QueryFacade
 
 /** Second tranche of the relational surface: the remaining join shapes,
   * grouping-set variants, analytic windows, statistical/ordered/collection
@@ -453,18 +454,18 @@ object RelationalExt {
 
   /** Explicit GROUPING SETS (the general form rollup/cube specialize; the
     * DataFrame API has no direct operator, so this goes through the SQL
-    * surface — still one shuffle with map-side expansion).
+    * surface — still one shuffle with map-side expansion). SQL queries
+    * here go through `QueryFacade.run`: its `read_files` views are
+    * UUID-named and dropped after analysis, so none leaks or races.
     */
-  def groupingSets(s: SparkSession, dir: String): DataFrame = {
-    table(s, dir, "lineitem").createOrReplaceTempView("graft_li_gs")
-    s.sql("""
+  def groupingSets(s: SparkSession, dir: String): DataFrame =
+    QueryFacade.run(s, s"""
       SELECT l_returnflag, l_suppkey, sum(l_quantity) AS sum_qty,
         count(*) AS n,
         CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
         CAST(GROUPING(l_suppkey) AS INT) AS g_sk
-      FROM graft_li_gs
+      FROM read_files('$dir/lineitem.parquet')
       GROUP BY GROUPING SETS ((l_returnflag), (l_suppkey), ())""")
-  }
 
   /** Range-join band width (absolute difference bound on acctbal). */
   val RangeJoinWidth = 1.0
@@ -504,23 +505,20 @@ object RelationalExt {
     * corpus-sized nested loop). The predicate compares exact values
     * (max of a decimal column), so the result is engine-deterministic.
     */
-  def subqCorrelated(s: SparkSession, dir: String): DataFrame = {
-    table(s, dir, "lineitem").createOrReplaceTempView("graft_li_corr")
-    s.sql("""
+  def subqCorrelated(s: SparkSession, dir: String): DataFrame =
+    QueryFacade.run(s, s"""
       SELECT l_orderkey, l_linenumber, l_quantity
-      FROM graft_li_corr l
+      FROM read_files('$dir/lineitem.parquet') l
       WHERE l_quantity = (SELECT max(l2.l_quantity)
-                          FROM graft_li_corr l2
+                          FROM read_files('$dir/lineitem.parquet') l2
                           WHERE l2.l_orderkey = l.l_orderkey)""")
-  }
 
   /** RANGE window frame (vs the ROWS frames elsewhere): peers are
     * VALUE-based — every row within 2 of the current key joins the
     * frame regardless of tie count. Integer sums, exact both engines.
     */
-  def windowRangeFrame(s: SparkSession, dir: String): DataFrame = {
-    table(s, dir, "orders").createOrReplaceTempView("graft_ord_rng")
-    s.sql("""
+  def windowRangeFrame(s: SparkSession, dir: String): DataFrame =
+    QueryFacade.run(s, s"""
       SELECT o_orderkey, o_custkey,
         CAST(sum(o_orderkey) OVER (
           PARTITION BY o_custkey ORDER BY o_orderkey
@@ -529,8 +527,7 @@ object RelationalExt {
         CAST(count(*) OVER (
           PARTITION BY o_custkey ORDER BY o_orderkey
           RANGE BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS rng_n
-      FROM graft_ord_rng""")
-  }
+      FROM read_files('$dir/orders.parquet')""")
 
   /** Semi-structured JSON column handling: schema-on-read extraction from
     * the events props payload. ONE from_json pass with the full schema —

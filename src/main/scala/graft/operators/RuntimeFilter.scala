@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions.md5Prefix60
 import graft.sources.Tables.table
 
 /** Bloom-filter semi-join reduction — the "runtime filter" / sideways-
@@ -61,7 +62,7 @@ object RuntimeFilter {
     * that matters (the simhash signatures use it for the same reason).
     */
   def bloomHashes(key: Column): (Column, Column) = {
-    val p = call_function("md5_prefix60", key.cast("string"))
+    val p = md5Prefix60(key.cast("string"))
     (shiftright(p, 28).bitwiseAND(lit(KmMask)),
       p.bitwiseAND(lit(KmMask)).bitwiseOR(lit(1L)))
   }
@@ -76,7 +77,6 @@ object RuntimeFilter {
     * key column; the result is broadcast to every probe join.
     */
   def bloomBuild(keys: DataFrame, keyCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(keys.sparkSession)
     keys
       .select(explode(array((0 until BloomK).map(j =>
         bloomPos(j, col(keyCol))): _*)).as("pos"))
@@ -94,7 +94,6 @@ object RuntimeFilter {
     */
   def bloomMightContain(fact: DataFrame, keyCol: String,
                         words: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(fact.sparkSession)
     val tested = (0 until BloomK).foldLeft(fact) { (df, j) =>
       val w = broadcast(words.select(col("w_idx").as(s"_w$j"),
         col("word").as(s"_word$j")))

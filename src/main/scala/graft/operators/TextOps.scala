@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, TextFunctions => T}
+import graft.functions.{TextFunctions => T}
 import graft.sources.Tables.table
 
 /** Text-analysis queries over the `documents` table — the language-ID,
@@ -53,7 +53,6 @@ object TextOps {
     * by value.
     */
   def docFingerprint(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     // compiled twins of the TextFunctions SQL device (WinnowSpec pins
@@ -63,8 +62,8 @@ object TextOps {
     // (single-split trap; measured 3.1->0.9 s)
     table(s, dir, "documents")
       .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), expr("md5_gram_min(text)").as("fp"),
-        expr("md5_winnow_count(text)").as("n_winnow"))
+      .select(col("doc_id"), T.md5GramMin(col("text")).as("fp"),
+        T.md5WinnowCount(col("text")).as("n_winnow"))
       .withColumn("first_doc", first(col("doc_id")).over(w))
       .withColumn("is_dup", col("doc_id") =!= col("first_doc"))
   }
@@ -99,7 +98,6 @@ object TextOps {
     * project, zero exchanges.
     */
   def qualityRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = table(s, dir, "documents")
     // null when the doc has fewer than nn tokens — the same null the
     // former filter(n >= nn) + left join produced; the keep verdict
@@ -107,9 +105,9 @@ object TextOps {
     val raw = docs
       .select(col("doc_id"), T.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
-        call_function("gram_top_frac", col("toks"), lit(2)).as("t2"),
-        call_function("gram_top_frac", col("toks"), lit(3)).as("t3"),
-        call_function("gram_dup_frac", col("toks"), lit(5)).as("d5"))
+        T.gramTopFrac(col("toks"), 2).as("t2"),
+        T.gramTopFrac(col("toks"), 3).as("t3"),
+        T.gramDupFrac(col("toks"), 5).as("d5"))
     raw.select(col("doc_id"),
       round(col("t2"), 4).as("top2_frac"),
       round(col("t3"), 4).as("top3_frac"),

@@ -357,7 +357,6 @@ object AnnStream {
 
   private def runFold(s: SparkSession, dir: String, chunks: Int,
                       nProbe: Int): String = {
-    graft.functions.GraftFunctions.register(s)
     val base = Files.createTempDirectory("graft-ann-stream")
     val root = base.resolve("store").toString
     val in = base.resolve("in")

@@ -28,7 +28,6 @@ class AnnProbeSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("flat cellTopN == the window-rank probe it replaced, cell for cell") {
-    graft.functions.GraftFunctions.register(spark)
     val cents = Ann.fitCentroids(spark, dir, Ann.IvfCentroids)
     val nProbe = Ann.IvfProbe
     val e = graft.sources.Tables.table(spark, dir, "embeddings")
@@ -58,7 +57,6 @@ class AnnProbeSpec extends AnyFunSuite {
 
   test("two-level cellTopN == an independent reference of the prefix-walk " +
        "rule, above the strategy switch") {
-    graft.functions.GraftFunctions.register(spark)
     // force k above TwoLevelAssignThreshold on the small corpus
     val k = 100
     require(k > Ann.TwoLevelAssignThreshold)

@@ -213,21 +213,19 @@ class RankingSpec extends AnyFunSuite {
     }
   }
 
+  // the registry may wrap the builder's AnalysisException; the
+  // contract is that the DESCRIPTIVE message (function name, what a
+  // valid call looks like) reaches the user, wrapped or not
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+  private def fullMsg(t: Throwable): String =
+    causes(t).map(_.getMessage).mkString("\n")
+
   test("word_ngrams / gram_rungs raise a descriptive analysis error on " +
        "a missing or non-literal order argument") {
     graft.functions.GraftFunctions.register(spark)
     val df = spark.range(1).selectExpr("array('a','b') AS toks",
       "2 AS n_col")
-    // the registry may wrap the builder's AnalysisException; the
-    // contract is that the DESCRIPTIVE message (function name, what a
-    // valid call looks like) reaches the user, wrapped or not
-    def fullMsg(t: Throwable): String = {
-      var cur: Throwable = t
-      val sb = new StringBuilder
-      while (cur != null) { sb.append(cur.getMessage).append('\n')
-        cur = cur.getCause }
-      sb.toString
-    }
     for (fn <- Seq("word_ngrams", "gram_rungs")) {
       val e1 = intercept[Exception] {
         df.selectExpr(s"$fn(toks)").collect()
@@ -248,6 +246,45 @@ class RankingSpec extends AnyFunSuite {
         assert(fullMsg(e3).contains("literal integer"), fullMsg(e3))
       }
     }
+  }
+
+  test("every SQL function builder checks its argument count and " +
+       "literal arguments, failing analysis with the function's name") {
+    graft.functions.GraftFunctions.register(spark)
+    val df = spark.range(1).selectExpr("'a b c d' AS text", "2 AS n_col")
+    def refused(call: String, says: String): Unit = {
+      val e = intercept[Exception](df.selectExpr(call).collect())
+      assert(causes(e).exists(_.isInstanceOf[
+        org.apache.spark.sql.AnalysisException]), s"$call: $e")
+      val fn = call.takeWhile(_ != '(')
+      assert(fullMsg(e).contains(fn), s"$call: ${fullMsg(e)}")
+      assert(fullMsg(e).contains(says), s"$call: ${fullMsg(e)}")
+    }
+    Seq(
+      "word_shingles(text, 2.9D)" -> "literal integer",
+      "word_shingles(text, n_col)" -> "literal integer",
+      "word_shingles(text, 0)" -> "positive literal integer",
+      "word_ngrams(split(text, ' '), 0)" -> "positive literal integer",
+      "gram_rungs(split(text, ' '), -1)" -> "positive literal integer",
+      "word_shingles(text, 2, 7)" -> "1 or 2 arguments",
+      "rabin_fingerprint(text, 5)" -> "exactly 1 argument",
+      "rabin_winnow(text, 5)" -> "exactly 1 argument",
+      "vec_dot(array(1.0F))" -> "exactly 2 arguments",
+      "bpe_encode(text, text)" -> "string literal",
+      "bpe_encode(text, CAST(NULL AS STRING))" -> "must not be NULL",
+      "bpe_encode(text, 'a', 'b')" -> "1 or 2 arguments"
+    ).foreach { case (call, says) => refused(call, says) }
+    // too few and too many arguments, for every function in the table
+    for (f <- graft.functions.GraftFunctions.Table) {
+      refused(s"${f.name}()", "argument")
+      refused(f.name + Seq.fill(f.arity.max + 1)("text")
+        .mkString("(", ", ", ")"), "argument")
+    }
+    // the one-argument form keeps its default order n = 3
+    val dflt = df.selectExpr("word_shingles(text) AS a",
+      "word_shingles(text, 3) AS b").collect()(0)
+    assert(dflt.getSeq[String](0) === dflt.getSeq[String](1))
+    assert(dflt.getSeq[String](0).contains("a b c"))
   }
 
   test("unigram_ll: gibberish scores far below common text") {

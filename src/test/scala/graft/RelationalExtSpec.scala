@@ -135,4 +135,18 @@ class RelationalExtSpec extends AnyFunSuite {
     assert(chained.filter(col("prev_status").isNotNull &&
       col("prev_status") === col("status")).count() === 0L)
   }
+
+  test("grouping_sets, subq_correlated and window_range_frame leave no " +
+       "temp view in the caller's catalog") {
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables
+    val dfs = Seq(RelationalExt.groupingSets(spark, dir),
+      RelationalExt.subqCorrelated(spark, dir),
+      RelationalExt.windowRangeFrame(spark, dir))
+    dfs.foreach(df => assert(df.count() > 0L))
+    val after = tables
+    for (v <- Seq("graft_li_gs", "graft_li_corr", "graft_ord_rng"))
+      assert(!after.contains(v), s"$v left behind")
+    assert(after === before, s"new views: ${after -- before}")
+  }
 }

@@ -113,6 +113,33 @@ class SessionSpec extends AnyFunSuite {
       (set -- ConfKeys).toSeq.sorted)
   }
 
+  test("one route to engine expressions: src/main neither installs the " +
+       "function table outside graft/functions nor calls a table " +
+       "function by name") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val installs = files
+      .filterNot(_.startsWith(root.resolve("graft/functions")))
+      .filter(p => text(p).contains("GraftFunctions.register("))
+    assert(installs.isEmpty, s"operators must not install the function " +
+      s"table (build Columns via TextFunctions/VectorFunctions): $installs")
+    val names = graft.functions.GraftFunctions.Table.map(_.name)
+    val CallByName = """call_function\(\s*"([^"]*)"""".r
+    val ExprText = """expr\(\s*"([^"]*)"""".r
+    val byName = for {
+      p <- files
+      t = text(p)
+      hit <- CallByName.findAllMatchIn(t).map(_.group(1))
+        .filter(names.contains) ++
+        ExprText.findAllMatchIn(t).map(_.group(1))
+          .filter(e => names.exists(n => e.contains(s"$n(")))
+    } yield s"$p: $hit"
+    assert(byName.isEmpty, s"engine functions called by name: $byName")
+  }
+
   test("sessions carry no engine optimizer rule, and bloom_join_auto " +
        "leaves the session's extraOptimizations as it found them") {
     def engineRules(s: org.apache.spark.sql.SparkSession): Seq[String] =

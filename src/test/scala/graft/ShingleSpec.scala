@@ -110,7 +110,6 @@ class ShingleSpec extends AnyFunSuite {
   }
 
   test("WordShingles matches the replaced HOF formulation on fuzzed text") {
-    graft.functions.GraftFunctions.register(spark)
     val word = Gen.oneOf(
       Gen.alphaNumStr.map(_.take(6)),
       Gen.oneOf("the", "The", "Élan", "ÑOÑO", "x,y.z", "a-b", "", " ",
