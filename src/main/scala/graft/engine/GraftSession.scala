@@ -19,6 +19,12 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle.partitions defaults to the local core count here; on a real
   *    cluster you'd size it ~2-3x total cores and let AQE coalesce down.
   *  - UTC session timezone for oracle (DuckDB) parity.
+  *  - [[EngineConfs]]: the read semantics the engine's sources rely on.
+  *
+  * The session is configured here, once; no call into the engine writes
+  * a conf of the caller's session afterwards (`SessionSpec` guards it).
+  * The one deliberate exception is [[Partitioning.autoTune]], the
+  * once-per-corpus deployment call.
   */
 object GraftSession {
 
@@ -28,8 +34,33 @@ object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
+  /** Session-wide read semantics, applied by [[builder]] (and by the
+    * test session) so they hold from the first statement on:
+    *
+    *  - `spark.sql.legacy.parquet.nanosAsLong`: `read_files` reads
+    *    whatever Parquet schema the files carry, as the reference
+    *    streams any Arrow schema. Spark's reader rejects
+    *    TIMESTAMP(NANOS) columns with `PARQUET_TYPE_ILLEGAL` unless this
+    *    conf surfaces them as raw nanosecond longs;
+    *    [[graft.sources.Tables.events]] and
+    *    [[graft.streaming.EventStreams.readEventStream]] turn those into
+    *    timestamps. A session built without this map (the bare session
+    *    of `graft.SmokeCheck`) keeps Spark's default and fails on such a
+    *    file with `PARQUET_TYPE_ILLEGAL`.
+    *  - `spark.sql.legacy.bucketedTableScan.outputOrdering`: a bucketed
+    *    scan reports its `sortBy` ordering, so a sort-merge join on the
+    *    bucket key skips its per-partition sorts
+    *    ([[graft.operators.Bucketing.bucketJoin]]). Spark checks at
+    *    planning that each bucket is one file, which is what makes the
+    *    ordering sound, and reports no ordering otherwise.
+    */
+  val EngineConfs: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
+      .config(EngineConfs)
       .appName(appName)
       .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")

@@ -171,27 +171,20 @@ object Partitioning {
     * KNOWS its amplification, so it declares rows × bytes-per-row here;
     * the width is in-flight bytes over
     * [[TargetInFlightBytesPerPartition]], floored at the session's
-    * CURRENT width (never tunes down — [[autoTune]]'s corpus-level
-    * choice stays the floor), capped at [[MaxPartitions]]. Sets the
-    * same two runtime confs as [[autoTune]]; on a cluster this is the
-    * per-query `spark.sql.shuffle.partitions` a job submitter sets for
-    * a known-heavy stage. Inert at every gate/bench SF (the derived
-    * width stays below the session width there — same fixed-point
-    * discipline as the adaptive ANN/dedup geometry).
+    * current width (never tunes down — [[autoTune]]'s corpus-level
+    * choice stays the floor), capped at [[MaxPartitions]]. A pure
+    * function: the caller pins the width on its own exchanges
+    * (`repartition(n, ...)`), so no session conf changes. Equal to the
+    * session width at every gate/bench SF, where the byte-derived width
+    * stays below it (same fixed-point discipline as the adaptive
+    * ANN/dedup geometry).
     */
-  def ensureWidthFor(spark: SparkSession, rows: Long, rowBytes: Long): Int = {
+  def widthFor(spark: SparkSession, rows: Long, rowBytes: Long): Int = {
     val current = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val fromBytes =
       (rows * rowBytes + TargetInFlightBytesPerPartition - 1) /
         TargetInFlightBytesPerPartition
-    val w = math.min(MaxPartitions.toLong,
+    math.min(MaxPartitions.toLong,
       math.max(current.toLong, fromBytes)).toInt
-    if (w > current) {
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        w.toString)
-      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-    }
-    w
   }
 }

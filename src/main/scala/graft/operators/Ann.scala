@@ -1657,9 +1657,9 @@ object Ann {
     // from those in-flight bytes, not the corpus's input bytes
     // (Partitioning.autoTune's input-byte target under-weights this
     // operator's ~300× amplification: the ×100 run ground multi-GiB
-    // partial-aggregate spills per task before this). Inert at every
-    // gate/bench SF — the derived width stays below the session width.
-    val joinW = graft.engine.Partitioning.ensureWidthFor(s,
+    // partial-aggregate spills per task before this). Equal to the
+    // session width at every gate/bench SF.
+    val joinW = graft.engine.Partitioning.widthFor(s,
       corpusCount(s, dir) * nTables * (masks.length + 1L), 64L * 4 + 48)
     val qProbes = array((for { t <- 0 until nTables; m <- masks } yield
       struct(lit(t).as("tbl"),
@@ -1691,7 +1691,7 @@ object Ann {
     val cellW = Window.partitionBy(col("tbl"), col("bucket"))
     val corpusN = e.agg(count(lit(1)).as("_n"))
     // width-PINNED (tbl, bucket) repartitions on both join inputs, at
-    // exactly the ensureWidthFor width: they replace the exchanges
+    // exactly the widthFor width: they replace the exchanges
     // EnsureRequirements would plant (the cap window and the join both
     // cluster on (tbl, bucket) — no exchange is added), but a
     // user-specified width is exempt from AQE partition coalescing.

@@ -115,17 +115,13 @@ object Bucketing {
   /** lineitem ⋈ orders on the bucket key, then a tiny priority rollup.
     * The merge hint keeps the demo in the sort-merge regime the layout
     * targets (a broadcast of sf0.001's orders would hide the point; at
-    * the scales bucketing exists for, neither side broadcasts).
+    * the scales bucketing exists for, neither side broadcasts). The join
+    * skips its per-partition sorts on a session with the engine's
+    * `bucketedTableScan.outputOrdering` conf (`GraftSession.EngineConfs`),
+    * since ensureBucketed writes one file per bucket.
     */
   def bucketJoin(s: SparkSession, dir: String): DataFrame = {
     val (lb, ob) = ensureBucketed(s, dir)
-    // Spark ≥3.0 reports only the PARTITIONING of a bucketed scan by
-    // default; reporting the sortBy ORDERING (which lets SMJ skip its
-    // per-partition sorts) requires this conf because it is only sound
-    // with one file per bucket — exactly what ensureBucketed's aligned
-    // repartition wrote — and checking that costs an eager file listing
-    // at planning time (the honest price; amortized like the layout).
-    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     s.table(lb).hint("merge")
       .join(s.table(ob), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))

@@ -161,7 +161,7 @@ object Maintenance {
     */
   def compactFiles(s: SparkSession, dir: String): DataFrame = {
     val src = table(s, dir, "part")
-    val base = graft.sources.RoundTrip.scratch(s, "compact", dir)
+    val base = graft.sources.RoundTrip.scratch("compact", dir)
     val mixed = s"$base/mixed"
     // right-sized generation: 3/4 of the table in two files
     src.filter(col("p_partkey") % 4 =!= 0).repartition(2)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale note: the write is a plain distributed `df.write` (one file per
   * partition, no driver materialization) and the read-back plans one task
   * per file split, so the shape is identical at 100 TB; the scratch
-  * location would be an object-store URI instead of java.io.tmpdir.
+  * location would be an object-store URI instead of a local temp dir.
   *
   * Determinism notes, per format:
   *  - CSV carries no types, so the read-back infers them; numeric
@@ -38,33 +39,26 @@ import org.apache.spark.sql.functions._
   */
 object RoundTrip {
 
-  /** Deterministic scratch dir per (format, sf-dir, JVM, session):
-    * repeated runs IN one session overwrite instead of accumulating temp
-    * dirs (Bench reps each query several times); the PID component keeps
-    * concurrent JVMs on the same sf-dir (a Bench and a Verify, two CI
-    * shards) from racing one directory, and the session-identity
-    * component does the same for two SparkSessions IN one JVM (the
-    * multi-session server deployment Connections anticipates) — without
-    * it, a second session's overwrite deletes part files an earlier
-    * session's already-planned read has listed. The key is an 8-byte
-    * SHA-256 prefix of the path, not String.hashCode, so two distinct
-    * dirs cannot silently share a scratch location.
+  /** Deterministic scratch dir per (format, sf-dir) under Spark's
+    * driver temp dir (`SparkFiles.getRootDirectory`), which `SparkEnv`
+    * deletes when the context stops, so the round trips leave nothing
+    * behind. Repeated runs in one context overwrite instead of
+    * accumulating dirs (Bench reps each query several times). The key is
+    * an 8-byte SHA-256 prefix of the path, not String.hashCode, so two
+    * distinct dirs cannot silently share a scratch location.
     *
     * Contract note: construction EXECUTES the write (the sink half of
     * the round trip is part of the query's semantics). Callers follow
     * the registry's construct-then-consume pattern (Verify, Bench, and
     * the specs all do); holding a DataFrame from an EARLIER construction
-    * across a later one for the same dir would read a replaced
-    * directory.
+    * across a later one for the same dir — in any session of the context
+    * — would read a replaced directory.
     */
-  private[graft] def scratch(spark: SparkSession, fmt: String,
-                             dir: String): String = {
+  private[graft] def scratch(fmt: String, dir: String): String = {
     val key = java.security.MessageDigest.getInstance("SHA-256")
       .digest(dir.getBytes("UTF-8")).take(8)
       .map(b => f"$b%02x").mkString
-    val pid = ProcessHandle.current().pid()
-    val sid = System.identityHashCode(spark) // same identity Connections.key uses
-    s"${sys.props("java.io.tmpdir")}/graft_roundtrip_${fmt}_${key}_p${pid}_s$sid"
+    s"${SparkFiles.getRootDirectory()}/graft_roundtrip_${fmt}_$key"
   }
 
   /** Accept whatever type inference assigned to a pre-rendered
@@ -86,7 +80,7 @@ object RoundTrip {
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"),
         date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_date"))
-    val path = scratch(spark, "csv", dir)
+    val path = scratch("csv", dir)
     src.write.mode("overwrite").option("header", "true").csv(path)
     Tables.readFiles(spark, s"$path/*.csv")
       .select(col("l_orderkey").cast("long").as("l_orderkey"),
@@ -106,7 +100,7 @@ object RoundTrip {
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
-    val path = scratch(spark, "json", dir)
+    val path = scratch("json", dir)
     src.write.mode("overwrite").json(path)
     Tables.readFiles(spark, s"$path/*.json")
       .select(col("event_id").cast("long").as("event_id"),
@@ -121,7 +115,7 @@ object RoundTrip {
     */
   def scanOrc(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.table(spark, dir, "part")
-    val path = scratch(spark, "orc", dir)
+    val path = scratch("orc", dir)
     src.write.mode("overwrite").orc(path)
     Tables.readFiles(spark, s"$path/*.orc")
   }

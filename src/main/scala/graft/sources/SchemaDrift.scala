@@ -244,7 +244,7 @@ object SchemaDrift {
     */
   def scanSchemaDrift(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.table(spark, dir, "orders")
-    val base = RoundTrip.scratch(spark, "drift", dir)
+    val base = RoundTrip.scratch("drift", dir)
     // plain gen1/gen2 subdir names, NOT `gen=1`: a key=value layout would
     // trigger partition-column inference on the read side and smuggle a
     // synthetic column into the drift demonstration
@@ -317,7 +317,7 @@ object SchemaDrift {
     // let one query's construction replace files under the other's
     // already-constructed DataFrame
     val src = Tables.table(spark, dir, "orders")
-    val base = RoundTrip.scratch(spark, "driftrep", dir)
+    val base = RoundTrip.scratch("driftrep", dir)
     val g1 = s"$base/gen1"
     val g2 = s"$base/gen2"
     src.filter(col("o_orderkey") % 2 === 0)
@@ -344,7 +344,7 @@ object SchemaDrift {
     */
   def scanDecimalDrift(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.table(spark, dir, "orders")
-    val base = RoundTrip.scratch(spark, "decdrift", dir)
+    val base = RoundTrip.scratch("decdrift", dir)
     val g1 = s"$base/gen1"
     val g2 = s"$base/gen2"
     src.filter(col("o_orderkey") % 2 === 0)
@@ -372,7 +372,7 @@ object SchemaDrift {
     */
   def scanPartitionDrift(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.table(spark, dir, "orders")
-    val base = RoundTrip.scratch(spark, "partdrift", dir)
+    val base = RoundTrip.scratch("partdrift", dir)
     val g1 = s"$base/gen1"
     val g2 = s"$base/gen2"
     src.filter(col("o_orderkey") % 2 === 0)

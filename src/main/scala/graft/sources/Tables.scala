@@ -38,15 +38,16 @@ object Tables {
     * CSV (with header, like the repo's Sources layer), JSON-lines, and
     * ORC from the glob's extension — parquet otherwise. Parquet schemas
     * come from the fingerprint-keyed cache of [[cachedParquet]].
+    *
+    * A TIMESTAMP(NANOS) column reads as raw nanosecond longs under the
+    * engine's `nanosAsLong` conf (`GraftSession.EngineConfs`); convert
+    * with `timestamp_micros(col DIV 1000)` where timestamp semantics are
+    * needed (see [[events]]). On a session without that conf Spark's
+    * default holds and such a file fails with `PARQUET_TYPE_ILLEGAL`.
+    * The caller's confs are read, never written.
     */
   def readFiles(spark: SparkSession, glob: String,
                 mergeSchema: Boolean = false): DataFrame = {
-    // Files with TIMESTAMP(NANOS) columns must still be readable (the
-    // reference streams whatever Arrow schema the file carries); Spark
-    // surfaces them as raw nanosecond longs under this conf. Convert with
-    // timestamp_micros(col DIV 1000) when timestamp semantics are needed
-    // (see Tables.events).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val lower = glob.toLowerCase
     if (lower.endsWith(".csv"))
       // CSV has no mergeSchema concept; header+inference matches Sources
@@ -141,9 +142,10 @@ object Tables {
   }
 
   /** The events table's `ts` physical type has drifted across testdata
-    * generations — TIMESTAMP(NANOS) (which Spark's vectorized reader rejects
-    * with [PARQUET_TYPE_ILLEGAL] unless read as a raw long) in some drops,
-    * plain TIMESTAMP(MICROS) (surfaced as TIMESTAMP_NTZ under Spark's
+    * generations — TIMESTAMP(NANOS) (read as a raw long under the
+    * engine's `nanosAsLong` conf, `GraftSession.EngineConfs`; a session
+    * without it fails with `PARQUET_TYPE_ILLEGAL`) in some drops, plain
+    * TIMESTAMP(MICROS) (surfaced as TIMESTAMP_NTZ under Spark's
     * inferTimestampNTZ default) in others. Normalize every variant to a
     * session-TZ TimestampType so downstream operators see one schema:
     *  - LongType (nanos-as-long): `timestamp_micros(ts DIV 1000)` — `DIV`,
@@ -154,7 +156,6 @@ object Tables {
     *    epoch-identity and matches DuckDB's naive read of the same file.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
     import org.apache.spark.sql.functions.{col, expr}
     df.schema("ts").dataType match {

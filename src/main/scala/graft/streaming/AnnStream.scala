@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -98,13 +99,8 @@ object AnnStream {
     * top-K neighbors of each against the standing index, then append
     * the batch's assigned vectors to the store. Public and
     * batch-id-keyed so foreachBatch wires it directly and specs can
-    * drive replay scenarios without a stream.
-    *
-    * Same CONCURRENCY CONTRACT as [[DedupStream.processBatch]]: the
-    * batch-width override rewrites session-global shuffle confs for
-    * the duration of the batch; nothing else may plan queries on this
-    * SparkSession while a batch is in flight (foreachBatch's
-    * sequential delivery satisfies this).
+    * drive replay scenarios without a stream. Runs at the session's
+    * own shuffle width and writes none of its confs.
     */
   def processBatch(batch: DataFrame, root: String, batchId: Long,
                    centroids: Array[Array[Double]],
@@ -114,18 +110,34 @@ object AnnStream {
     val s = batch.sparkSession
     val marker = Paths.get(root, "commits", batchId.toString)
     if (Files.exists(marker)) return // committed: redelivery is a no-op
-    val widthConf = "spark.sql.shuffle.partitions"
-    val initConf = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prevWidth = s.conf.getOption(widthConf)
-    val prevInit = s.conf.getOption(initConf)
-    val batchWidth = s.sparkContext.defaultParallelism.toString
-    s.conf.set(widthConf, batchWidth)
-    s.conf.set(initConf, batchWidth)
-    try processBatchInner(s, batch, root, batchId, centroids, nProbe)
-    finally {
-      prevWidth.fold(s.conf.unset(widthConf))(s.conf.set(widthConf, _))
-      prevInit.fold(s.conf.unset(initConf))(s.conf.set(initConf, _))
-    }
+    val gen = Seq("results", "cells")
+      .map(k => Paths.get(root, k, s"b=$batchId"))
+    gen.foreach(deleteRecursively) // crash residue from THIS id only
+    // a micro-batch source is not re-readable and the batch enters the
+    // plan twice (probe side, lake append) — pin it once
+    val vecs = batch.select(col("vec_id"), col("embedding")).persist()
+    // probes are materialized (batch × nProbe rows — tiny) so the
+    // index read can assemble the EXPLICIT matching cell files from
+    // the artifact's manifest: zero directory listings per batch at
+    // any index size (whole-tree partition discovery over the ×100
+    // artifact's ~1.5k dirs measured ~2× the flat scan per batch)
+    val probes = Ann.incrementalProbes(vecs, centroids, nProbe).persist()
+    try {
+      val cells = probes.select(col("cell"))
+        .collect().map(_.getInt(0)).distinct.sorted.toSeq
+      // seed-scoped search (the batch-operator contract — see the
+      // class doc), pruned to the probed cells; the NEWEST seed
+      // generation is the serving index (compact() installs
+      // b=seed<n> atomically by directory move)
+      val index = Ann.readCellsPruned(s, newestSeed(root), cells)
+      Ann.incrementalRank(probes, index)
+        .write.parquet(s"$root/results/b=$batchId")
+      vecs.select(col("vec_id"), col("embedding"),
+          Ann.cellAssignExact(col("embedding"), centroids).as("cell"))
+        .write.parquet(s"$root/cells/b=$batchId")
+      Files.createDirectories(marker.getParent)
+      Files.createFile(marker) // the commit point — atomic, created last
+    } finally { probes.unpersist(); vecs.unpersist() }
     if (autoCompactFraction > 0 &&
         rawBytes(root) > autoCompactFraction * servingBytes(root).max(1L))
       compactFlat(s, root)
@@ -214,40 +226,6 @@ object AnnStream {
       .write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, Paths.get(root, "cells", s"b=fold$n"))
     StoreProtocol.supersede(root, n, flat.map(_.getAbsolutePath))
-  }
-
-  private def processBatchInner(s: SparkSession, batch: DataFrame,
-      root: String, batchId: Long, centroids: Array[Array[Double]],
-      nProbe: Int): Unit = {
-    val marker = Paths.get(root, "commits", batchId.toString)
-    val gen = Seq("results", "cells")
-      .map(k => Paths.get(root, k, s"b=$batchId"))
-    gen.foreach(deleteRecursively) // crash residue from THIS id only
-    // a micro-batch source is not re-readable and the batch enters the
-    // plan twice (probe side, lake append) — pin it once
-    val vecs = batch.select(col("vec_id"), col("embedding")).persist()
-    // probes are materialized (batch × nProbe rows — tiny) so the
-    // index read can assemble the EXPLICIT matching cell files from
-    // the artifact's manifest: zero directory listings per batch at
-    // any index size (whole-tree partition discovery over the ×100
-    // artifact's ~1.5k dirs measured ~2× the flat scan per batch)
-    val probes = Ann.incrementalProbes(vecs, centroids, nProbe).persist()
-    try {
-      val cells = probes.select(col("cell"))
-        .collect().map(_.getInt(0)).distinct.sorted.toSeq
-      // seed-scoped search (the batch-operator contract — see the
-      // class doc), pruned to the probed cells; the NEWEST seed
-      // generation is the serving index (compact() installs
-      // b=seed<n> atomically by directory move)
-      val index = Ann.readCellsPruned(s, newestSeed(root), cells)
-      Ann.incrementalRank(probes, index)
-        .write.parquet(s"$root/results/b=$batchId")
-      vecs.select(col("vec_id"), col("embedding"),
-          Ann.cellAssignExact(col("embedding"), centroids).as("cell"))
-        .write.parquet(s"$root/cells/b=$batchId")
-      Files.createDirectories(marker.getParent)
-      Files.createFile(marker) // the commit point — atomic, created last
-    } finally { probes.unpersist(); vecs.unpersist() }
   }
 
   /** Compact the store: fold the serving seed and every flat batch
@@ -343,21 +321,23 @@ object AnnStream {
     */
   def foldBoundedDelta(s: SparkSession, dir: String, chunks: Int = 3,
                        nProbe: Int = Ann.IvfProbe): DataFrame = {
-    // idempotent-memoized per corpus dir (the DedupStream.foldCache
-    // device): a repeat invocation is the redelivery no-op path — one
-    // parquet read of the committed results
-    val root = foldCache.computeIfAbsent((dir, chunks, nProbe), _ =>
-      runFold(s, dir, chunks, nProbe))
+    // idempotent-memoized per corpus dir and context (the
+    // DedupStream.foldCache device): a repeat invocation is the
+    // redelivery no-op path — one parquet read of the committed results
+    val root = foldCache.computeIfAbsent(
+      (SparkFiles.getRootDirectory(), dir, chunks, nProbe), _ =>
+        runFold(s, dir, chunks, nProbe))
     s.read.parquet(s"$root/results/*")
       .select(col("q_id"), col("rank"), col("cand_id"), col("cos_r"),
         col("cell"))
   }
   private val foldCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), String]()
+    (String, String, Int, Int), String]()
 
   private def runFold(s: SparkSession, dir: String, chunks: Int,
                       nProbe: Int): String = {
-    val base = Files.createTempDirectory("graft-ann-stream")
+    val base = Files.createTempDirectory(
+      Paths.get(SparkFiles.getRootDirectory()), "graft-ann-stream")
     val root = base.resolve("store").toString
     val in = base.resolve("in")
     val ckpt = base.resolve("ckpt").toString

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -124,16 +125,8 @@ object DedupStream {
     * itself when over — so an unattended ingest never degrades to the
     * flat-scan floor. Pass `autoCompactFraction = 0` to disable (the
     * measurement harnesses do, to keep ladder rungs comparable).
-    *
-    * CONCURRENCY CONTRACT: the batch-width override below temporarily
-    * rewrites session-GLOBAL shuffle confs; nothing else may plan
-    * queries on this SparkSession while a batch is in flight, or those
-    * queries would plan at batch width (results unaffected — width is
-    * a performance lever — but a corpus-sized query at batch width
-    * schedules too few tasks). foreachBatch's sequential driver-side
-    * delivery satisfies the contract; a caller sharing the session
-    * with concurrent work should hand this stream its own
-    * `SparkSession.newSession()` (separate conf, shared context).
+    * Runs at the session's own shuffle width and writes none of its
+    * confs.
     */
   def processBatch(batch: DataFrame, root: String, batchId: Long,
                    threshold: Double = 0.8,
@@ -142,73 +135,6 @@ object DedupStream {
     val s = batch.sparkSession
     val marker = Paths.get(root, "commits", batchId.toString)
     if (Files.exists(marker)) return // committed: redelivery is a no-op
-    // Ingest jobs run at BATCH-derived shuffle width, not the corpus
-    // width: a session autoTuned for the standing corpus (the right
-    // width for seed builds and corpus-sized queries) makes every
-    // batch-sized job here schedule hundreds of near-empty tasks — at
-    // the x100 ladder that per-job overhead, not IO, was the residual
-    // per-batch cost after both index scans were bucket-pruned. Width
-    // never affects results; the session confs are restored on exit
-    // (foreachBatch drives batches sequentially on the driver, so the
-    // temporary override cannot leak across concurrent queries here).
-    val widthConf = "spark.sql.shuffle.partitions"
-    val initConf = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prevWidth = s.conf.getOption(widthConf)
-    val prevInit = s.conf.getOption(initConf)
-    val batchWidth = s.sparkContext.defaultParallelism.toString
-    s.conf.set(widthConf, batchWidth)
-    s.conf.set(initConf, batchWidth)
-    try processBatchInner(s, batch, root, batchId, threshold)
-    finally {
-      prevWidth.fold(s.conf.unset(widthConf))(s.conf.set(widthConf, _))
-      prevInit.fold(s.conf.unset(initConf))(s.conf.set(initConf, _))
-    }
-    if (autoCompactFraction > 0 &&
-        flatBytes(root) > autoCompactFraction * seedBytes(root).max(1L))
-      compact(s, root)
-  }
-
-  /** On-disk bytes of the flat per-batch generations (b=<id>) under
-    * bands/ + docs/ — the accumulation [[compact]] resets. Walk cost
-    * tracks the flat data itself (batch-sized dirs, reset by every
-    * compaction), never the standing index.
-    */
-  private def flatBytes(root: String): Long =
-    Seq("bands", "docs").map(k => generationDirs(root, k)
-      .filterNot(_.getName.startsWith("b=seed"))
-      .map(StoreProtocol.dirBytes).sum).sum
-
-  /** On-disk bytes of the partitioned seed generations, CACHED per
-    * seed-dir-name set: the seed is immutable between compactions, so
-    * re-walking its thousands of bucket files on every batch commit
-    * (the ×100 store: ~13k files across both kinds) would put an
-    * index-sized listing on the per-batch hot path — the exact cost
-    * shape the manifest work removed from the read side. The cache key
-    * is the seed generation NAME list PLUS each dir's mtime (one cheap
-    * dir listing + one stat per seed dir): the name list changes when
-    * a compaction installs a new seed, and the mtime changes when
-    * [[seed]] overwrites `b=seed` in place under the same name — so a
-    * re-seeded root never serves a stale byte count to the
-    * auto-compaction threshold.
-    */
-  private def seedBytes(root: String): Long = {
-    val seedDirs = Seq("bands", "docs").flatMap(k =>
-      generationDirs(root, k).filter(_.getName.startsWith("b=seed")))
-    val key = seedDirs.map(d => s"${d.getAbsolutePath}@${d.lastModified}")
-    val cached = seedBytesCache.get(root)
-    if (cached != null && cached._1 == key) cached._2
-    else {
-      val bytes = seedDirs.map(StoreProtocol.dirBytes).sum
-      seedBytesCache.put(root, (key, bytes))
-      bytes
-    }
-  }
-  private val seedBytesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Long)]()
-
-  private def processBatchInner(s: SparkSession, batch: DataFrame,
-      root: String, batchId: Long, threshold: Double): Unit = {
-    val marker = Paths.get(root, "commits", batchId.toString)
     val gen = Seq("verdicts", "bands", "docs")
       .map(k => Paths.get(root, k, s"b=$batchId"))
     gen.foreach(deleteRecursively) // crash residue from THIS id only
@@ -265,7 +191,48 @@ object DedupStream {
       if (cand != null) cand.unpersist()
       bands.unpersist(); docs.unpersist()
     }
+    if (autoCompactFraction > 0 &&
+        flatBytes(root) > autoCompactFraction * seedBytes(root).max(1L))
+      compact(s, root)
   }
+
+  /** On-disk bytes of the flat per-batch generations (b=<id>) under
+    * bands/ + docs/ — the accumulation [[compact]] resets. Walk cost
+    * tracks the flat data itself (batch-sized dirs, reset by every
+    * compaction), never the standing index.
+    */
+  private def flatBytes(root: String): Long =
+    Seq("bands", "docs").map(k => generationDirs(root, k)
+      .filterNot(_.getName.startsWith("b=seed"))
+      .map(StoreProtocol.dirBytes).sum).sum
+
+  /** On-disk bytes of the partitioned seed generations, CACHED per
+    * seed-dir-name set: the seed is immutable between compactions, so
+    * re-walking its thousands of bucket files on every batch commit
+    * (the ×100 store: ~13k files across both kinds) would put an
+    * index-sized listing on the per-batch hot path — the exact cost
+    * shape the manifest work removed from the read side. The cache key
+    * is the seed generation NAME list PLUS each dir's mtime (one cheap
+    * dir listing + one stat per seed dir): the name list changes when
+    * a compaction installs a new seed, and the mtime changes when
+    * [[seed]] overwrites `b=seed` in place under the same name — so a
+    * re-seeded root never serves a stale byte count to the
+    * auto-compaction threshold.
+    */
+  private def seedBytes(root: String): Long = {
+    val seedDirs = Seq("bands", "docs").flatMap(k =>
+      generationDirs(root, k).filter(_.getName.startsWith("b=seed")))
+    val key = seedDirs.map(d => s"${d.getAbsolutePath}@${d.lastModified}")
+    val cached = seedBytesCache.get(root)
+    if (cached != null && cached._1 == key) cached._2
+    else {
+      val bytes = seedDirs.map(StoreProtocol.dirBytes).sum
+      seedBytesCache.put(root, (key, bytes))
+      bytes
+    }
+  }
+  private val seedBytesCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[String], Long)]()
 
   /** Compact the store: fold EVERY band/doc generation (seed + all
     * committed flat batch gens) into ONE fresh bucket-partitioned seed
@@ -390,19 +357,23 @@ object DedupStream {
     // fold over an already-committed store is ONE parquet read — the
     // production semantics of re-submitting a completed ingest. Dir
     // immutability is the same operating assumption as every
-    // dir-keyed cache here (fit caches, index artifacts).
-    val root = foldCache.computeIfAbsent((dir, chunks, threshold), _ =>
-      runFold(s, dir, chunks, threshold))
+    // dir-keyed cache here (fit caches, index artifacts). The store
+    // lives under the context's driver temp dir, which Spark deletes
+    // when the context stops, so that dir is part of the key.
+    val root = foldCache.computeIfAbsent(
+      (SparkFiles.getRootDirectory(), dir, chunks, threshold), _ =>
+        runFold(s, dir, chunks, threshold))
     s.read.parquet(s"$root/verdicts/*")
       .select(col("doc_id"), col("dup_of"), col("best_jaccard"),
         col("keep"))
   }
   private val foldCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Double), String]()
+    (String, String, Int, Double), String]()
 
   private def runFold(s: SparkSession, dir: String, chunks: Int,
                       threshold: Double): String = {
-    val base = Files.createTempDirectory("graft-dedup-stream")
+    val base = Files.createTempDirectory(
+      Paths.get(SparkFiles.getRootDirectory()), "graft-dedup-stream")
     val root = base.resolve("store").toString
     val in = base.resolve("in")
     val ckpt = base.resolve("ckpt").toString

@@ -22,7 +22,9 @@ object EventStreams {
 
   /** Explicit schema for readStream (streaming sources can't infer); `ts`
     * here is the raw nanosecond long variant — [[readEventStream]] swaps in
-    * the actual on-disk type (see Tables.events for the drift story).
+    * the actual on-disk type (see Tables.events for the drift story; the
+    * long variant needs the engine's `nanosAsLong` conf,
+    * `GraftSession.EngineConfs`).
     */
   val rawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", LongType),
@@ -49,7 +51,6 @@ object EventStreams {
     * then resolves their actual type).
     */
   def readEventStream(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Probe-failure classification is by ERROR CONDITION, not message
     // text (a message substring is Spark-version-fragile and can both
     // miss a real merge failure and misfire on an unrelated error):

@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Operators build the engine's expressions as Columns, so they run on a
   * session that has neither the extensions nor `GraftFunctions.register`,
   * give the same rows there, and leave its function registry empty.
+  * TIMESTAMP(NANOS) Parquet reads under the engine's confs and fails on a
+  * session without them.
   */
 class BareSessionSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -62,5 +64,59 @@ class BareSessionSpec extends AnyFunSuite {
     }
     val bound = names.filter(n => reg.functionExists(FunctionIdentifier(n)))
     assert(bound.isEmpty, s"operators bound into the bare registry: $bound")
+  }
+
+  test("TIMESTAMP(NANOS) files: events gives exact micros and read_files " +
+       "raw nanos under the engine confs; without nanosAsLong the read " +
+       "fails with PARQUET_TYPE_ILLEGAL") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.functions.{col, unix_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    import graft.sources.Tables
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    val nanos = Seq(1700000000123456789L, 1700000060000000999L,
+      1700003600999999000L)
+    val tmp = java.nio.file.Files.createTempDirectory("nanos_events")
+    val d = tmp.toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = new Configuration()
+    val w = ExampleParquetWriter.builder(
+        HadoopOutputFile.fromPath(new Path(s"$d/events.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try nanos.zipWithIndex.foreach { case (n, i) =>
+      w.write(groups.newGroup().append("event_id", i.toLong).append("ts", n))
+    } finally w.close()
+    val events = Tables.events(spark, d)
+    assert(events.schema("ts").dataType === TimestampType)
+    assert(events.orderBy("event_id").select(unix_micros(col("ts")))
+      .collect().map(_.getLong(0)).toSeq === nanos.map(_ / 1000))
+    val raw = Tables.readFiles(spark, s"$d/events.parquet")
+    assert(raw.schema("ts").dataType === LongType)
+    assert(raw.orderBy("event_id").select("ts").collect().map(_.getLong(0))
+      .toSeq === nanos)
+    // Spark's default: a session without the engine confs rejects the type
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    def condition(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+        case st: org.apache.spark.SparkThrowable =>
+          st.getCondition == "PARQUET_TYPE_ILLEGAL"
+        case _ => false
+      }
+    for (read <- Seq[() => Any](
+           () => Tables.readFiles(plain, s"$d/events.parquet").collect(),
+           () => Tables.events(plain, d).collect())) {
+      val e = intercept[Exception](read())
+      assert(condition(e), e)
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }

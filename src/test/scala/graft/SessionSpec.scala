@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** One session configuration and one function table: the engine's SQL
-  * functions resolve the same whichever seam installed them, and every
-  * main builds its session through `graft.engine.GraftSession`.
+  * functions resolve the same whichever seam installed them, every main
+  * builds its session through `graft.engine.GraftSession`, and a call
+  * into the engine leaves the caller's confs and temp dir as it found
+  * them.
   */
 class SessionSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -170,5 +172,113 @@ class SessionSpec extends AnyFunSuite {
       .toDF("id"), Seq(col("id") % 7), Seq(col("id").desc), 2)
     assert(top.count() === 14L)
     assert(factory.experimental.extraStrategies === strategies)
+  }
+
+  test("no conf writes in src/main outside GraftSession and the four " +
+       "lines of Partitioning.autoTune") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val Write = """conf\.(set|unset|setConf|setConfString)\(""".r
+    val writes = for {
+      p <- Files.walk(root).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toList
+      if p != root.resolve("graft/engine/GraftSession.scala")
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if Write.findFirstIn(line).isDefined
+    } yield (p, i)
+    val partitioning = root.resolve("graft/engine/Partitioning.scala")
+    val lines = Files.readAllLines(partitioning).asScala
+    val start = lines.indexWhere(_.contains("def autoTune("))
+    val end = lines.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start, "Partitioning.autoTune not found")
+    val (tune, other) = writes.partition { case (p, i) =>
+      p == partitioning && i > start && i < end
+    }
+    val offenders = other.map { case (p, i) => s"$p:${i + 1}" }
+    assert(offenders.isEmpty, "configure sessions in GraftSession and " +
+      "pass widths as plan-level partition counts")
+    assert(tune.size === 4, tune)
+  }
+
+  test("registry queries, the event stream source and one batch of each " +
+       "ingest stream leave the caller's confs as they found them") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Ann
+    import graft.sources.Tables
+    import graft.streaming.{AnnStream, DedupStream, EventStreams}
+    val dir = "/root/testdata/sf0.001"
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    val before = s.conf.getAll
+    val tmp = Files.createTempDirectory("conf_snapshot")
+    SparkSession.setActiveSession(s)
+    try {
+      for (q <- Seq("grouping_sets", "window_auto_events", "bucket_join",
+                    "knn_graph_bucketed"))
+        assert(SparkEntry.queries(q)(s, dir).count() > 0L, q)
+      val eventsDir = Files.createDirectories(tmp.resolve("events"))
+      Files.copy(Paths.get(dir, "events.parquet"),
+        eventsDir.resolve("events.parquet"))
+      assert(EventStreams.readEventStream(s, eventsDir.toString).isStreaming)
+      val docs = Tables.table(s, dir, "documents")
+        .select(col("doc_id"), col("text"))
+      val dedupRoot = tmp.resolve("dedup").toString
+      DedupStream.processBatch(docs.filter(col("doc_id") % 10 === 1),
+        dedupRoot, 0L)
+      assert(s.read.parquet(s"$dedupRoot/verdicts/b=0").count() > 0L)
+      val centroids = Ann.fitCentroids(s, dir,
+        Ann.ivfCellsFor(Ann.corpusCount(s, dir)))
+      val annRoot = tmp.resolve("ann").toString
+      AnnStream.seed(s, dir, annRoot)
+      val vecs = Tables.table(s, dir, "embeddings")
+        .filter(col("vec_id") % Ann.IncDeltaMod === Ann.IncDeltaRem)
+        .select(col("vec_id"), col("embedding"))
+      AnnStream.processBatch(vecs, annRoot, 0L, centroids)
+      assert(s.read.parquet(s"$annRoot/results/b=0").count() > 0L)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+    val after = s.conf.getAll
+    val changed = (before.keySet ++ after.keySet)
+      .filter(k => before.get(k) != after.get(k))
+      .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
+    assert(changed.isEmpty, changed.toSeq.sorted)
+  }
+
+  test("stream folds and round trips keep their scratch under Spark's " +
+       "driver temp dir, not directly under java.io.tmpdir") {
+    import org.apache.spark.SparkFiles
+    import graft.operators.{Ann, Dedup}
+    import graft.streaming.{AnnStream, DedupStream}
+    val dir = "/root/testdata/sf0.001"
+    // the per-corpus index artifacts are fixed paths that are
+    // overwritten rather than accumulated: build them before the
+    // snapshot
+    Ann.ivfIndexPath(spark, dir)
+    Dedup.minhashIndexPath(spark, dir)
+    def graftNames(d: String): Set[String] = {
+      val ls = Files.list(Paths.get(d))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft")).toSet
+      finally ls.close()
+    }
+    val tmp = sys.props("java.io.tmpdir")
+    val before = graftNames(tmp)
+    // chunks = 2: no other spec folds with it, so both memos miss
+    assert(AnnStream.foldBoundedDelta(spark, dir, chunks = 2).count() > 0L)
+    assert(DedupStream.foldBoundedDelta(spark, dir, chunks = 2)
+      .count() > 0L)
+    for (q <- Seq("scan_csv_roundtrip", "scan_schema_drift"))
+      assert(SparkEntry.queries(q)(spark, dir).count() > 0L, q)
+    val added = graftNames(tmp) -- before
+    assert(added.isEmpty, added)
+    val scratch = graftNames(SparkFiles.getRootDirectory())
+    for (prefix <- Seq("graft-ann-stream", "graft-dedup-stream",
+                       "graft_roundtrip_csv_", "graft_roundtrip_drift_"))
+      assert(scratch.exists(_.startsWith(prefix)), s"$prefix: $scratch")
   }
 }
